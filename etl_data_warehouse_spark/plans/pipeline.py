@@ -43,7 +43,7 @@ def run_pipeline(
     # --- extract + transform (lazy; three independent source subtrees) ---
     orders = load_table(spark, "orders", sf_dir)
     lineitem = load_table(spark, "lineitem", sf_dir)
-    records_extracted = orders.count() + lineitem.count()
+    records_extracted = orders.select().union(lineitem.select()).count()
 
     # --- dimensions (broadcast-scale), then facts ---
     # dim_date's key is semantic (yyyymmdd) — stable by construction.
@@ -88,22 +88,31 @@ def run_pipeline(
         )
 
     # --- quality gate (reference: data_quality_check.py; dbt tests) ---
+    # One aggregation answers all four checks: per order_key, its row
+    # count, negative amounts and customer keys missing from the dim.
     fact = spark.read.parquet(os.path.join(warehouse_dir, "fact_orders"))
-    dim_c = spark.read.parquet(os.path.join(warehouse_dir, "dim_customers"))
+    dim_keys = (
+        spark.read.parquet(os.path.join(warehouse_dir, "dim_customers"))
+        .select(F.col("customer_key").alias("_dim_key"))
+        .distinct()
+    )
+    orphan = F.col("customer_key").isNotNull() & F.col("_dim_key").isNull()
+    g = (
+        fact.join(F.broadcast(dim_keys),
+                  F.col("customer_key") == F.col("_dim_key"), "left")
+        .groupBy("order_key")
+        .agg(F.count(F.lit(1)).alias("n"),
+             F.count_if(F.col("total_amount") < 0).alias("neg"),
+             F.count_if(orphan).alias("orphan"))
+        .agg(*[F.sum(c).alias(c) for c in ("n", "neg", "orphan")],
+             F.count_if(F.col("n") > 1).alias("dup"))
+        .first()
+    )
     checks = {
-        "fact_nonempty": fact.count() > 0,
-        "no_negative_amounts": fact.filter(F.col("total_amount") < 0).count()
-        == 0,
-        "no_orphan_customers": quality.orphan_count(
-            fact.filter(F.col("customer_key").isNotNull()),
-            dim_c,
-            "customer_key",
-            "customer_key",
-        ).count()
-        == 0,
-        "no_duplicate_orders": quality.duplicate_keys(fact, "order_key")
-        .count()
-        == 0,
+        "fact_nonempty": bool(g["n"]),
+        "no_negative_amounts": not g["neg"],
+        "no_orphan_customers": not g["orphan"],
+        "no_duplicate_orders": not g["dup"],
     }
 
     # --- audit log append (reference: warehouse_loader.py:219-254) ---

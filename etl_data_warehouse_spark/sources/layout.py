@@ -29,11 +29,11 @@ then executor-local sorts — never a single-partition ORDER BY.
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .sinks import _atomic_swap_write
 
 
 def minmax_scaled(col: str, min_col: str, max_col: str, bits: int) -> Column:
@@ -171,14 +171,7 @@ def compact_small_files(
         )
     else:
         packed = df.coalesce(n_after)
-    # Materialize before the swap: packed lazily reads the old files.
-    packed = packed.localCheckpoint()
-    tmp = f"{path}.__tmp_{uuid.uuid4().hex[:8]}"
-    packed.write.mode("overwrite").parquet(tmp)
-    old = f"{path}.__old_{uuid.uuid4().hex[:8]}"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+    _atomic_swap_write(packed, path)
     after = [
         f
         for f in os.listdir(path)

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import token_count
 from ..operators.sampling import hash_bucket
+from .sinks import _atomic_swap_write
 
 _ORDER_SPACE = 1 << 31  # shuffle-position space; collisions broken by doc_id
 
@@ -93,7 +94,7 @@ def write_training_shards(
         docs, n_shards=n_shards, budget=budget, salt=salt, key=key
     )
     spark = docs.sparkSession
-    _atomic_swap_write_partitioned(packed, path)
+    _atomic_swap_write(packed, path, partition_by="shard")
     return shard_manifest(spark, path)
 
 
@@ -108,22 +109,6 @@ def shard_manifest(spark: SparkSession, path: str) -> DataFrame:
         )
         .orderBy("shard")
     )
-
-
-def _atomic_swap_write_partitioned(df: DataFrame, path: str) -> None:
-    """partitionBy('shard') variant of sinks._atomic_swap_write."""
-    import os
-    import shutil
-    import uuid
-
-    tmp = f"{path}.__tmp_{uuid.uuid4().hex[:8]}"
-    df.write.mode("overwrite").partitionBy("shard").parquet(tmp)
-    old = f"{path}.__old_{uuid.uuid4().hex[:8]}"
-    if os.path.exists(path):
-        os.rename(path, old)
-    os.rename(tmp, path)
-    if os.path.exists(old):
-        shutil.rmtree(old)
 
 
 _COMMIT_MARKER = "_COMMITTED"

@@ -6,13 +6,31 @@ The reference's warehouse loads are Postgres ``INSERT ... ON CONFLICT
 single-call upsert, so (SURVEY.md §4.2):
 
 - ``merge_upsert``  ≡ DO UPDATE: keep incoming row for conflicting keys,
-  existing row otherwise → anti-join + unionByName, then ATOMIC swap
-  (write to a temp dir, rename) so a failed job never half-overwrites.
+  existing row otherwise, then ATOMIC swap (write to a temp dir, rename)
+  so a failed job never half-overwrites.
 - ``append_dedup``  ≡ DO NOTHING: drop incoming rows whose key already
   exists, then append.
 
 Both are idempotent — re-running the same batch leaves the table
 unchanged (the reference re-runs daily over overlapping extracts).
+
+One pass per sink: each builds its merged frame once and writes it
+once, and the counts it returns come from that write. Rows carry their
+origin in a ``__sink_tag`` column; a ``pyspark.sql.Observation`` counts
+the tags as rows stream into the writer, and the rows the merge discards
+(replaced existing rows, unchanged SCD2 versions) are filtered out after
+it. ``_atomic_swap_write`` finishes the temp directory before renaming,
+so a frame reading the old table needs no ``localCheckpoint``. Two stay,
+where a frame is read after its source changed: ``merge_upsert_stable``'s
+keyed frame (callers join facts to it after the swap) and the in-place
+dynamic partition overwrites, whose target is also their source.
+
+Crash recovery: a crash between the swap's two renames leaves no table
+at ``path``, only ``path.__old_*``. Sinks open their target through
+``_open_table``, which restores it and sweeps stale ``__tmp_*``/``__old_*``
+siblings, so the next run sees the previous table, not none (which would
+make ``merge_upsert_stable`` renumber every surrogate key). One writer
+per table is assumed.
 
 100 TB posture: this rewrite-the-table merge is correct but O(table);
 for big facts partition the table by a date column and overwrite only
@@ -23,24 +41,65 @@ with MERGE (Delta/Iceberg). The date-partitioned variant is
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
+_TAG = "__sink_tag"
 
-def _atomic_swap_write(df: DataFrame, path: str) -> None:
+
+def _recover(path: str) -> None:
+    """Undo an interrupted ``_atomic_swap_write``: restore
+    ``path.__old_*`` if ``path`` is missing, delete stale siblings."""
+    base = glob.escape(os.path.normpath(path))
+    olds = sorted(glob.glob(base + ".__old_*"), key=os.path.getmtime)
+    if olds and not os.path.exists(path):
+        os.rename(olds.pop(), path)
+    for stale in glob.glob(base + ".__tmp_*") + olds:
+        shutil.rmtree(stale)
+
+
+def _open_table(spark: SparkSession, path: str) -> DataFrame | None:
+    """The Parquet table at ``path`` after crash recovery, or None."""
+    _recover(path)
+    return spark.read.parquet(path) if os.path.exists(path) else None
+
+
+def _atomic_swap_write(
+    df: DataFrame, path: str, partition_by: str | None = None
+) -> None:
     """Write df to a temp sibling dir, then swap into place."""
+    path = os.path.normpath(path)
+    _recover(path)
     tmp = f"{path}.__tmp_{uuid.uuid4().hex[:8]}"
-    df.write.mode("overwrite").parquet(tmp)
+    writer = df.write.mode("overwrite")
+    if partition_by:
+        writer = writer.partitionBy(partition_by)
+    writer.parquet(tmp)
     old = f"{path}.__old_{uuid.uuid4().hex[:8]}"
     if os.path.exists(path):
         os.rename(path, old)
     os.rename(tmp, path)
     if os.path.exists(old):
         shutil.rmtree(old)
+
+
+def _observe(df: DataFrame, *tags: str) -> tuple[DataFrame, Observation]:
+    """Count the rows of each tag in ``tags`` during the next action on
+    the returned frame (``obs.get`` after it): no Spark job of its own."""
+    obs = Observation()
+    counts = [F.count_if(F.col(_TAG) == t).alias(t) for t in tags]
+    return df.observe(obs, *counts), obs
+
+
+def _untag(df: DataFrame, *drop: str) -> DataFrame:
+    """``df`` without the rows tagged in ``drop`` and without the tag."""
+    keep = F.col(_TAG).isNull() | ~F.col(_TAG).isin(*drop)
+    return df.filter(keep).drop(_TAG) if drop else df.drop(_TAG)
 
 
 def merge_upsert(
@@ -52,24 +111,18 @@ def merge_upsert(
     load_dimension result dict (warehouse_loader.py:24-83).
     """
     incoming = incoming.dropDuplicates(keys)
-    if not os.path.exists(path):
-        n = incoming.count()
-        _atomic_swap_write(incoming, path)
-        return {"inserted": n, "updated": 0}
-    existing = spark.read.parquet(path)
-    kept_existing = existing.join(
-        incoming.select(*keys).distinct(), keys, "left_anti"
-    )
-    n_incoming = incoming.count()
-    n_existing = existing.count()
-    n_kept = kept_existing.count()
-    # Materialize BEFORE the swap: merged lazily reads the old files.
-    merged = incoming.unionByName(kept_existing).localCheckpoint()
-    _atomic_swap_write(merged, path)
-    return {
-        "inserted": n_incoming - (n_existing - n_kept),
-        "updated": n_existing - n_kept,
-    }
+    merged = incoming.withColumn(_TAG, F.lit("incoming"))
+    existing = _open_table(spark, path)
+    if existing is not None:
+        # existing rows whose key the batch hits are tagged, counted as
+        # updates, then dropped; the rest stay untagged (incoming's keys
+        # are unique already)
+        hit = incoming.select(*keys).withColumn(_TAG, F.lit("updated"))
+        merged = merged.unionByName(existing.join(hit, keys, "left"))
+    merged, obs = _observe(merged, "incoming", "updated")
+    _atomic_swap_write(_untag(merged, "updated"), path)
+    n = obs.get
+    return {"inserted": n["incoming"] - n["updated"], "updated": n["updated"]}
 
 
 def append_dedup(
@@ -78,11 +131,12 @@ def append_dedup(
     """INSERT ... DO NOTHING twin: append only new keys; returns count
     (reference: warehouse_loader.py:90-143)."""
     incoming = incoming.dropDuplicates(keys)
-    if not os.path.exists(path):
-        n = incoming.count()
-        _atomic_swap_write(incoming, path)
-        return n
-    existing_keys = spark.read.parquet(path).select(*keys).distinct()
+    existing = _open_table(spark, path)
+    if existing is None:
+        rows, obs = _observe(incoming.withColumn(_TAG, F.lit("new")), "new")
+        _atomic_swap_write(_untag(rows), path)
+        return obs.get["new"]
+    existing_keys = existing.select(*keys).distinct()
     # the anti-join reorders columns key-first; restore the incoming
     # order so every file in the sink carries ONE column order (parquet
     # directory schema inference picks an arbitrary footer — mixed
@@ -168,13 +222,28 @@ def merge_upsert_stable(
     keep their surrogate key) before the idempotent merge. Returns
     (counts, keyed_df) — the keyed frame is what fact FK resolution must
     join against so facts reference the keys actually stored."""
-    existing = spark.read.parquet(path) if os.path.exists(path) else None
+    existing = _open_table(spark, path)
     keyed = assign_stable_keys(existing, incoming, business_keys, key_col)
-    # Materialize: the merge below both counts and rewrites the same
-    # files the lazy plan would re-read mid-swap.
+    # Materialize: callers read keyed after the merge below has swapped
+    # out the table it was keyed against.
     keyed = keyed.localCheckpoint()
     counts = merge_upsert(spark, keyed, path, business_keys)
     return counts, keyed
+
+
+def _overwrite_partitions(
+    df: DataFrame, path: str, partition_col: str
+) -> None:
+    """Overwrite in place only the ``partition_col`` values in ``df``."""
+    spark = df.sparkSession
+    prev_mode = spark.conf.get(
+        "spark.sql.sources.partitionOverwriteMode", "static"
+    )
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    try:
+        df.write.mode("overwrite").partitionBy(partition_col).parquet(path)
+    finally:
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
 
 
 def merge_upsert_partitioned(
@@ -187,30 +256,88 @@ def merge_upsert_partitioned(
     """Scale path: merge only the date partitions present in incoming
     (dynamic partition overwrite) — O(touched partitions), not O(table).
     Returns the number of rows written."""
-    incoming = incoming.dropDuplicates(keys)
-    prev_mode = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static"
+    merged = incoming.dropDuplicates(keys)
+    existing = _open_table(spark, path)
+    if existing is not None:
+        parts = [
+            r[0] for r in merged.select(partition_col).distinct().collect()
+        ]
+        kept = existing.filter(F.col(partition_col).isin(parts)).join(
+            merged.select(*keys), keys, "left_anti"
+        )
+        # the write overwrites the partitions kept was read from
+        merged = merged.unionByName(kept).localCheckpoint()
+    merged, obs = _observe(merged.withColumn(_TAG, F.lit("rows")), "rows")
+    _overwrite_partitions(_untag(merged), path, partition_col)
+    return obs.get["rows"]
+
+
+def _scd2_merge(
+    incoming: DataFrame,
+    current: DataFrame | None,
+    business_key: str,
+    tracked_cols: list[str],
+    effective_date: str,
+) -> DataFrame:
+    """The SCD2 classifier both SCD2 sinks share: the next state of the
+    current versions (``current`` is None on a first load), tagged
+    ``inserted``/``changed`` (incoming rows stamped as version 1 / the
+    current version + 1), ``unchanged`` (same tracked-attribute hash;
+    the caller drops them after counting), ``closed`` (current rows a
+    changed key supersedes) or null (current rows left alone)."""
+    incoming = incoming.dropDuplicates([business_key])
+    eff = F.lit(effective_date).cast("date")
+
+    def stamped(version, tag):
+        return [
+            eff.alias("valid_from"),
+            F.lit(None).cast("date").alias("valid_to"),
+            F.lit(True).alias("is_current"),
+            version.cast("int").alias("version"),
+            tag.alias(_TAG),
+        ]
+
+    if current is None:
+        return incoming.select("*", *stamped(F.lit(1), F.lit("inserted")))
+    change_hash = F.md5(
+        F.concat_ws(
+            "\x1f", *[F.coalesce(F.col(c).cast("string"), F.lit("\x00"))
+                      for c in tracked_cols]
+        )
     )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        if os.path.exists(path):
-            parts = [
-                r[0] for r in incoming.select(partition_col).distinct().collect()
-            ]
-            existing = spark.read.parquet(path).filter(
-                F.col(partition_col).isin(parts)
+    joined = incoming.withColumn("__new_hash", change_hash).alias("i").join(
+        F.broadcast(
+            current.select(
+                F.col(business_key).alias("__bk"),
+                change_hash.alias("__cur_hash"),
+                F.col("version").alias("__cur_version"),
             )
-            kept = existing.join(
-                incoming.select(*keys).distinct(), keys, "left_anti"
-            )
-            merged = incoming.unionByName(kept).localCheckpoint()
-        else:
-            merged = incoming
-        n = merged.count()
-        merged.write.mode("overwrite").partitionBy(partition_col).parquet(path)
-        return n
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+        ),
+        F.col(f"i.{business_key}") == F.col("__bk"),
+        "left",
+    )
+    kind = (
+        F.when(F.col("__bk").isNull(), "inserted")
+        .when(F.col("__new_hash") != F.col("__cur_hash"), "changed")
+        .otherwise("unchanged")
+    )
+    versions = joined.select(
+        *[F.col(f"i.{c}").alias(c) for c in incoming.columns],
+        *stamped(F.coalesce(F.col("__cur_version") + 1, F.lit(1)), kind),
+    )
+    changed_keys = versions.filter(F.col(_TAG) == "changed").select(
+        business_key
+    )
+    closed = (
+        current.join(changed_keys, business_key, "left_semi")
+        .withColumn("valid_to", eff)
+        .withColumn("is_current", F.lit(False))
+        .withColumn(_TAG, F.lit("closed"))
+    )
+    untouched = current.join(changed_keys, business_key, "left_anti")
+    return versions.unionByName(closed).unionByName(
+        untouched, allowMissingColumns=True
+    )
 
 
 def scd2_upsert(
@@ -236,83 +363,20 @@ def scd2_upsert(
     (dimension-scale → broadcast), one union rewrite via atomic swap;
     use date-partitioned history tables for very large dims.
     """
-    incoming = incoming.dropDuplicates([business_key])
-    change_hash = F.md5(
-        F.concat_ws(
-            "\x1f", *[F.coalesce(F.col(c).cast("string"), F.lit("\x00"))
-                      for c in tracked_cols]
+    existing = _open_table(spark, path)
+    current = None
+    if existing is not None:
+        current = existing.filter(F.col("is_current"))
+    out = _scd2_merge(
+        incoming, current, business_key, tracked_cols, effective_date
+    )
+    if existing is not None:
+        out = existing.filter(~F.col("is_current")).unionByName(
+            out, allowMissingColumns=True
         )
-    )
-    stamped = (
-        incoming.withColumn("valid_from", F.lit(effective_date).cast("date"))
-        .withColumn("valid_to", F.lit(None).cast("date"))
-        .withColumn("is_current", F.lit(True))
-        .withColumn("version", F.lit(1).cast("int"))
-    )
-    if not os.path.exists(path):
-        n = stamped.count()
-        _atomic_swap_write(stamped, path)
-        return {"inserted": n, "changed": 0, "unchanged": 0}
-
-    existing = spark.read.parquet(path)
-    current = existing.filter(F.col("is_current"))
-    history = existing.filter(~F.col("is_current"))
-
-    inc = incoming.withColumn("__new_hash", change_hash)
-    cur = current.withColumn("__cur_hash", change_hash)
-    joined = inc.alias("i").join(
-        F.broadcast(
-            cur.select(
-                F.col(business_key).alias("__bk"),
-                "__cur_hash",
-                F.col("version").alias("__cur_version"),
-            )
-        ),
-        F.col(f"i.{business_key}") == F.col("__bk"),
-        "left",
-    )
-    brand_new = joined.filter(F.col("__bk").isNull())
-    changed = joined.filter(
-        F.col("__bk").isNotNull() & (F.col("__new_hash") != F.col("__cur_hash"))
-    )
-    n_new = brand_new.count()
-    n_changed = changed.count()
-    n_unchanged = inc.count() - n_new - n_changed
-
-    changed_keys = changed.select(F.col("__bk").alias(business_key))
-    closed = (
-        current.join(changed_keys, business_key, "left_semi")
-        .withColumn("valid_to", F.lit(effective_date).cast("date"))
-        .withColumn("is_current", F.lit(False))
-    )
-    untouched_current = current.join(changed_keys, business_key, "left_anti")
-
-    inc_cols = incoming.columns
-    new_versions = changed.select(
-        *[F.col(f"i.{c}").alias(c) for c in inc_cols],
-        F.lit(effective_date).cast("date").alias("valid_from"),
-        F.lit(None).cast("date").alias("valid_to"),
-        F.lit(True).alias("is_current"),
-        (F.col("__cur_version") + 1).cast("int").alias("version"),
-    )
-    first_versions = brand_new.select(
-        *[F.col(f"i.{c}").alias(c) for c in inc_cols],
-        F.lit(effective_date).cast("date").alias("valid_from"),
-        F.lit(None).cast("date").alias("valid_to"),
-        F.lit(True).alias("is_current"),
-        F.lit(1).cast("int").alias("version"),
-    )
-    out_cols = existing.columns
-    merged = (
-        history.select(*out_cols)
-        .unionByName(closed.select(*out_cols))
-        .unionByName(untouched_current.select(*out_cols))
-        .unionByName(new_versions.select(*out_cols))
-        .unionByName(first_versions.select(*out_cols))
-        .localCheckpoint()
-    )
-    _atomic_swap_write(merged, path)
-    return {"inserted": n_new, "changed": n_changed, "unchanged": n_unchanged}
+    out, obs = _observe(out, "inserted", "changed", "unchanged")
+    _atomic_swap_write(_untag(out, "unchanged"), path)
+    return obs.get
 
 
 def scd2_upsert_partitioned(
@@ -336,105 +400,41 @@ def scd2_upsert_partitioned(
     and the as-of read path (``scd2_snapshot``) partition-prunes to
     'current' + months after the snapshot date.
     """
-    incoming = incoming.dropDuplicates([business_key])
     part_of_eff = "closed_" + effective_date[:7]
-    change_hash = F.md5(
-        F.concat_ws(
-            "\x1f", *[F.coalesce(F.col(c).cast("string"), F.lit("\x00"))
-                      for c in tracked_cols]
+    table = _open_table(spark, path)
+    current = None
+    if table is not None:
+        # partition-pruned: only the 'current' directory is scanned
+        current = table.filter(F.col("scd_part") == "current").drop(
+            "scd_part"
         )
+    out = _scd2_merge(
+        incoming, current, business_key, tracked_cols, effective_date
     )
-    stamped = (
-        incoming.withColumn("valid_from", F.lit(effective_date).cast("date"))
-        .withColumn("valid_to", F.lit(None).cast("date"))
-        .withColumn("is_current", F.lit(True))
-        .withColumn("version", F.lit(1).cast("int"))
-        .withColumn("scd_part", F.lit("current"))
+    data_cols = [
+        c for c in (out if table is None else table).columns
+        if c not in ("scd_part", _TAG)
+    ]
+    out = out.withColumn(
+        "scd_part",
+        F.when(F.col(_TAG) == "closed", part_of_eff).otherwise("current"),
     )
-    if not os.path.exists(path):
-        n = stamped.count()
-        stamped.write.partitionBy("scd_part").mode("overwrite").parquet(path)
-        return {"inserted": n, "changed": 0, "unchanged": 0}
-
-    table = spark.read.parquet(path)
-    # partition-pruned: only the 'current' directory is scanned
-    current = table.filter(F.col("scd_part") == "current").drop("scd_part")
-
-    inc = incoming.withColumn("__new_hash", change_hash)
-    cur = current.withColumn("__cur_hash", change_hash)
-    joined = inc.alias("i").join(
-        F.broadcast(
-            cur.select(
-                F.col(business_key).alias("__bk"),
-                "__cur_hash",
-                F.col("version").alias("__cur_version"),
+    if table is not None:
+        # prior closures of this run's month (partition-pruned scan),
+        # rewritten only when this run closes rows into that month
+        out = out.unionByName(
+            table.filter(F.col("scd_part") == part_of_eff).withColumn(
+                _TAG, F.lit("prior")
             )
-        ),
-        F.col(f"i.{business_key}") == F.col("__bk"),
-        "left",
-    )
-    brand_new = joined.filter(F.col("__bk").isNull())
-    changed = joined.filter(
-        F.col("__bk").isNotNull() & (F.col("__new_hash") != F.col("__cur_hash"))
-    )
-    n_new = brand_new.count()
-    n_changed = changed.count()
-    n_unchanged = inc.count() - n_new - n_changed
-
-    changed_keys = changed.select(F.col("__bk").alias(business_key))
-    closed = (
-        current.join(changed_keys, business_key, "left_semi")
-        .withColumn("valid_to", F.lit(effective_date).cast("date"))
-        .withColumn("is_current", F.lit(False))
-    )
-    untouched_current = current.join(changed_keys, business_key, "left_anti")
-
-    inc_cols = incoming.columns
-    new_versions = changed.select(
-        *[F.col(f"i.{c}").alias(c) for c in inc_cols],
-        F.lit(effective_date).cast("date").alias("valid_from"),
-        F.lit(None).cast("date").alias("valid_to"),
-        F.lit(True).alias("is_current"),
-        (F.col("__cur_version") + 1).cast("int").alias("version"),
-    )
-    first_versions = brand_new.select(
-        *[F.col(f"i.{c}").alias(c) for c in inc_cols],
-        F.lit(effective_date).cast("date").alias("valid_from"),
-        F.lit(None).cast("date").alias("valid_to"),
-        F.lit(True).alias("is_current"),
-        F.lit(1).cast("int").alias("version"),
-    )
-    data_cols = [c for c in table.columns if c != "scd_part"]
-    new_current = (
-        untouched_current.select(*data_cols)
-        .unionByName(new_versions.select(*data_cols))
-        .unionByName(first_versions.select(*data_cols))
-        .withColumn("scd_part", F.lit("current"))
-    )
-    out = new_current
-    if n_changed > 0:
-        # rewrite exactly one closed month: prior closures of that month
-        # (partition-pruned scan) + this run's closures
-        month_existing = table.filter(
-            F.col("scd_part") == part_of_eff
-        ).drop("scd_part")
-        month_rows = (
-            month_existing.select(*data_cols)
-            .unionByName(closed.select(*data_cols))
-            .withColumn("scd_part", F.lit(part_of_eff))
         )
-        out = new_current.unionByName(month_rows)
-
+    out, obs = _observe(out, "inserted", "changed", "unchanged")
     out = out.localCheckpoint()  # sever self-read-overwrite lineage
-    prev_mode = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static"
+    counts = obs.get
+    drop = ("unchanged",) if counts["changed"] else ("unchanged", "prior")
+    _overwrite_partitions(
+        _untag(out, *drop).select(*data_cols, "scd_part"), path, "scd_part"
     )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        out.write.partitionBy("scd_part").mode("overwrite").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-    return {"inserted": n_new, "changed": n_changed, "unchanged": n_unchanged}
+    return counts
 
 
 def scd2_snapshot(spark: SparkSession, path: str, as_of: str) -> DataFrame:

@@ -15,7 +15,10 @@ streaming equivalent of the persisted high-watermark batch
 
 100 TB posture: the only shuffle is the windowed groupBy keyed on
 (window, product) — partial aggregation happens map-side; watermark
-bounds state; sink writes touch only the partitions in the microbatch.
+bounds state. The sink is an unpartitioned ``merge_upsert``, so each
+non-empty microbatch rewrites the whole ``daily_sales`` table (O(table)
+per batch); an empty microbatch, such as the no-data batch that closes
+an AvailableNow drain, writes nothing.
 """
 
 from __future__ import annotations
@@ -86,6 +89,8 @@ def start_daily_sales_stream(
     agg = daily_sales_aggregate(read_order_stream(spark, input_dir))
 
     def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return  # merging nothing would still rewrite the table
         merge_upsert(
             batch_df.sparkSession,
             batch_df,

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import pathlib
 import subprocess
 import sys
 import tempfile
@@ -37,8 +38,12 @@ def sf_dir():
 # split the test FILES across N subprocess workers (separate CWDs so
 # derby metastore_db / spark-warehouse never collide; per-worker
 # SPARK_GRAFT_CPUS so N local-mode JVMs don't oversubscribe the box)
-# and aggregate their exit codes. Any targeted invocation (-k, -m,
-# specific files/nodeids) runs in-process exactly as before, and
+# and aggregate their exit codes. The invocation's other options reach
+# every shard (relative paths made absolute, rootdir pinned so nodeids
+# and --deselect match the in-process run). Any targeted invocation
+# (-k, -m, specific files/nodeids), a cache-driven one (--lf, --ff,
+# --nf, --sw) and an informational one (--collect-only, --fixtures,
+# --markers, --version, --help) runs in-process exactly as before, and
 # SPARK_GRAFT_TEST_SERIAL=1 opts out entirely.
 
 _SHARD_ENV = "SPARK_GRAFT_TEST_SHARD"
@@ -78,10 +83,14 @@ _FILE_WEIGHTS = {
 }
 
 
-def _shard_files(tests_dir: str, n: int) -> list[list[str]]:
+def _shard_files(config, tests_dir: str, n: int) -> list[list[str]]:
+    # a file passed by name escapes --ignore, so apply it here
     files = sorted(
         f for f in os.listdir(tests_dir)
         if f.startswith("test_") and f.endswith(".py")
+        and not config.hook.pytest_ignore_collect(
+            collection_path=pathlib.Path(tests_dir, f), config=config
+        )
     )
     weighted = sorted(
         files, key=lambda f: -_FILE_WEIGHTS.get(f, 20)
@@ -95,17 +104,47 @@ def _shard_files(tests_dir: str, n: int) -> list[list[str]]:
     return [s for s in shards if s]
 
 
+# Options that select by keyword/marker, read the cache of an earlier
+# run, or only report: sharding cannot honour them, so they run
+# in-process.
+_IN_PROCESS_OPTIONS = (
+    "keyword", "markexpr", "lf", "failedfirst", "newfirst", "stepwise",
+    "stepwise_skip", "collectonly", "showfixtures",
+    "show_fixtures_per_test", "markers", "version", "help",
+)
+
+
+def _forwarded_args(config) -> list[str]:
+    """The invocation's own arguments minus its test paths, with every
+    relative path made absolute (a shard runs in its own cwd) and the
+    rootdir pinned (so nodeids, hence --deselect values, match)."""
+    inv = config.invocation_params
+    positional = set(config.args)
+    out: list[str] = []
+    for a in inv.args:
+        if a in positional:
+            continue
+        opt, eq, val = a.partition("=") if a.startswith("-") else ("", "", a)
+        nodeid = "--deselect" in (opt, out[-1] if out else "")
+        path = os.path.join(str(inv.dir), val)
+        if val and not nodeid and not os.path.isabs(val) \
+                and os.path.exists(path):
+            a = opt + eq + os.path.abspath(path)
+        out.append(a)
+    if not any(a.startswith("--rootdir") for a in out):
+        out.append(f"--rootdir={config.rootpath}")
+    if not config.option.verbose:
+        out.append("-q")
+    return out
+
+
 def pytest_cmdline_main(config):
     if os.environ.get(_SHARD_ENV) or os.environ.get(
         "SPARK_GRAFT_TEST_SERIAL"
     ):
         return None
     opt = config.option
-    if (
-        getattr(opt, "keyword", "")
-        or getattr(opt, "markexpr", "")
-        or getattr(opt, "collectonly", False)
-    ):
+    if any(getattr(opt, o, None) for o in _IN_PROCESS_OPTIONS):
         return None
     tests_dir = os.path.dirname(os.path.abspath(__file__))
     repo_root = os.path.dirname(tests_dir)
@@ -116,7 +155,10 @@ def pytest_cmdline_main(config):
         return None  # targeted invocation: run in-process
 
     t0 = time.time()
-    shards = _shard_files(tests_dir, _N_SHARDS)
+    forwarded = _forwarded_args(config)
+    shards = _shard_files(config, tests_dir, _N_SHARDS)
+    if not shards:
+        return None  # everything ignored: let pytest report it
     cpus_total = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     worker_cpus = str(max(2, cpus_total // len(shards)))
     print(
@@ -133,10 +175,8 @@ def pytest_cmdline_main(config):
             os.environ,
             **{_SHARD_ENV: str(i), "SPARK_GRAFT_CPUS": worker_cpus},
         )
-        cmd = [sys.executable, "-m", "pytest", *files, "-q",
+        cmd = [sys.executable, "-m", "pytest", *files, *forwarded,
                "-p", "no:cacheprovider"]
-        if getattr(opt, "exitfirst", False) or getattr(opt, "maxfail", 0):
-            cmd.append("-x")
         out = open(os.path.join(cwd, "pytest.out"), "w+")
         procs.append(
             (
@@ -160,7 +200,7 @@ def pytest_cmdline_main(config):
         text = out.read()
         out.close()
         tail = [ln for ln in text.splitlines() if ln.strip()][-15:]
-        if rc != 0:
+        if rc not in (0, 5):  # 5: every test of the shard deselected
             failed += 1
             print(f"[shard {i}] FAILED rc={rc}; tail:", flush=True)
             print("\n".join(tail), flush=True)

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import datetime
 import os
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -89,6 +90,137 @@ class TestMergeUpsert:
         assert len(out) == 3
         assert out[2]["v"] == 20.0
         assert out[1]["v"] == 1.0  # untouched partition survived
+
+
+def _jobs(spark, fn):
+    """(fn(), number of Spark jobs it ran), counted by job group."""
+    sc = spark.sparkContext
+    group = f"sink-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _kv(spark, rows):
+    return spark.createDataFrame(rows, "k long, v string")
+
+
+_BASE = [(1, "a"), (2, "b"), (3, "c"), (4, "d")]
+# case -> (table before the call or None, incoming batch)
+_UPSERT_CASES = {
+    "first_load": (None, [(1, "a"), (2, "b")]),
+    "insert_only": (_BASE, [(5, "e"), (6, "f")]),
+    "update_only": (_BASE, [(2, "B"), (3, "C")]),
+    "mixed": (_BASE, [(3, "C"), (7, "g")]),
+    "empty_incoming": (_BASE, []),
+    "duplicate_keys": (_BASE, [(2, "B"), (8, "h"), (2, "B"), (8, "h")]),
+}
+
+
+class TestSinkCounts:
+    """merge_upsert's counts come from its one write (Observation);
+    each case is checked against counts and rows derived in Python."""
+
+    @pytest.mark.parametrize("case", sorted(_UPSERT_CASES))
+    def test_counts_and_rows(self, spark, tmp_path, case):
+        base, batch = _UPSERT_CASES[case]
+        path = str(tmp_path / "t")
+        if base is not None:
+            merge_upsert(spark, _kv(spark, base), path, ["k"])
+        incoming = dict(batch)
+        before = dict(base or [])
+        updated = len(incoming.keys() & before.keys())
+        got = merge_upsert(spark, _kv(spark, batch), path, ["k"])
+        assert got == {"inserted": len(incoming) - updated, "updated": updated}
+        rows = sorted(map(tuple, spark.read.parquet(path).collect()))
+        assert rows == sorted({**before, **incoming}.items())
+        assert spark.read.parquet(path).columns == ["k", "v"]
+
+    @pytest.mark.parametrize("lo, hi", [(500, 1500), (0, 0)],
+                             ids=["overlapping", "empty"])
+    def test_existing_table_is_three_jobs(self, spark, tmp_path, lo, hi):
+        """Before the counts came from the write, these calls ran 11
+        and 10 jobs: three count()s, a localCheckpoint and the write.
+        Ranges have known sizes, so the planner broadcasts the batch's
+        keys; a batch without size statistics (a Python list) adds the
+        stages of a sort-merge join."""
+        def rows(lo, hi):
+            return spark.range(lo, hi).select(
+                F.col("id").alias("k"), F.col("id").cast("string").alias("v")
+            )
+
+        path = str(tmp_path / "t")
+        merge_upsert(spark, rows(0, 1000), path, ["k"])
+        counts, n = _jobs(
+            spark, lambda: merge_upsert(spark, rows(lo, hi), path, ["k"])
+        )
+        overlap = max(0, min(hi, 1000) - lo)
+        assert counts == {"inserted": hi - lo - overlap, "updated": overlap}
+        assert n <= 3
+
+
+class TestSwapCrashRecovery:
+    """A crash inside _atomic_swap_write must not cost the table: the
+    next run restores it, so surrogate keys and fact FKs survive."""
+
+    DAYS = [
+        ([(10, "ann"), (20, "bob"), (30, "cat")], [(1, 10), (2, 20)]),
+        ([(5, "eve"), (20, "bob2"), (40, "dee")], [(3, 5), (4, 40)]),
+    ]
+
+    def _load(self, spark, wh, day):
+        dims, orders = self.DAYS[day]
+        counts, keyed = merge_upsert_stable(
+            spark, _dim(spark, dims), os.path.join(wh, "dim"),
+            ["customer_id"], "customer_key",
+        )
+        fact = spark.createDataFrame(
+            orders, "order_id long, customer_id long"
+        ).join(keyed.select("customer_id", "customer_key"), "customer_id")
+        merge_upsert(spark, fact, os.path.join(wh, "fact"), ["order_id"])
+        return counts
+
+    def _state(self, spark, wh):
+        return [
+            sorted(map(tuple, spark.read.parquet(os.path.join(wh, t))
+                       .select(*cols).collect()))
+            for t, cols in [
+                ("dim", ["customer_id", "customer_key", "name"]),
+                ("fact", ["order_id", "customer_id", "customer_key"]),
+            ]
+        ]
+
+    # the swap renames dim -> dim.__old_*, then dim.__tmp_* -> dim
+    @pytest.mark.parametrize(
+        "side, prefix", [(1, "dim.__old_"), (0, "dim.__tmp_")],
+        ids=["table_to_old", "tmp_to_table"],
+    )
+    def test_rerun_after_failed_rename(
+        self, spark, tmp_path, monkeypatch, side, prefix
+    ):
+        wh = str(tmp_path / "wh")
+        self._load(spark, wh, 0)
+        self._load(spark, wh, 1)
+        state = self._state(spark, wh)
+        real_rename = os.rename
+
+        def rename(*args):
+            if os.path.basename(args[side]).startswith(prefix):
+                raise OSError("injected crash")
+            real_rename(*args)
+
+        with monkeypatch.context() as m:
+            m.setattr(os, "rename", rename)
+            with pytest.raises(OSError, match="injected"):
+                self._load(spark, wh, 1)
+        counts = self._load(spark, wh, 1)  # the re-run of the crashed day
+        assert counts == {"inserted": 0, "updated": 3}
+        assert self._state(spark, wh) == state
+        assert sorted(os.listdir(wh)) == ["dim", "fact"]
 
 
 def _dim(spark, rows):
