@@ -187,9 +187,10 @@ def lm_perplexity_score(
     # localCheckpoint: the model is vocabulary-sized (the sanctioned
     # small-frame case) and has TWO consumers — the broadcast join and
     # the smoothing-denominator aggregate; without it each consumer
-    # re-runs the training-slice scan+explode (PLAN_AUDIT: 3 explodes,
-    # now 1). denom = N + V + 1 == sum(cnt) + count(*) + 1 over the
-    # model, so consts no longer needs train_tok at all.
+    # re-runs the training-slice scan+explode (3 explodes, now 1:
+    # `git show b4f93cf:PLAN_AUDIT.json`). denom = N + V + 1 ==
+    # sum(cnt) + count(*) + 1 over the model, so consts no longer needs
+    # train_tok at all.
     model = (
         train_tok.groupBy("token")
         .agg(F.count("*").alias("cnt"))

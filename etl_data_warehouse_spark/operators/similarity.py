@@ -618,11 +618,12 @@ def hyperplane_lsh_neardup(
     at cosine 0.998 (p=0.98) band p ≈ 0.616, miss = (1-0.616)^16 ≈
     2e-7 (still w.h.p.); at exactly 0.99 (p=0.955) miss ≈ 0.2%. The
     independent-bit background model (16·N²/2^bits) predicts a 256×
-    cut; MEASURED at N=1M, dim=16 (BENCH_XL.json): 1.27B candidates
-    (16-bit) → 84M (24-bit) — a 15× cut, not 256×, because in low
-    dimension the per-plane bits are correlated and inflate every
-    collision rate (~24M of the 84M are true planted-twin band hits,
-    the floor both shapes share). The cut grows toward the model as
+    cut; MEASURED at N=1M, dim=16 (`git show b4f93cf:BENCH_XL.json`):
+    1.27B candidates (16-bit) → 84M (24-bit) — a 15× cut, not 256×,
+    because in low dimension the per-plane bits are correlated and
+    inflate every collision rate (~24M of the 84M are true
+    planted-twin band hits, the floor both shapes share). The cut
+    grows toward the model as
     dim rises; either way 24-bit bands took the 1M-row operator from
     infeasible (the 1.2B-row bucket join IS the work) to 78s measured
     end-to-end. ``srp_candidate_count`` probes the candidate volume of

@@ -238,7 +238,8 @@ def run_day2_ingest(
     ``semantic_arrow`` routes the semantic arm through the Arrow scale
     twins (numpy cell assignment / gram-matrix refine / Arrow PQ
     encode) — the 10^6-row execution mode (day-2 semantic stage
-    116s -> single-digit seconds at 1M+100K, BENCH_XL). It is an
+    116s -> single-digit seconds at 1M+100K,
+    `git show b4f93cf:BENCH_XL.json`). It is an
     execution knob, NOT pipeline config: both paths compute the same
     verdicts except on exact-threshold float ties (the documented
     fold-vs-BLAS caveat, operators/similarity.py), so the fold default

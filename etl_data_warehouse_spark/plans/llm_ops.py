@@ -3195,7 +3195,8 @@ def q119_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the candidate set only — at 100 TB that is bounded by the
     posting lists of the query terms.
 
-    Plan shape (the PLAN_AUDIT lesson): the first cut tokenized the
+    Plan shape (the executed-plan audit lesson,
+    `git show b4f93cf:PLAN_AUDIT.json`): the first cut tokenized the
     corpus FOUR times (tf, dl, and two copies of the filtered tf). Now
     dl rides the tf rows as a doc-partitioned window sum and the corpus
     totals come from a projection-only second scan (token_count, no
@@ -4327,7 +4328,8 @@ def q151_embedding_gramian(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums commute, so the result is order-independent and hash-exact —
     a float Gramian never is (the q106 fixed-point rule). The
     bit-identical numpy scale path (gramian_arrow, V^T V per Arrow
-    batch) is pinned equal in TestGramian and benched in BENCH_XL.
+    batch) is pinned equal in TestGramian and was benched at 1M rows
+    (`git show b4f93cf:BENCH_XL.json`).
 
     dim is probed from the data (one-row collect) so the same entry
     runs on the 64-dim driver testdata and the 16-dim generated XL

@@ -79,65 +79,65 @@ ORACLES.update(web_curation.ORACLES)
 # number) — the literal below IS that tool's output, pinned by
 # tests/test_window_plan.py against artifacts <= _WINDOW_PLANNED_FROM
 # (so the driver's post-close artifact can never redden the pin).
-# Round 13 leads with q164 (new, never checked) and the 12 r9-stale
-# entries (q104-q108, q110-q113, q148-q150), then the 37 oldest r10
-# entries. Entries outside the
+# Planned from CORRECTNESS_r14.json: every entry has been checked, so
+# the window leads with the 13 r10-stale entries (q116-q122,
+# q151-q156), then the 37 oldest r11 entries. Entries outside the
 # window remain proven every
 # round by tests/test_oracle_parity.py's full-registry sf0.001 sweep;
 # only driver-row freshness rotates. After adding a new query, re-run
 # `python tools/window_plan.py --block` and paste the result here.
-_WINDOW_PLANNED_FROM = 12
+_WINDOW_PLANNED_FROM = 14
 _WINDOW_FIRST = [
-    "q164_containment_keep_longest_indexed",  # last green: never checked
-    "q104_lm_perplexity",  # last green: r9
-    "q105_doc_chunking",  # last green: r9
-    "q106_entity_pagerank",  # last green: r9
-    "q107_token_budget_plan",  # last green: r9
-    "q108_retrieval_context",  # last green: r9
-    "q110_embedding_outliers",  # last green: r9
-    "q111_source_dup_profile",  # last green: r9
-    "q112_cross_source_overlap",  # last green: r9
-    "q113_apply_mixture_sample",  # last green: r9
-    "q148_domain_curation_report",  # last green: r9
-    "q149_domain_cap_filter",  # last green: r9
-    "q150_boilerplate_strip",  # last green: r9
-    "q01_monthly_revenue",  # last green: r10
-    "q02_customer_tier",  # last green: r10
-    "q03_product_performance",  # last green: r10
-    "q04_retention_cohort",  # last green: r10
-    "q05_daily_anomaly",  # last green: r10
-    "q06_dim_date",  # last green: r10
-    "q07_dim_products",  # last green: r10
-    "q08_fact_daily_sales",  # last green: r10
-    "q09_fact_orders",  # last green: r10
-    "q10_clean_lineitem",  # last green: r10
-    "q11_referential_integrity",  # last green: r10
-    "q12_duplicate_checks",  # last green: r10
-    "q13_null_rates",  # last green: r10
-    "q14_quality_assertions",  # last green: r10
-    "q15_top_orders_per_month",  # last green: r10
-    "q16_status_pivot",  # last green: r10
-    "q17_sales_rollup",  # last green: r10
-    "q18_sales_cube",  # last green: r10
-    "q19_date_coverage",  # last green: r10
-    "q20_text_stats",  # last green: r10
-    "q21_lang_id",  # last green: r10
-    "q22_exact_dedup",  # last green: r10
-    "q23_ngram_jaccard_dedup",  # last green: r10
-    "q34_set_ops",  # last green: r10
-    "q35_incremental_extract",  # last green: r10
-    "q39_revenue_by_region",  # last green: r10
-    "q40_supplier_performance",  # last green: r10
-    "q42_fact_lineitem",  # last green: r10
-    "q47_zorder_layout",  # last green: r10
-    "q48_pii_scrub",  # last green: r10
-    "q49_repetition_stats",  # last green: r10
-    "q50_tfidf_topk",  # last green: r10
-    "q51_source_mixture",  # last green: r10
-    "q56_salted_revenue",  # last green: r10
-    "q109_int8_quantize",  # last green: r10
-    "q114_epoch_upsample",  # last green: r10
-    "q115_negative_sampling",  # last green: r10
+    "q116_budget_trim",  # last green: r10
+    "q117_temperature_mixture",  # last green: r10
+    "q118_bpe_pair_counts",  # last green: r10
+    "q119_bm25_topk",  # last green: r10
+    "q120_hybrid_rrf",  # last green: r10
+    "q121_curriculum_schedule",  # last green: r10
+    "q122_dsir_weights",  # last green: r10
+    "q151_embedding_gramian",  # last green: r10
+    "q152_gramian_merge",  # last green: r10
+    "q153_domain_language_mix",  # last green: r10
+    "q154_gap_fill_forward",  # last green: r10
+    "q155_gap_fill_interpolate",  # last green: r10
+    "q156_robust_anomaly_stats",  # last green: r10
+    "q24_minhash_lsh_dedup",  # last green: r11
+    "q25_simhash_pairs",  # last green: r11
+    "q26_embedding_topk",  # last green: r11
+    "q27_embedding_neardup",  # last green: r11
+    "q28_ivf_topk",  # last green: r11
+    "q29_doc_fingerprint",  # last green: r11
+    "q30_sessionization",  # last green: r11
+    "q31_event_rollup",  # last green: r11
+    "q32_event_props_extract",  # last green: r11
+    "q33_multimodal_features",  # last green: r11
+    "q36_event_funnel",  # last green: r11
+    "q37_asof_join",  # last green: r11
+    "q38_range_join",  # last green: r11
+    "q41_hyperplane_lsh_neardup",  # last green: r11
+    "q43_train_test_split",  # last green: r11
+    "q44_vocab_topk",  # last green: r11
+    "q45_sequence_packing",  # last green: r11
+    "q46_contamination",  # last green: r11
+    "q52_corpus_funnel",  # last green: r11
+    "q53_order_value_quantiles",  # last green: r11
+    "q55_embedding_stats",  # last green: r11
+    "q59_dedup_clusters",  # last green: r11
+    "q88_weighted_sample",  # last green: r11
+    "q92_topk_sketch_rollup",  # last green: r11
+    "q93_frame_sample",  # last green: r11
+    "q94_ivfadc_exact",  # last green: r11
+    "q95_dup_span_removal",  # last green: r11
+    "q96_snapshot_diff",  # last green: r11
+    "q97_dedup_keep_longest",  # last green: r11
+    "q98_json_flatten",  # last green: r11
+    "q123_fim_transform",  # last green: r11
+    "q124_tokenizer_fertility",  # last green: r11
+    "q125_span_corruption",  # last green: r11
+    "q126_hard_negatives",  # last green: r11
+    "q127_behavior_sequences",  # last green: r11
+    "q128_eval_decontamination",  # last green: r11
+    "q129_sharded_curriculum",  # last green: r11
 ]
 _rotated = {k: QUERIES[k] for k in _WINDOW_FIRST if k in QUERIES}
 for _k, _v in QUERIES.items():

@@ -833,7 +833,8 @@ def q42_fact_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no final sort (the q10 rule): the oracle compare is
     # order-insensitive and a global rangepartitioning sort of the full
     # line-grain fact is pure waste at scale — r13 dropped it (plan:
-    # Sort+Exchange removed above the dim joins, plans/r13/q42_*).
+    # Sort+Exchange removed above the dim joins,
+    # `git show b4f93cf:plans/r13/q42_fact_lineitem_after.txt`).
     return build_fact_lineitem(spark, sf_dir)
 
 

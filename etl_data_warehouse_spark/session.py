@@ -1,8 +1,8 @@
 """SparkSession factory tuned for this engine.
 
-Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default 32 threads,
-single JVM); the configuration is chosen so the same logical plans scale
-to a real multi-executor cluster:
+Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default: the usable
+CPU count, single JVM); the configuration is chosen so the same logical
+plans scale to a real multi-executor cluster:
 
 - AQE on (runtime partition coalescing, skew-join splitting) so the
   shuffle-partition count adapts between sf0.001 tests and 100 TB runs.
@@ -25,7 +25,9 @@ def get_spark(
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get(
+        "SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0)))
+    )
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus)
     builder = (

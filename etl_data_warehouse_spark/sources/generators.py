@@ -214,50 +214,3 @@ def generate_documents(
         F.when(is_dup, "synthetic_dup").otherwise("synthetic").alias("source"),
         F.length(text).cast("long").alias("n_chars"),
     )
-
-
-def generate_events(
-    spark: SparkSession,
-    n: int,
-    seed: int = 42,
-    n_users: int | None = None,
-) -> DataFrame:
-    """Deterministic synthetic event stream matching the events table
-    shape (event_id, ts, user_id, event_type, value, props) — for
-    benchmarking the event-table operators (sessionization, funnels,
-    behavior sequences) at row counts the ~60K-row testdata stream
-    cannot exercise. All xxhash64-derived Catalyst expressions: a user's
-    events spread over a 30-day window, ~20% null props, four event
-    types. ts is a plain micro TIMESTAMP (load_table's NANOS handling
-    only engages on the driver-written testdata files)."""
-    n_users = n_users or max(1, n // 20)
-
-    def h(salt: int):
-        return F.xxhash64("id", F.lit(seed + salt))
-
-    types = F.array(
-        F.lit("view"), F.lit("click"), F.lit("purchase"), F.lit("scroll")
-    )
-    return spark.range(n).select(
-        F.col("id").alias("event_id"),
-        F.timestamp_millis(
-            F.lit(1_700_000_000_000)
-            + F.pmod(h(1), F.lit(30 * 86_400_000))
-        ).alias("ts"),
-        F.pmod(h(2), F.lit(n_users)).alias("user_id"),
-        F.element_at(
-            types, (F.pmod(h(3), F.lit(4)) + 1).cast("int")
-        ).alias("event_type"),
-        (F.pmod(h(4), F.lit(100_000)).cast("double") / 100.0).alias(
-            "value"
-        ),
-        F.when(F.pmod(h(5), F.lit(5)) == 0, F.lit(None).cast("string"))
-        .otherwise(
-            F.concat(
-                F.lit('{"k":'),
-                F.pmod(h(6), F.lit(100)).cast("string"),
-                F.lit("}"),
-            )
-        )
-        .alias("props"),
-    )

@@ -9,7 +9,7 @@ import time
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
 from etl_data_warehouse_spark.session import get_spark
 
@@ -159,7 +159,9 @@ def pytest_cmdline_main(config):
     shards = _shard_files(config, tests_dir, _N_SHARDS)
     if not shards:
         return None  # everything ignored: let pytest report it
-    cpus_total = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus_total = int(
+        os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
+    )
     worker_cpus = str(max(2, cpus_total // len(shards)))
     print(
         f"[conftest] whole-suite run: auto-sharding {sum(map(len, shards))} "
@@ -171,10 +173,13 @@ def pytest_cmdline_main(config):
     procs = []
     for i, files in enumerate(shards):
         cwd = tempfile.mkdtemp(prefix=f"pytest_shard{i}_")
-        env = dict(
-            os.environ,
-            **{_SHARD_ENV: str(i), "SPARK_GRAFT_CPUS": worker_cpus},
-        )
+        # four default 8g driver heaps outgrow a 16 GB host
+        env = {
+            "SPARK_GRAFT_DRIVER_MEM": "2g",
+            **os.environ,
+            _SHARD_ENV: str(i),
+            "SPARK_GRAFT_CPUS": worker_cpus,
+        }
         cmd = [sys.executable, "-m", "pytest", *files, *forwarded,
                "-p", "no:cacheprovider"]
         out = open(os.path.join(cwd, "pytest.out"), "w+")

@@ -42,10 +42,7 @@ _CITE = re.compile(
 
 
 def _iter_citations():
-    for path in sorted(PKG.rglob("*.py")) + [
-        REPO / "bench.py",
-        REPO / "__spark_entry__.py",
-    ]:
+    for path in sorted(PKG.rglob("*.py")) + [REPO / "__spark_entry__.py"]:
         text = path.read_text()
         for match in _CITE.finditer(text):
             yield path.relative_to(REPO), match.group(0)
