@@ -110,7 +110,6 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-import time
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -133,6 +132,7 @@ from ..sources.shards import append_training_batch
 from ..sources.sinks import append_dedup
 from ..streaming.corpus_stream import clean_document_stream
 from ..streaming.curation_stream import cap_and_write_batch
+from .branches import run_branches, timed
 
 _CONFIG = "_config.json"
 
@@ -252,69 +252,75 @@ def run_day2_ingest(
     bootstraps: builds both indexes from the day's survivors and runs
     the FULL batch operators (minhash_lsh_pairs / semantic_dedup under
     the just-trained frozen centroids) — exactly what the incremental
-    operators reduce to on an empty index."""
+    operators reduce to on an empty index.
+
+    Steps with no data dependency run as concurrent branches
+    (plans/branches.py): the MinHash arm (3a, then the optional
+    containment arm 3c) beside the semantic arm (3b), which both only
+    read the indexes; then, once every arm is done, the index and
+    raw-vector appends (6) beside cluster maintenance → keep verdicts
+    → shard append (4 → 5 → 7), which touch other state dirs. The
+    appends never overlap the index probes. ``stage_sec`` maps each
+    stage to its own wall time in seconds, so stages on different
+    branches overlap and the values can add up to more than the call's
+    wall time."""
     spark = docs.sparkSession
     cfg = _load_or_init_config(
         state_dir, {k: v for k, v in overrides.items() if v is not None}
     )
     stage_sec: dict[str, float] = {}
 
-    def _mark(name: str, t0: float) -> float:
-        stage_sec[name] = round(time.time() - t0, 3)
-        return time.time()
-
-    t = time.time()
-
     # --- 1. curation gates: blocklist + cross-day per-domain cap ------
-    n_ingested = docs.count()
-    cap_and_write_batch(
-        spark,
-        # hosted_unblocked runs inside cap_and_write_batch's shared
-        # stream twin; here the batch frame must already carry host —
-        # reuse the stream's stateless half so the two entry points
-        # cannot diverge.
-        _curate_stateless(docs),
-        state_dir,
-        batch_id,
-        cfg["domain_cap"],
-    )
-    curated = spark.read.parquet(
-        os.path.join(state_dir, "curated", f"batch={batch_id}")
-    )
-    n_curated = curated.count()
-    t = _mark("curation", t)
+    with timed(stage_sec, "curation"):
+        n_ingested = docs.count()
+        cap_and_write_batch(
+            spark,
+            # hosted_unblocked runs inside cap_and_write_batch's shared
+            # stream twin; here the batch frame must already carry host
+            # — reuse the stream's stateless half so the two entry
+            # points cannot diverge.
+            _curate_stateless(docs),
+            state_dir,
+            batch_id,
+            cfg["domain_cap"],
+        )
+        curated = spark.read.parquet(
+            os.path.join(state_dir, "curated", f"batch={batch_id}")
+        )
+        n_curated = curated.count()
 
     # --- 2. clean funnel + exact-fingerprint dedup vs the sink --------
-    cleaned = clean_document_stream(curated)
-    w = Window.partitionBy("fingerprint").orderBy("doc_id")
-    canonical = (
-        cleaned.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
-    clean_path = os.path.join(state_dir, "clean_documents")
-    append_dedup(spark, canonical, clean_path, keys=["fingerprint"])
-    survivors = _survivor_batch(spark, state_dir, batch_id).localCheckpoint()
-    n_survivors = survivors.count()
+    with timed(stage_sec, "clean_funnel"):
+        cleaned = clean_document_stream(curated)
+        w = Window.partitionBy("fingerprint").orderBy("doc_id")
+        canonical = (
+            cleaned.withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") == 1)
+            .drop("rn")
+        )
+        clean_path = os.path.join(state_dir, "clean_documents")
+        append_dedup(spark, canonical, clean_path, keys=["fingerprint"])
+        survivors = _survivor_batch(
+            spark, state_dir, batch_id
+        ).localCheckpoint()
+        n_survivors = survivors.count()
+        batch_vecs = vectors.join(
+            survivors.select(F.col("doc_id").alias("vec_id")),
+            "vec_id",
+            "left_semi",
+        ).localCheckpoint()
+        n_vecs = batch_vecs.count()
+        if n_vecs != n_survivors:
+            raise ValueError(
+                "every clean survivor needs an embedding: "
+                f"{n_survivors} survivors vs {n_vecs} vectors"
+            )
 
     minhash_dir = os.path.join(state_dir, "minhash_index")
     ann_dir = os.path.join(state_dir, "ann_index")
     vec_dir = os.path.join(state_dir, "vectors")
+    ct_dir = os.path.join(state_dir, "containment_index")
     bootstrap = not os.path.isdir(minhash_dir)
-
-    batch_vecs = vectors.join(
-        survivors.select(F.col("doc_id").alias("vec_id")),
-        "vec_id",
-        "left_semi",
-    ).localCheckpoint()
-    if batch_vecs.count() != n_survivors:
-        raise ValueError(
-            "every clean survivor needs an embedding: "
-            f"{n_survivors} survivors vs {batch_vecs.count()} vectors"
-        )
-    t = _mark("clean_funnel", t)
-
-    # --- 3a. incremental MinHash near-dup pairs ------------------------
     mh_kw = dict(
         num_hashes=cfg["num_hashes"],
         bands=cfg["bands"],
@@ -324,98 +330,18 @@ def run_day2_ingest(
     # joins; pre-r11 state dirs carry no key and stay plain parquet.
     mh_buckets = int(cfg.get("minhash_buckets", 0)) or None
     mh_prefix = _minhash_table_prefix(state_dir) if mh_buckets else None
-    # The batch's hashed shingles and band rows are computed ONCE here
-    # and fed to every consumer — the MinHash probe, the containment
-    # probe, and both index appends (r12 task #3/#6: each used to
-    # re-shingle and re-sign the batch independently).
-    sh_batch = None
-    bt_batch = None
-    if bootstrap:
-        pairs = dedup.minhash_lsh_pairs(
-            survivors, threshold=cfg["jaccard_threshold"], **mh_kw
-        )
-    else:
-        if mh_buckets:
-            register_minhash_tables(
-                spark, minhash_dir, mh_prefix, mh_buckets
-            )
-        sh_batch = dedup.hashed_shingles(
-            survivors, cfg["shingle_n"]
-        ).localCheckpoint()
-        bt_batch = dedup.band_table(
-            sh_batch, cfg["num_hashes"], cfg["bands"], arrow=minhash_arrow
-        ).localCheckpoint()
-        pairs = incremental_dedup(
-            spark,
-            survivors,
-            minhash_dir,
-            threshold=cfg["jaccard_threshold"],
-            bands_table=f"{mh_prefix}_bands" if mh_prefix else None,
-            shingles_table=f"{mh_prefix}_shingles" if mh_prefix else None,
-            arrow=minhash_arrow,
-            shingles=sh_batch,
-            bands_df=bt_batch,
-            **mh_kw,
-        )
-    pairs = pairs.select("doc_a", "doc_b").localCheckpoint()
-    t = _mark("minhash_pairs", t)
 
-    # --- 3b. incremental semantic-dedup verdicts ------------------------
-    if bootstrap:
-        build_ivf_pq_index(
-            batch_vecs,
-            ann_dir,
-            n_cells=cfg["n_cells"],
-            m=cfg["m"],
-            codes=cfg["codes"],
-            pq_train_limit=None,
-            assign_arrow=semantic_arrow,
+    def containment_arm(sh_batch: DataFrame | None) -> DataFrame:
+        """3c, the optional containment arm: the batch's oriented
+        (doc_id, container) drop rows vs the persisted containment
+        index, persisted under containment_drops/batch=N."""
+        ct_kw = dict(
+            threshold=cfg["containment_threshold"],
+            n=cfg["shingle_n"],
+            k=cfg["containment_k"],
+            min_hits=cfg["containment_min_hits"],
+            max_df=cfg["containment_max_df"],
         )
-        cents = spark.read.parquet(os.path.join(ann_dir, "centroids"))
-        verdicts = similarity.semantic_dedup(
-            batch_vecs,
-            threshold=cfg["cosine_threshold"],
-            centroids=cents,
-            assign_arrow=semantic_arrow,
-            pairs_arrow=semantic_arrow,
-            sort=False,  # verdicts feed joins; order is presentation-only
-        )
-    else:
-        standing = (
-            spark.read.option("basePath", vec_dir)
-            .parquet(vec_dir)
-            .filter(F.col("batch") < batch_id)
-            .drop("batch")
-        )
-        verdicts = incremental_semantic_dedup(
-            standing,
-            batch_vecs,
-            ann_dir,
-            threshold=cfg["cosine_threshold"],
-            assign_arrow=semantic_arrow,
-            refine_arrow=semantic_arrow,
-            sort=False,
-        )
-    sem_edges = (
-        verdicts.filter(~F.col("kept"))
-        .select(
-            F.col("dup_of").alias("doc_a"), F.col("vec_id").alias("doc_b")
-        )
-        .localCheckpoint()
-    )
-    edges = pairs.unionByName(sem_edges)
-    t = _mark("semantic_verdicts", t)
-
-    # --- 3c. (optional) containment near-dup pairs vs persisted index --
-    ct_dir = os.path.join(state_dir, "containment_index")
-    ct_kw = dict(
-        threshold=cfg["containment_threshold"],
-        n=cfg["shingle_n"],
-        k=cfg["containment_k"],
-        min_hits=cfg["containment_min_hits"],
-        max_df=cfg["containment_max_df"],
-    )
-    if cfg.get("containment"):
         if bootstrap:
             cpairs = dedup.containment_pairs_indexed(
                 survivors, sketch_df_filter=False, **ct_kw
@@ -466,126 +392,228 @@ def run_day2_ingest(
         )
         # Persist the oriented drops per batch (overwrite-by-batch,
         # replay-idempotent like every other state append). Batch docs
-        # named here drop TODAY (below); STANDING docs named here are
-        # DETHRONED — they already shipped, the immutable sink never
+        # named here drop TODAY (keep verdicts); STANDING docs named here
+        # are DETHRONED — they already shipped, the immutable sink never
         # retracts, and compaction (compact_training_shards with
         # containment_drops_path) re-decides them, exactly the
         # dethrone-to-compaction remedy the cluster arm uses.
         ct_drops.write.mode("overwrite").parquet(
-            os.path.join(
-                state_dir, "containment_drops", f"batch={batch_id}"
+            os.path.join(state_dir, "containment_drops", f"batch={batch_id}")
+        )
+        return ct_drops
+
+    def minhash_arm():
+        """3a, then 3c: returns (pairs, sh_batch, bt_batch, ct_drops)."""
+        # The batch's hashed shingles and band rows are computed ONCE
+        # here and fed to every consumer — the MinHash probe, the
+        # containment probe, and both index appends (r12 task #3/#6:
+        # each used to re-shingle and re-sign the batch independently).
+        sh_batch = bt_batch = None
+        with timed(stage_sec, "minhash_pairs"):
+            if bootstrap:
+                pairs = dedup.minhash_lsh_pairs(
+                    survivors, threshold=cfg["jaccard_threshold"], **mh_kw
+                )
+            else:
+                if mh_buckets:
+                    register_minhash_tables(
+                        spark, minhash_dir, mh_prefix, mh_buckets
+                    )
+                sh_batch = dedup.hashed_shingles(
+                    survivors, cfg["shingle_n"]
+                ).localCheckpoint()
+                bt_batch = dedup.band_table(
+                    sh_batch, cfg["num_hashes"], cfg["bands"],
+                    arrow=minhash_arrow,
+                ).localCheckpoint()
+                pairs = incremental_dedup(
+                    spark,
+                    survivors,
+                    minhash_dir,
+                    threshold=cfg["jaccard_threshold"],
+                    bands_table=f"{mh_prefix}_bands" if mh_prefix else None,
+                    shingles_table=(
+                        f"{mh_prefix}_shingles" if mh_prefix else None
+                    ),
+                    arrow=minhash_arrow,
+                    shingles=sh_batch,
+                    bands_df=bt_batch,
+                    **mh_kw,
+                )
+            pairs = pairs.select("doc_a", "doc_b").localCheckpoint()
+        if not cfg.get("containment"):
+            return pairs, sh_batch, bt_batch, None
+        with timed(stage_sec, "containment_pairs"):
+            ct_drops = containment_arm(sh_batch)
+        return pairs, sh_batch, bt_batch, ct_drops
+
+    def semantic_arm() -> DataFrame:
+        """3b: the semantic dup edges (dup_of, vec_id)."""
+        with timed(stage_sec, "semantic_verdicts"):
+            if bootstrap:
+                build_ivf_pq_index(
+                    batch_vecs,
+                    ann_dir,
+                    n_cells=cfg["n_cells"],
+                    m=cfg["m"],
+                    codes=cfg["codes"],
+                    pq_train_limit=None,
+                    assign_arrow=semantic_arrow,
+                )
+                cents = spark.read.parquet(os.path.join(ann_dir, "centroids"))
+                verdicts = similarity.semantic_dedup(
+                    batch_vecs,
+                    threshold=cfg["cosine_threshold"],
+                    centroids=cents,
+                    assign_arrow=semantic_arrow,
+                    pairs_arrow=semantic_arrow,
+                    sort=False,  # verdicts feed joins; order is cosmetic
+                )
+            else:
+                standing = (
+                    spark.read.option("basePath", vec_dir)
+                    .parquet(vec_dir)
+                    .filter(F.col("batch") < batch_id)
+                    .drop("batch")
+                )
+                verdicts = incremental_semantic_dedup(
+                    standing,
+                    batch_vecs,
+                    ann_dir,
+                    threshold=cfg["cosine_threshold"],
+                    assign_arrow=semantic_arrow,
+                    refine_arrow=semantic_arrow,
+                    sort=False,
+                )
+            return (
+                verdicts.filter(~F.col("kept"))
+                .select(
+                    F.col("dup_of").alias("doc_a"),
+                    F.col("vec_id").alias("doc_b"),
+                )
+                .localCheckpoint()
             )
-        )
-        t = _mark("containment_pairs", t)
-    else:
-        ct_drops = None
 
-    edges = edges.distinct()
-    n_edges = edges.count()
+    (pairs, sh_batch, bt_batch, ct_drops), sem_edges = run_branches(
+        spark, minhash_arm, semantic_arm
+    )
 
-    # --- 4. cluster maintenance (O(affected)) --------------------------
-    clusters_dir = os.path.join(state_dir, "clusters")
-    if n_edges:
-        mapping = update_clusters(edges, clusters_dir)
-    else:
-        mapping = read_clusters(spark, clusters_dir)
-    t = _mark("cluster_maintenance", t)
+    def verdicts_and_shards() -> tuple[int, int, int]:
+        """4 → 5 → 7: returns (n_edges, n_ct_dropped, n_kept)."""
+        # --- 4. cluster maintenance (O(affected)) ----------------------
+        with timed(stage_sec, "cluster_maintenance"):
+            edges = pairs.unionByName(sem_edges).distinct()
+            n_edges = edges.count()
+            clusters_dir = os.path.join(state_dir, "clusters")
+            if n_edges:
+                mapping = update_clusters(edges, clusters_dir)
+            else:
+                mapping = read_clusters(spark, clusters_dir)
 
-    # --- 5. keep verdicts: cluster-min over the cumulative edge set ----
-    # The mapping is corpus-dup-sized; restrict it to THIS batch's docs
-    # first (semi-join on the batch — O(batch) rows survive) so the
-    # anti-join side is batch-bounded and broadcastable.
-    dropped = None
-    if mapping is not None:
-        dropped = (
-            mapping.join(
-                survivors.select("doc_id"), "doc_id", "left_semi"
+        # --- 5. keep verdicts: cluster-min over the cumulative edges ---
+        # The mapping is corpus-dup-sized; restrict it to THIS batch's
+        # docs first (semi-join on the batch — O(batch) rows survive)
+        # so the anti-join side is batch-bounded and broadcastable.
+        with timed(stage_sec, "keep_verdicts"):
+            dropped = None
+            if mapping is not None:
+                dropped = (
+                    mapping.join(
+                        survivors.select("doc_id"), "doc_id", "left_semi"
+                    )
+                    .filter(F.col("component") != F.col("doc_id"))
+                    .select("doc_id")
+                )
+            n_ct_dropped = 0
+            if ct_drops is not None:
+                # batch docs that are the INNER of a containment pair
+                # drop now (q163's rule); standing docs in ct_drops wait
+                # for compaction
+                ct_batch = ct_drops.join(
+                    survivors.select("doc_id"), "doc_id", "left_semi"
+                ).select("doc_id")
+                n_ct_dropped = ct_batch.count()
+                dropped = (
+                    ct_batch
+                    if dropped is None
+                    else dropped.unionByName(ct_batch).distinct()
+                )
+            if dropped is not None:
+                kept = survivors.join(
+                    F.broadcast(dropped), "doc_id", "left_anti"
+                )
+            else:
+                kept = survivors
+            kept = kept.localCheckpoint()
+            n_kept = kept.count()
+
+        # --- 7. training-shard append (kept docs only) ------------------
+        with timed(stage_sec, "shard_append"):
+            append_training_batch(
+                kept,
+                os.path.join(state_dir, "shards"),
+                batch_id,
+                n_shards=cfg["n_shards"],
+                budget=cfg["pack_budget"],
             )
-            .filter(F.col("component") != F.col("doc_id"))
-            .select("doc_id")
-        )
-    n_ct_dropped = 0
-    if ct_drops is not None:
-        # batch docs that are the INNER of a containment pair drop now
-        # (q163's rule); standing docs in ct_drops wait for compaction
-        ct_batch = ct_drops.join(
-            survivors.select("doc_id"), "doc_id", "left_semi"
-        ).select("doc_id")
-        n_ct_dropped = ct_batch.count()
-        dropped = (
-            ct_batch
-            if dropped is None
-            else dropped.unionByName(ct_batch).distinct()
-        )
-    if dropped is not None:
-        kept = survivors.join(F.broadcast(dropped), "doc_id", "left_anti")
-    else:
-        kept = survivors
-    kept = kept.localCheckpoint()
-    n_kept = kept.count()
-    t = _mark("keep_verdicts", t)
+        return n_edges, n_ct_dropped, n_kept
 
     # --- 6. index + raw-vector appends (ALL survivors) -----------------
     # Order: vectors/packed state LAST only matters within each
     # operator (they document their own crash ordering); across
     # operators each append is independently idempotent.
-    if bootstrap:
-        build_minhash_index(
-            survivors, minhash_dir,
-            buckets=mh_buckets, table_prefix=mh_prefix,
-            arrow=minhash_arrow, **mh_kw,
-        )
-        if cfg.get("containment"):
-            from ..operators.containment_index import (
-                build_containment_index,
+    def index_appends() -> None:
+        with timed(stage_sec, "index_appends"):
+            if bootstrap:
+                build_minhash_index(
+                    survivors, minhash_dir,
+                    buckets=mh_buckets, table_prefix=mh_prefix,
+                    arrow=minhash_arrow, **mh_kw,
+                )
+                if cfg.get("containment"):
+                    from ..operators.containment_index import (
+                        build_containment_index,
+                    )
+
+                    build_containment_index(
+                        survivors, ct_dir,
+                        n=cfg["shingle_n"], k=cfg["containment_k"],
+                        max_df=cfg["containment_max_df"],
+                        buckets=mh_buckets, table_prefix=mh_prefix,
+                    )
+            else:
+                # both appends consume the probe stage's
+                # sh_batch/bt_batch — zero re-shingling, zero re-signing
+                # (r12 task #3)
+                append_to_index(
+                    survivors, minhash_dir,
+                    buckets=mh_buckets, table_prefix=mh_prefix,
+                    arrow=minhash_arrow, shingles=sh_batch,
+                    bands_df=bt_batch, **mh_kw,
+                )
+                if cfg.get("containment"):
+                    from ..operators.containment_index import (
+                        append_to_containment_index,
+                    )
+
+                    append_to_containment_index(
+                        survivors, ct_dir, batch_id=batch_id,
+                        n=cfg["shingle_n"], k=cfg["containment_k"],
+                        max_df=cfg["containment_max_df"],
+                        buckets=mh_buckets, table_prefix=mh_prefix,
+                        shingles=sh_batch,
+                    )
+                append_to_ivf_index(
+                    batch_vecs, ann_dir, batch_id=batch_id,
+                    assign_arrow=semantic_arrow,
+                )
+            batch_vecs.write.mode("overwrite").parquet(
+                os.path.join(vec_dir, f"batch={batch_id}")
             )
 
-            build_containment_index(
-                survivors, ct_dir,
-                n=cfg["shingle_n"], k=cfg["containment_k"],
-                max_df=cfg["containment_max_df"],
-                buckets=mh_buckets, table_prefix=mh_prefix,
-            )
-    else:
-        # both appends consume the probe stage's sh_batch/bt_batch —
-        # zero re-shingling, zero re-signing (r12 task #3)
-        append_to_index(
-            survivors, minhash_dir,
-            buckets=mh_buckets, table_prefix=mh_prefix,
-            arrow=minhash_arrow, shingles=sh_batch, bands_df=bt_batch,
-            **mh_kw,
-        )
-        if cfg.get("containment"):
-            from ..operators.containment_index import (
-                append_to_containment_index,
-            )
-
-            append_to_containment_index(
-                survivors, ct_dir, batch_id=batch_id,
-                n=cfg["shingle_n"], k=cfg["containment_k"],
-                max_df=cfg["containment_max_df"],
-                buckets=mh_buckets, table_prefix=mh_prefix,
-                shingles=sh_batch,
-            )
-        append_to_ivf_index(
-            batch_vecs, ann_dir, batch_id=batch_id,
-            assign_arrow=semantic_arrow,
-        )
-    batch_vecs.write.mode("overwrite").parquet(
-        os.path.join(vec_dir, f"batch={batch_id}")
+    (n_edges, n_ct_dropped, n_kept), _ = run_branches(
+        spark, verdicts_and_shards, index_appends
     )
-    t = _mark("index_appends", t)
-
-    # --- 7. training-shard append (kept docs only) ----------------------
-    append_training_batch(
-        kept,
-        os.path.join(state_dir, "shards"),
-        batch_id,
-        n_shards=cfg["n_shards"],
-        budget=cfg["pack_budget"],
-    )
-
-    _mark("shard_append", t)
     return {
         "batch_id": batch_id,
         "bootstrap": bootstrap,

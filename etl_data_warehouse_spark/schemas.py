@@ -3,7 +3,9 @@
 The reference declares fixed schemas in SQL DDL
 (reference: warehouse/target_schema.sql:13-98) but lets pandas infer
 dtypes in flight; here every table has one authoritative StructType and
-reads assert against it (SURVEY.md §1.4).
+reads assert against it (SURVEY.md §1.4). Parquet timestamps stored
+without a time zone (the order and ship dates) read as TIMESTAMP_NTZ,
+and are declared so.
 """
 
 from __future__ import annotations
@@ -61,7 +63,7 @@ ORDERS = T.StructType(
         T.StructField("o_custkey", T.LongType()),
         T.StructField("o_orderstatus", T.StringType()),
         T.StructField("o_totalprice", T.DoubleType()),
-        T.StructField("o_orderdate", T.TimestampType()),
+        T.StructField("o_orderdate", T.TimestampNTZType()),
         T.StructField("o_orderpriority", T.StringType()),
     ]
 )
@@ -78,7 +80,7 @@ LINEITEM = T.StructType(
         T.StructField("l_tax", T.DoubleType()),
         T.StructField("l_returnflag", T.StringType()),
         T.StructField("l_linestatus", T.StringType()),
-        T.StructField("l_shipdate", T.TimestampType()),
+        T.StructField("l_shipdate", T.TimestampNTZType()),
     ]
 )
 

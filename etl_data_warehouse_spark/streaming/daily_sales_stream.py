@@ -18,7 +18,8 @@ streaming equivalent of the persisted high-watermark batch
 bounds state. The sink is an unpartitioned ``merge_upsert``, so each
 non-empty microbatch rewrites the whole ``daily_sales`` table (O(table)
 per batch); an empty microbatch, such as the no-data batch that closes
-an AvailableNow drain, writes nothing.
+an AvailableNow drain, writes nothing. Each microbatch is persisted
+while its sink runs, so its stateful plan executes once.
 """
 
 from __future__ import annotations
@@ -89,14 +90,20 @@ def start_daily_sales_stream(
     agg = daily_sales_aggregate(read_order_stream(spark, input_dir))
 
     def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return  # merging nothing would still rewrite the table
-        merge_upsert(
-            batch_df.sparkSession,
-            batch_df,
-            output_path,
-            keys=["sales_date", "product_id"],
-        )
+        # A foreachBatch frame re-runs its stateful plan on every action;
+        # persisted, the emptiness probe and the merge share one run.
+        batch_df.persist()
+        try:
+            if batch_df.isEmpty():
+                return  # merging nothing would still rewrite the table
+            merge_upsert(
+                batch_df.sparkSession,
+                batch_df,
+                output_path,
+                keys=["sales_date", "product_id"],
+            )
+        finally:
+            batch_df.unpersist()
 
     writer = (
         agg.writeStream.outputMode("update")

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import pathlib
+import signal
 import subprocess
 import sys
 import tempfile
@@ -48,38 +49,37 @@ def sf_dir():
 
 _SHARD_ENV = "SPARK_GRAFT_TEST_SHARD"
 _N_SHARDS = 4
-# Wall-clock weights (seconds, measured r14 on this box at CPUS=8) for
-# the files that dominate a shard; everything else defaults to ~20s.
-# Balancing by these keeps the slowest shard near total/N.
+# Wall-clock weights (seconds: per-file sums of `--durations=0` in a
+# whole-suite run, 4-core host, 2 CPUs per shard) for the files that
+# dominate a shard; everything else defaults to ~7s. Balancing by these
+# keeps the slowest shard near max(total/N, the slowest file).
 _FILE_WEIGHTS = {
-    "test_day2_pipeline.py": 420,
-    "test_day2_stream.py": 300,
-    "test_cdc_stream.py": 120,
-    "test_sinks_incremental_streaming.py": 230,
-    "test_property_based.py": 330,
-    "test_extensions.py": 260,
-    "test_pipeline_models_plans.py": 110,
-    "test_ann_stream.py": 80,
-    "test_neardup_stream.py": 70,
-    "test_whitened_semdedup.py": 75,
-    "test_containment_index.py": 120,
-    "test_dedup_index.py": 90,
-    "test_oracle_parity.py": 150,
-    "test_bpe_trainer.py": 70,
-    "test_external_skew_stateful.py": 60,
-    "test_cluster_index.py": 50,
-    "test_streaming_corpus.py": 60,
-    "test_session_window_stream.py": 50,
-    "test_sketch_stream.py": 50,
-    "test_event_dedup_stream.py": 40,
-    "test_curation_stream.py": 40,
-    "test_ann_index.py": 60,
-    "test_semantic_dedup_incremental.py": 50,
-    "test_pq.py": 80,
-    "test_containment.py": 45,
-    "test_graph.py": 40,
-    "test_corpus_pipeline.py": 45,
-    "test_scd2.py": 40,
+    "test_day2_pipeline.py": 744,
+    "test_day2_stream.py": 339,
+    "test_oracle_parity.py": 332,
+    "test_extensions.py": 317,
+    "test_property_based.py": 242,
+    "test_pipeline_models_plans.py": 232,
+    "test_sinks_incremental_streaming.py": 180,
+    "test_dedup_index.py": 87,
+    "test_containment_index.py": 78,
+    "test_semantic_dedup_incremental.py": 68,
+    "test_cluster_index.py": 66,
+    "test_whitened_semdedup.py": 57,
+    "test_neardup_stream.py": 54,
+    "test_bpe_trainer.py": 51,
+    "test_ann_index.py": 51,
+    "test_pq.py": 46,
+    "test_ann_stream.py": 38,
+    "test_graph.py": 31,
+    "test_containment.py": 30,
+    "test_training_shards.py": 30,
+    "test_cdc_stream.py": 28,
+    "test_sketch_store.py": 22,
+    "test_scd2.py": 21,
+    "test_web_curation.py": 20,
+    "test_external_skew_stateful.py": 18,
+    "test_session_window_stream.py": 15,
 }
 
 
@@ -93,14 +93,14 @@ def _shard_files(config, tests_dir: str, n: int) -> list[list[str]]:
         )
     )
     weighted = sorted(
-        files, key=lambda f: -_FILE_WEIGHTS.get(f, 20)
+        files, key=lambda f: -_FILE_WEIGHTS.get(f, 7)
     )
     shards: list[list[str]] = [[] for _ in range(n)]
     loads = [0] * n
     for f in weighted:
         i = loads.index(min(loads))
         shards[i].append(os.path.join(tests_dir, f))
-        loads[i] += _FILE_WEIGHTS.get(f, 20)
+        loads[i] += _FILE_WEIGHTS.get(f, 7)
     return [s for s in shards if s]
 
 
@@ -179,6 +179,8 @@ def pytest_cmdline_main(config):
             **os.environ,
             _SHARD_ENV: str(i),
             "SPARK_GRAFT_CPUS": worker_cpus,
+            # a killed shard's output must already be in its file
+            "PYTHONUNBUFFERED": "1",
         }
         cmd = [sys.executable, "-m", "pytest", *files, *forwarded,
                "-p", "no:cacheprovider"]
@@ -193,28 +195,46 @@ def pytest_cmdline_main(config):
                 out,
             )
         )
-    failed = 0
-    deadline = time.time() + 3300  # leave headroom under outer budgets
-    for i, p, out in procs:
-        try:
-            rc = p.wait(timeout=max(30, deadline - time.time()))
-        except subprocess.TimeoutExpired:
+    # No deadline of its own: the caller's budget is the deadline. A
+    # SIGTERM (timeout's signal) or SIGINT kills every shard and reports
+    # each one's tail, so a hung shard loses no other shard's output.
+    def interrupt(signum, frame):
+        raise KeyboardInterrupt(signal.Signals(signum).name)
+
+    signal.signal(signal.SIGTERM, interrupt)
+    ended: dict[int, float] = {}
+    try:
+        while len(ended) < len(procs):
+            for i, p, _ in procs:
+                if i not in ended and p.poll() is not None:
+                    ended[i] = time.time()
+            time.sleep(1)
+    except KeyboardInterrupt as e:
+        print(f"[conftest] {e or 'SIGINT'}: killing shards", flush=True)
+        for _, p, _ in procs:
             p.kill()
-            rc = -9
+    failed = 0
+    for i, p, out in procs:
+        rc = p.wait()
         out.seek(0)
         text = out.read()
         out.close()
         tail = [ln for ln in text.splitlines() if ln.strip()][-15:]
-        if rc not in (0, 5):  # 5: every test of the shard deselected
+        took = f"{ended.get(i, time.time()) - t0:.0f}s"
+        if i not in ended or rc not in (0, 5):  # 5: all deselected
             failed += 1
-            print(f"[shard {i}] FAILED rc={rc}; tail:", flush=True)
+            why = f"FAILED rc={rc}" if i in ended else "KILLED"
+            print(f"[shard {i}] {why} after {took}; tail:", flush=True)
             print("\n".join(tail), flush=True)
         else:
-            print(f"[shard {i}] {tail[-1] if tail else 'ok'}", flush=True)
+            print(f"[shard {i}] {took}: {tail[-1] if tail else 'ok'}",
+                  flush=True)
     status = "ALL SHARDS PASSED" if failed == 0 else f"{failed} SHARDS FAILED"
     print(
         f"===== auto-shard: {status} "
         f"({len(shards)} shards, wall {time.time() - t0:.0f}s) =====",
         flush=True,
     )
+    if len(ended) < len(procs):
+        return pytest.ExitCode.INTERRUPTED
     return 0 if failed == 0 else 1

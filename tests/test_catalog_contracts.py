@@ -5,6 +5,9 @@ error behavior."""
 
 from __future__ import annotations
 
+import glob
+import os
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
@@ -21,9 +24,14 @@ class TestColumnContracts:
         assert df.columns == ["o_orderkey", "o_totalprice"]
 
     def test_full_scan_matches_declared_schema(self, spark, sf_dir):
-        for name, schema in SCHEMAS.items():
-            df = load_table(spark, name, sf_dir)
-            assert df.columns == [f.name for f in schema.fields], name
+        # names AND types, at every scale factor next to the test one
+        root = os.path.dirname(sf_dir)
+        for d in sorted(glob.glob(os.path.join(root, "sf*"))):
+            for name, schema in SCHEMAS.items():
+                got = load_table(spark, name, d).schema
+                assert [(f.name, f.dataType) for f in got] == [
+                    (f.name, f.dataType) for f in schema
+                ], (d, name)
 
     def test_unknown_table_raises_keyerror_listing_tables(self, spark, sf_dir):
         with pytest.raises(KeyError, match="orders"):

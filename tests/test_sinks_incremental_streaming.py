@@ -6,6 +6,9 @@ import datetime
 import os
 import uuid
 
+import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -14,6 +17,7 @@ from etl_data_warehouse_spark.incremental import (
     commit_watermark,
     incremental_extract,
 )
+from etl_data_warehouse_spark.plans import pipeline
 from etl_data_warehouse_spark.sources.sinks import (
     append_dedup,
     assign_stable_keys,
@@ -227,6 +231,238 @@ def _dim(spark, rows):
     return spark.createDataFrame(rows, "customer_id long, name string")
 
 
+_EXTRACT_TABLES = ("customer", "part", "orders", "lineitem")
+_STAR_TABLES = (
+    "dim_date", "dim_customers", "dim_products", "fact_orders",
+    "fact_daily_sales",
+)
+
+
+def _yyyymmdd(ts):
+    return ts.dt.year * 10000 + ts.dt.month * 100 + ts.dt.day
+
+
+def _day2_extract(t: dict) -> dict:
+    """Day 2 drops the lowest keys of customers, parts and orders,
+    renames a customer, reprices an order, and adds customers, parts
+    and orders (with their line items) after day 1's last order date."""
+    c = t["customer"].sort_values("c_custkey")
+    p = t["part"].sort_values("p_partkey")
+    o = t["orders"].sort_values("o_orderkey")
+    li = t["lineitem"]
+    cmax, pmax, omax = c.c_custkey.max(), p.p_partkey.max(), o.o_orderkey.max()
+    c, p = c.iloc[3:].copy(), p.iloc[2:].copy()
+    c.loc[c.index[10], "c_name"] = "Customer#renamed"
+    new_c = c.iloc[:4].assign(c_custkey=[cmax + 5, cmax + 1, cmax + 3, cmax + 2])
+    new_p = p.iloc[:3].assign(p_partkey=[pmax + 1, pmax + 2, pmax + 3])
+    li = li[~li.l_orderkey.isin(o.o_orderkey.iloc[:5])]
+    o = o.iloc[5:].copy()
+    o.loc[o.index[0], "o_totalprice"] += 1.0
+    last = o.o_orderdate.max()
+    new_o = o.iloc[:6].assign(
+        o_orderkey=[omax + k for k in range(1, 7)],
+        o_custkey=[*new_c.c_custkey, c.c_custkey.iloc[0], c.c_custkey.iloc[1]],
+        o_orderdate=[last + pd.Timedelta(days=k) for k in (1, 1, 2, 2, 3, 3)],
+    )
+    new_li = li.iloc[:12].assign(
+        l_orderkey=list(new_o.o_orderkey.repeat(2)),
+        l_linenumber=[1, 2] * 6,
+        l_partkey=[*new_p.p_partkey] * 3 + [p.p_partkey.iloc[0]] * 3,
+        l_shipdate=list(new_o.o_orderdate.repeat(2) + pd.Timedelta(days=2)),
+    )
+    return {
+        "customer": pd.concat([c, new_c]),
+        "part": pd.concat([p, new_p]),
+        "orders": pd.concat([o, new_o]),
+        "lineitem": pd.concat([li, new_li]),
+    }
+
+
+def _keys(t: dict) -> dict:
+    """The business keys each star table holds after loading ``t``."""
+    days = t["orders"].o_orderdate.dt.normalize()
+    dates = pd.date_range(days.min(), days.max(), freq="D")
+    li = t["lineitem"]
+    return {
+        "dim_date": set(_yyyymmdd(pd.Series(dates)).tolist()),
+        "dim_customers": set(t["customer"].c_custkey.tolist()),
+        "dim_products": set(t["part"].p_partkey.tolist()),
+        "fact_orders": set(t["orders"].o_orderkey.tolist()),
+        "fact_daily_sales": set(
+            zip(_yyyymmdd(li.l_shipdate).tolist(), li.l_partkey.tolist())
+        ),
+    }
+
+
+class _Expected:
+    """run_pipeline's results over a sequence of extracts, derived with
+    pandas: merge_upsert counts a stored key as updated and a new one as
+    inserted, and a stable surrogate key is max(stored key) + the rank
+    of the new business key."""
+
+    def __init__(self, days: list[dict]):
+        self.loads, self.extracted = [], []
+        self.keys = {n: set() for n in _STAR_TABLES}
+        self.sk = {"dim_customers": {}, "dim_products": {}}
+        self.order_fk = {}
+        for t in days:
+            ks = _keys(t)
+            self.loads.append({
+                n: {"inserted": len(ks[n] - self.keys[n]),
+                    "updated": len(ks[n] & self.keys[n])}
+                for n in _STAR_TABLES
+            })
+            self.extracted.append(len(t["orders"]) + len(t["lineitem"]))
+            for n in _STAR_TABLES:
+                self.keys[n] |= ks[n]
+            for n in self.sk:
+                for k in sorted(ks[n] - self.sk[n].keys()):
+                    self.sk[n][k] = len(self.sk[n]) + 1
+            # facts resolve against the day's keyed dim: a customer
+            # missing from the day's extract leaves the key null
+            day_c = ks["dim_customers"]
+            for ok, ck in zip(t["orders"].o_orderkey, t["orders"].o_custkey):
+                self.order_fk[ok] = (
+                    self.sk["dim_customers"][ck] if ck in day_c else None
+                )
+
+
+@pytest.fixture(scope="module")
+def extracts(tmp_path_factory, sf_dir):
+    """(day-1 dir, day-2 dir, expectations): day 1 is the test
+    extract, day 2 is derived from it by _day2_extract."""
+    arrow = {
+        n: pq.read_table(os.path.join(sf_dir, f"{n}.parquet"))
+        for n in _EXTRACT_TABLES
+    }
+    day1 = {n: a.to_pandas() for n, a in arrow.items()}
+    days = [day1, _day2_extract(day1)]
+    dirs = []
+    for i, t in enumerate(days, 1):
+        d = tmp_path_factory.mktemp(f"extract{i}")
+        for n, df in t.items():
+            pq.write_table(
+                pa.Table.from_pandas(
+                    df, schema=arrow[n].schema, preserve_index=False
+                ),
+                os.path.join(d, f"{n}.parquet"),
+            )
+        dirs.append(str(d))
+    return dirs, _Expected(days)
+
+
+class TestConcurrentPipeline:
+    """run_pipeline runs its sinks as concurrent branches; results,
+    stored rows and surrogate keys are those of the data dependencies,
+    whatever the interleaving."""
+
+    STEPS = {"extract", *_STAR_TABLES, "quality", "audit"}
+
+    def _check_tables(self, spark, wh, exp):
+        for n in _STAR_TABLES:
+            assert spark.read.parquet(os.path.join(wh, n)).count() == len(
+                exp.keys[n]
+            ), n
+        for n, key, sk in (
+            ("dim_customers", "customer_id", "customer_key"),
+            ("dim_products", "product_id", "product_key"),
+            ("fact_orders", "order_key", "customer_key"),
+        ):
+            got = dict(
+                spark.read.parquet(os.path.join(wh, n)).select(key, sk)
+                .collect()
+            )
+            assert got == (exp.order_fk if n == "fact_orders" else exp.sk[n])
+        renamed = spark.read.parquet(os.path.join(wh, "dim_customers"))
+        assert renamed.filter(
+            F.col("customer_name") == "Customer#renamed"
+        ).count() == 1
+
+    def test_two_days_match_expected(self, spark, extracts, tmp_path):
+        dirs, exp = extracts
+        wh = str(tmp_path / "wh")
+        for day, d in enumerate(dirs):
+            r = pipeline.run_pipeline(spark, d, wh)
+            assert r["status"] == "SUCCESS"
+            assert r["checks"] == dict.fromkeys(r["checks"], True)
+            assert len(r["checks"]) == 4
+            assert r["loads"] == exp.loads[day]
+            assert list(r["loads"]) == list(_STAR_TABLES)
+            assert r["records_extracted"] == exp.extracted[day]
+            assert r["records_loaded"] == sum(
+                v["inserted"] + v["updated"] for v in exp.loads[day].values()
+            )
+            assert set(r["stage_sec"]) == self.STEPS
+            assert min(r["stage_sec"].values()) >= 0
+        self._check_tables(spark, wh, exp)
+        assert spark.read.parquet(os.path.join(wh, "etl_run_log")).count() == 2
+
+    def test_branch_jobs_inherit_the_callers_job_group(
+        self, spark, extracts, tmp_path
+    ):
+        """Without inheritable_thread_target a branch thread starts with
+        empty local properties, so its jobs would carry no group."""
+        sc = spark.sparkContext
+        tracker, bus = sc.statusTracker(), sc._jsc.sc().listenerBus()
+        group = f"g-{uuid.uuid4().hex}"
+        bus.waitUntilEmpty()
+        ungrouped = set(tracker.getJobIdsForGroup(None))
+        sc.setJobGroup(group, "concurrent run_pipeline")
+        try:
+            pipeline.run_pipeline(spark, extracts[0][0], str(tmp_path / "wh"))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        bus.waitUntilEmpty()
+        assert len(tracker.getJobIdsForGroup(group)) >= 5
+        assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+
+    def test_failed_branch_then_rerun(
+        self, spark, extracts, tmp_path, monkeypatch
+    ):
+        """fact_daily_sales' write fails inside its Spark job on day 2:
+        the other branches finish first, the failed table keeps day 1,
+        and the re-run gives the clean run's keys and counts."""
+        (day1, day2), exp = extracts
+        wh = str(tmp_path / "wh")
+        pipeline.run_pipeline(spark, day1, wh)
+        real = pipeline.build_fact_daily_sales
+
+        def failing(spark, sf_dir):
+            return real(spark, sf_dir).filter(
+                F.assert_true(F.col("product_id") < 0, "injected").isNull()
+            )
+
+        with monkeypatch.context() as m:
+            m.setattr(pipeline, "build_fact_daily_sales", failing)
+            with pytest.raises(Exception, match="injected"):
+                pipeline.run_pipeline(spark, day2, wh)
+        sc = spark.sparkContext
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert sc.statusTracker().getActiveJobsIds() == []
+        for n in _STAR_TABLES:
+            n_rows = spark.read.parquet(os.path.join(wh, n)).count()
+            want = (
+                exp.loads[0][n]["inserted"] if n == "fact_daily_sales"
+                else len(exp.keys[n])
+            )
+            assert n_rows == want, n
+        assert spark.read.parquet(os.path.join(wh, "etl_run_log")).count() == 1
+
+        r = pipeline.run_pipeline(spark, day2, wh)
+        assert r["status"] == "SUCCESS"
+        # the four finished branches already hold day 2
+        for n in _STAR_TABLES:
+            day2_keys = sum(exp.loads[1][n].values())
+            want = (
+                exp.loads[1][n] if n == "fact_daily_sales"
+                else {"inserted": 0, "updated": day2_keys}
+            )
+            assert r["loads"][n] == want, n
+        self._check_tables(spark, wh, exp)
+        assert sorted(os.listdir(wh)) == sorted([*_STAR_TABLES, "etl_run_log"])
+
+
 class TestStableKeys:
     """Reference upsert semantics (warehouse_loader.py:56-69): the
     surrogate key is excluded from the update SET, so re-loaded rows
@@ -398,6 +634,37 @@ class TestStreaming:
         assert out[("2024-01-01", 100)]["total_orders_count"] == 3
         assert out[("2024-01-01", 100)]["total_sales_amount"] == 15.0
         assert out[("2024-01-03", 200)]["total_orders_count"] == 1
+
+    def test_each_microbatch_runs_its_stateful_plan_once(
+        self, spark, tmp_path
+    ):
+        """numRowsTotal sums over every execution of a microbatch's
+        stateful plan, so it equals the state store's own row count
+        only when the sink runs the plan once."""
+        ts = datetime.datetime
+        input_dir, out_path, ckpt = (
+            str(tmp_path / d) for d in ("in", "out", "ckpt")
+        )
+        os.makedirs(input_dir)
+        self._write_batch(
+            spark,
+            input_dir,
+            [(i, 100 + i % 7, ts(2024, 1, 1 + i % 3, 10), 1.0, "COMPLETED")
+             for i in range(42)],
+            "b1",
+        )
+        q = start_daily_sales_stream(spark, input_dir, out_path, ckpt)
+        q.awaitTermination(120)
+        assert spark.read.parquet(out_path).count() == 21
+        batches = [p for p in q.recentProgress if p["numInputRows"]]
+        assert batches
+        for p in batches:
+            state = (
+                spark.read.format("statestore")
+                .option("batchId", p["batchId"])
+                .load(ckpt)
+            )
+            assert p["stateOperators"][0]["numRowsTotal"] == state.count()
 
 
 class TestStreamingDedup:
