@@ -19,7 +19,7 @@ Quantizer state is trained at build time and never touched by appends
 (periodic retraining is an offline REBUILD, the standard production
 cadence); per batch the cost is O(batch) encode + assign.
 
-Crash-safety of appends (the lesson from dedup_index/neardup_stream's
+Crash-safety of appends (the lesson from dedup_index's
 write-order analysis): each batch writes into its OWN ``batch=N``
 subdirectories with mode=overwrite, so a replayed batch rewrites
 byte-identical content instead of appending duplicates — duplicate

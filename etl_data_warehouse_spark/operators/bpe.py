@@ -16,13 +16,13 @@ interpreted, not codegen'd, which is fine at vocabulary grain (the
 CLAUDE.md lambda rule targets corpus-grain hot paths). Lineage is
 truncated per iteration with a vocab-sized localCheckpoint.
 
-Persisted per-iteration state (the lm_model.py resumable pattern,
-with the shards.py commit protocol): each learned merge lands in
-``state_path/step=N/`` with a ``_COMMITTED`` marker written after the
-parquet write. Training is deterministic, so a crashed (uncommitted)
-step is simply re-learned by the resuming run and overwritten with
-identical content; resume re-applies the committed merge sequence to
-the freshly built dictionary and continues at max committed step + 1.
+Persisted per-iteration state (the shards.py commit protocol): each
+learned merge lands in ``state_path/step=N/`` with a ``_COMMITTED``
+marker written after the parquet write. Training is deterministic, so
+a crashed (uncommitted) step is simply re-learned by the resuming run
+and overwritten with identical content; resume re-applies the committed
+merge sequence to the freshly built dictionary and continues at max
+committed step + 1.
 
 Reference scope: the reference repo has no tokenizer training; this
 extends its transform family (reference: transformers/

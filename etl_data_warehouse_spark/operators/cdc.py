@@ -23,10 +23,10 @@ surface as pure DataFrame ops:
 ``keep_tombstones=True`` retains each key's final delete row (with its
 ``op`` marker) instead of dropping it — required when batches can
 arrive OUT OF ORDER: without the tombstone, a late-arriving upsert
-older than a processed delete would resurrect the key. Streaming
-materialization (streaming/cdc_stream.py) keeps tombstones in the
-persisted snapshot and filters them at read time; a periodic major
-compaction can drop tombstones older than the lateness horizon.
+older than a processed delete would resurrect the key. An incremental
+materializer keeps tombstones in its persisted snapshot and filters
+them at read time; a periodic major compaction can drop tombstones
+older than the lateness horizon.
 
 Determinism: callers must pass ``seq_cols`` that totally order each
 key's changes (e.g. ``[ts, change_id]``) — the same unique-tiebreaker

@@ -203,13 +203,12 @@ def append_to_index(
         else band_table(sh, num_hashes, bands, arrow=arrow)
     )
     # Write order matters for crash safety: bands FIRST, shingles last.
-    # Both the skip_indexed guard above and the streaming replay guard
-    # (streaming/neardup_stream.py) probe the SHINGLE table, so a doc
+    # The skip_indexed guard above probes the SHINGLE table, so a doc
     # must only become visible there once its band rows are already on
     # disk. A crash between the two writes then leaves band rows without
     # shingles — harmless, because a replay re-appends both (duplicate
     # band rows are collapsed by the candidate `distinct`), whereas the
-    # reverse order would leave docs the guards treat as indexed but
+    # reverse order would leave docs the guard treats as indexed but
     # that can never surface as LSH candidates (silently missed dups).
     if buckets:
         if not table_prefix:

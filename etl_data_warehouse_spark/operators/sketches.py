@@ -590,27 +590,3 @@ def cm_estimate(
         .cast("long")
         .alias("cm_est")
     )
-
-
-def hll_estimate_corrected(
-    regs: DataFrame, group_cols: list[str]
-) -> DataFrame:
-    """hll_estimate + Flajolet's small-range correction: when empty
-    registers exist and the raw estimate is below 2.5*m, switch to
-    linear counting ``m * ln(m / empty)`` — the raw harmonic formula
-    overestimates badly at cardinalities << m (raw ~191 for a true 15
-    at m=256). Uses a float log, so this variant is for the
-    TEST-PINNED paths (sketch_store panel rollups); q132's oracle twin
-    stays on the log-free raw formula, which both engines reproduce
-    bit-for-bit."""
-    est = hll_estimate(regs, group_cols)
-    empty = (F.lit(_HLL_M) - F.col("n_registers_hit")).cast("double")
-    lc = F.lit(float(_HLL_M)) * F.log(F.lit(float(_HLL_M)) / empty)
-    return est.withColumn(
-        "hll_estimate",
-        F.when(
-            (F.col("n_registers_hit") < _HLL_M)
-            & (F.col("hll_estimate") <= 2.5 * _HLL_M),
-            lc,
-        ).otherwise(F.col("hll_estimate")),
-    )

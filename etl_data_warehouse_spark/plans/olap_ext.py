@@ -1087,8 +1087,8 @@ def q140_join_size_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The 100 TB role is planning: deciding broadcast-vs-shuffle, skew
     salting, or AQE hints for a petabyte join from two KB-scale
-    sketches that the sketch panel (sketch_store) already maintains —
-    never underestimates, so capacity decisions made on it are safe.
+    sketches maintained alongside the tables — never underestimates,
+    so capacity decisions made on it are safe.
 
     Plan shape: each side is ONE scan into a cardinality-proportional
     cm build; products join cell-on-cell ((d·w)-row frames); the exact

@@ -42,9 +42,6 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # Facts are date-partitioned on disk at scale; let Catalyst prune.
         .config("spark.sql.optimizer.dynamicPartitionPruning.enabled", "true")
-        # events.parquet stores TIMESTAMP(NANOS) which Spark cannot read
-        # natively; read as long and convert in the catalog (exact).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # Split small inputs to at least core-count partitions (single
         # row-group files still need explicit repartition in CPU-heavy
         # operators — see dedup/similarity modules).

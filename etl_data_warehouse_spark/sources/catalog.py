@@ -19,6 +19,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ..schemas import SCHEMAS
 
@@ -40,52 +41,24 @@ def load_table(
     """
     if name not in SCHEMAS:
         raise KeyError(f"unknown table {name!r}; expected one of {sorted(SCHEMAS)}")
+    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events":
-        # events.parquet stores TIMESTAMP(NANOS); the legacy conf must be
-        # on while spark.read.parquet resolves the schema (works in ANY
-        # session, not just get_spark()'s). Scoped set/read/restore so the
-        # flag doesn't leak into the caller's session (same pattern as
-        # merge_upsert_partitioned, sinks.py): once the schema is resolved
-        # as bigint, execution no longer consults the conf.
-        key = "spark.sql.legacy.parquet.nanosAsLong"
-        prev = spark.conf.get(key, None)
-        spark.conf.set(key, "true")
-        try:
-            df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
-    else:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events":
-        ts_type = dict(df.dtypes).get("ts")
-        from pyspark.sql import functions as F
-
-        if ts_type == "bigint":
-            # TIMESTAMP(NANOS) read as long (older Sparks honouring the
-            # legacy conf); convert to microsecond timestamps with exact
-            # integer division — the same truncation DuckDB applies
-            # reading nanos into its micro TIMESTAMP.
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif ts_type == "timestamp_ntz":
-            # Spark >= 4.1 ignores nanosAsLong and reads TIMESTAMP(NANOS)
-            # as TIMESTAMP_NTZ (micros-truncated). Interpret the NTZ wall
-            # clock as UTC *without* going through the session timezone:
-            # wall-clock micros since the NTZ epoch -> timestamp_micros.
-            # (A plain NTZ->TIMESTAMP cast or to_utc_timestamp would
-            # round-trip through spark.sql.session.timeZone and shift
-            # DST-gap wall times on non-UTC drivers.)
-            df = df.withColumn(
-                "ts",
-                F.timestamp_micros(
-                    F.expr(
-                        "timestampdiff(MICROSECOND,"
-                        " TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
-                    )
-                ),
-            )
+        # events.parquet stores TIMESTAMP(NANOS), which Spark 4.1 reads
+        # as TIMESTAMP_NTZ (micros-truncated). Interpret the NTZ wall
+        # clock as UTC *without* going through the session timezone:
+        # wall-clock micros since the NTZ epoch -> timestamp_micros.
+        # (A plain NTZ->TIMESTAMP cast or to_utc_timestamp would
+        # round-trip through spark.sql.session.timeZone and shift
+        # DST-gap wall times on non-UTC drivers.)
+        df = df.withColumn(
+            "ts",
+            F.timestamp_micros(
+                F.expr(
+                    "timestampdiff(MICROSECOND,"
+                    " TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
+                )
+            ),
+        )
     if predicate is not None:
         df = df.filter(predicate)
     if columns:

@@ -22,7 +22,7 @@ parquet file sizes — pick n_shards ~ corpus_tokens / 2^31 to keep
 row groups cache-friendly. The writer is one-shot + atomic swap
 (temp dir, rename) — replays are idempotent by construction; for
 daily *appends* use the `batch=N` overwrite-partition protocol of
-ann_index/cdc_stream instead.
+ann_index instead.
 """
 
 from __future__ import annotations

@@ -234,16 +234,12 @@ def merge_upsert_stable(
 def _overwrite_partitions(
     df: DataFrame, path: str, partition_col: str
 ) -> None:
-    """Overwrite in place only the ``partition_col`` values in ``df``."""
-    spark = df.sparkSession
-    prev_mode = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static"
-    )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(partition_col).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+    """Overwrite in place only the ``partition_col`` values in ``df``.
+    The per-write option leaves the session conf alone, so concurrent
+    writers on other threads keep their own overwrite mode."""
+    df.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy(partition_col).parquet(path)
 
 
 def merge_upsert_partitioned(

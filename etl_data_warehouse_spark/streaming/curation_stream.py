@@ -31,9 +31,9 @@ replay idempotence are the invariants (also test-pinned).
 100 TB posture: per microbatch one host-keyed shuffle for the rank
 window + one host-grain aggregate of the output table. At petabyte
 output, keep the output partitioned by batch (it is) and derive the
-per-host counts from a maintained host-grain side table instead of
-re-aggregating — the sketch_store pattern; the re-aggregate here keeps
-the sandbox version dependency-free.
+per-host counts from a maintained host-grain side table (per-batch
+partials, merged at read) instead of re-aggregating; the re-aggregate
+here keeps the sandbox version dependency-free.
 """
 
 from __future__ import annotations

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import pathlib
+import re
 import signal
 import subprocess
 import sys
@@ -45,7 +46,11 @@ def sf_dir():
 # (-k, -m, specific files/nodeids), a cache-driven one (--lf, --ff,
 # --nf, --sw) and an informational one (--collect-only, --fixtures,
 # --markers, --version, --help) runs in-process exactly as before, and
-# SPARK_GRAFT_TEST_SERIAL=1 opts out entirely.
+# SPARK_GRAFT_TEST_SERIAL=1 opts out entirely. The run reports the whole
+# suite, as an in-process run would: its last line is one pytest-style
+# summary summed over the shards, and --junitxml gets one report that
+# holds every shard's test cases (each shard writes its own file, and
+# they are merged at the end).
 
 _SHARD_ENV = "SPARK_GRAFT_TEST_SHARD"
 _N_SHARDS = 4
@@ -54,32 +59,28 @@ _N_SHARDS = 4
 # dominate a shard; everything else defaults to ~7s. Balancing by these
 # keeps the slowest shard near max(total/N, the slowest file).
 _FILE_WEIGHTS = {
-    "test_day2_pipeline.py": 744,
-    "test_day2_stream.py": 339,
-    "test_oracle_parity.py": 332,
-    "test_extensions.py": 317,
+    "test_day2_pipeline.py": 799,
+    "test_oracle_parity.py": 532,
+    "test_extensions.py": 331,
+    "test_pipeline_models_plans.py": 264,
     "test_property_based.py": 242,
-    "test_pipeline_models_plans.py": 232,
-    "test_sinks_incremental_streaming.py": 180,
-    "test_dedup_index.py": 87,
-    "test_containment_index.py": 78,
-    "test_semantic_dedup_incremental.py": 68,
-    "test_cluster_index.py": 66,
-    "test_whitened_semdedup.py": 57,
-    "test_neardup_stream.py": 54,
-    "test_bpe_trainer.py": 51,
-    "test_ann_index.py": 51,
-    "test_pq.py": 46,
-    "test_ann_stream.py": 38,
-    "test_graph.py": 31,
+    "test_sinks_incremental_streaming.py": 170,
+    "test_semantic_dedup_incremental.py": 143,
+    "test_containment_index.py": 141,
+    "test_dedup_index.py": 138,
+    "test_whitened_semdedup.py": 121,
+    "test_ann_index.py": 87,
+    "test_bpe_trainer.py": 50,
+    "test_pq.py": 47,
+    "test_cluster_index.py": 40,
+    "test_web_curation.py": 40,
+    "test_scd2.py": 36,
     "test_containment.py": 30,
-    "test_training_shards.py": 30,
-    "test_cdc_stream.py": 28,
-    "test_sketch_store.py": 22,
-    "test_scd2.py": 21,
-    "test_web_curation.py": 20,
-    "test_external_skew_stateful.py": 18,
-    "test_session_window_stream.py": 15,
+    "test_graph.py": 26,
+    "test_decontamination.py": 16,
+    "test_manifest_shards.py": 13,
+    "test_training_shards.py": 12,
+    "test_curation_stream.py": 12,
 }
 
 
@@ -114,15 +115,25 @@ _IN_PROCESS_OPTIONS = (
 )
 
 
+_JUNIT_OPTIONS = ("--junitxml", "--junit-xml")
+
+
 def _forwarded_args(config) -> list[str]:
-    """The invocation's own arguments minus its test paths, with every
-    relative path made absolute (a shard runs in its own cwd) and the
-    rootdir pinned (so nodeids, hence --deselect values, match)."""
+    """The invocation's own arguments minus its test paths and its
+    --junitxml (each shard gets its own), with every relative path made
+    absolute (a shard runs in its own cwd) and the rootdir pinned (so
+    nodeids, hence --deselect values, match)."""
     inv = config.invocation_params
     positional = set(config.args)
     out: list[str] = []
-    for a in inv.args:
+    args = iter(inv.args)
+    for a in args:
         if a in positional:
+            continue
+        if a in _JUNIT_OPTIONS:
+            next(args, None)  # its value
+            continue
+        if a.partition("=")[0] in _JUNIT_OPTIONS:
             continue
         opt, eq, val = a.partition("=") if a.startswith("-") else ("", "", a)
         nodeid = "--deselect" in (opt, out[-1] if out else "")
@@ -136,6 +147,50 @@ def _forwarded_args(config) -> list[str]:
     if not config.option.verbose:
         out.append("-q")
     return out
+
+
+# The counts of a pytest summary line ("3 failed, 550 passed, 1 skipped,
+# 2 warnings in 801.46s (0:13:21)"), in the order pytest prints them.
+_SUMMARY = re.compile(r"=*\s*(\d+ \w+(?:, \d+ \w+)*) in [\d.]+s")
+_COUNT = re.compile(r"(\d+) (\w+)")
+_OUTCOMES = ("failed", "passed", "skipped", "deselected", "xfailed",
+             "xpassed", "warnings", "errors")
+
+
+def _summary_counts(line: str) -> dict[str, int]:
+    counts: dict[str, int] = {}
+    m = _SUMMARY.match(line)
+    for n, word in _COUNT.findall(m.group(1) if m else ""):
+        word = {"warning": "warnings", "error": "errors"}.get(word, word)
+        if word in _OUTCOMES:
+            counts[word] = counts.get(word, 0) + int(n)
+    return counts
+
+
+def _merge_junit(paths: list[str], dest: str, wall: float) -> None:
+    """Write one <testsuite> holding the test cases of every shard's
+    report, its counts summed and its time the whole run's wall time."""
+    import xml.etree.ElementTree as ET
+
+    merged = ET.Element("testsuite", name="pytest")
+    totals = dict.fromkeys(("errors", "failures", "skipped", "tests"), 0)
+    for p in paths:
+        if not os.path.exists(p):  # a killed shard wrote no report
+            continue
+        for suite in ET.parse(p).getroot().iter("testsuite"):
+            for k in totals:
+                totals[k] += int(suite.get(k, 0))
+            for k in ("timestamp", "hostname"):
+                if suite.get(k) and k not in merged.attrib:
+                    merged.set(k, suite.get(k))
+            merged.extend(suite)
+    merged.attrib.update({k: str(v) for k, v in totals.items()})
+    merged.set("time", f"{wall:.3f}")
+    root = ET.Element("testsuites")
+    root.append(merged)
+    os.makedirs(os.path.dirname(dest) or ".", exist_ok=True)
+    ET.ElementTree(root).write(dest, encoding="utf-8",
+                               xml_declaration=True)
 
 
 def pytest_cmdline_main(config):
@@ -163,6 +218,7 @@ def pytest_cmdline_main(config):
         os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
     )
     worker_cpus = str(max(2, cpus_total // len(shards)))
+    xmlpath = getattr(opt, "xmlpath", None)
     print(
         f"[conftest] whole-suite run: auto-sharding {sum(map(len, shards))} "
         f"test files across {len(shards)} workers "
@@ -184,6 +240,8 @@ def pytest_cmdline_main(config):
         }
         cmd = [sys.executable, "-m", "pytest", *files, *forwarded,
                "-p", "no:cacheprovider"]
+        if xmlpath:
+            cmd.append(f"--junitxml={os.path.join(cwd, 'junit.xml')}")
         out = open(os.path.join(cwd, "pytest.out"), "w+")
         procs.append(
             (
@@ -214,12 +272,15 @@ def pytest_cmdline_main(config):
         for _, p, _ in procs:
             p.kill()
     failed = 0
+    totals: dict[str, int] = {}
     for i, p, out in procs:
         rc = p.wait()
         out.seek(0)
         text = out.read()
         out.close()
         tail = [ln for ln in text.splitlines() if ln.strip()][-15:]
+        for k, n in _summary_counts(tail[-1] if tail else "").items():
+            totals[k] = totals.get(k, 0) + n
         took = f"{ended.get(i, time.time()) - t0:.0f}s"
         if i not in ended or rc not in (0, 5):  # 5: all deselected
             failed += 1
@@ -229,12 +290,25 @@ def pytest_cmdline_main(config):
         else:
             print(f"[shard {i}] {took}: {tail[-1] if tail else 'ok'}",
                   flush=True)
+    wall = time.time() - t0
+    if xmlpath:
+        _merge_junit(
+            [os.path.join(os.path.dirname(out.name), "junit.xml")
+             for _, _, out in procs],
+            os.path.join(str(config.invocation_params.dir), xmlpath),
+            wall,
+        )
     status = "ALL SHARDS PASSED" if failed == 0 else f"{failed} SHARDS FAILED"
     print(
         f"===== auto-shard: {status} "
-        f"({len(shards)} shards, wall {time.time() - t0:.0f}s) =====",
+        f"({len(shards)} shards, wall {wall:.0f}s) =====",
         flush=True,
     )
+    counts = ", ".join(
+        f"{totals[k]} {k}" for k in _OUTCOMES if totals.get(k)
+    ) or "no tests ran"
+    print(f"===== {counts} in {wall:.2f}s (all {len(shards)} shards) =====",
+          flush=True)
     if len(ended) < len(procs):
         return pytest.ExitCode.INTERRUPTED
     return 0 if failed == 0 else 1

@@ -1,22 +1,17 @@
-"""External JSON source, salted skew joins, stateful streaming sessions."""
+"""External JSON source, salted skew joins, bucketing, approximate
+distinct counts and temporal joins."""
 
 from __future__ import annotations
 
-import datetime
 import json
-import os
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from etl_data_warehouse_spark.operators.sessionize import sessionize
 from etl_data_warehouse_spark.operators.skew import salted_join, salted_sum
 from etl_data_warehouse_spark.sources.catalog import load_table
 from etl_data_warehouse_spark.sources.external import read_json_documents
-from etl_data_warehouse_spark.streaming.stateful_sessions import (
-    start_session_stream,
-)
 
 
 class TestJsonDocuments:
@@ -91,77 +86,6 @@ class TestSkew:
         assert {(r["l_returnflag"], r["s"]) for r in plain.collect()} == {
             (r["l_returnflag"], r["s"]) for r in salted.collect()
         }
-
-
-class TestStatefulSessions:
-    def _write(self, spark, d, rows):
-        spark.createDataFrame(rows, "user_id long, ts timestamp").coalesce(
-            1
-        ).write.mode("append").parquet(d)
-
-    def test_state_carries_across_microbatches(self, spark, tmp_path):
-        ts = datetime.datetime
-        input_dir, out, ckpt = (
-            str(tmp_path / "in"),
-            str(tmp_path / "out"),
-            str(tmp_path / "ck"),
-        )
-        os.makedirs(input_dir)
-        self._write(
-            spark,
-            input_dir,
-            [(1, ts(2024, 1, 1, 10, 0)), (1, ts(2024, 1, 1, 10, 10))],
-        )
-        q = start_session_stream(spark, input_dir, out, ckpt)
-        q.awaitTermination(120)
-        rows = spark.read.parquet(out).collect()
-        assert len(rows) == 1 and rows[0]["n_events"] == 2
-        # batch 2: one event continuing the session, one after the gap
-        self._write(
-            spark,
-            input_dir,
-            [(1, ts(2024, 1, 1, 10, 20)), (1, ts(2024, 1, 1, 12, 0))],
-        )
-        q2 = start_session_stream(spark, input_dir, out, ckpt)
-        q2.awaitTermination(120)
-        rows = {
-            r["session_idx"]: r for r in spark.read.parquet(out).collect()
-        }
-        assert len(rows) == 2
-        assert rows[1]["n_events"] == 3  # extended, not restarted
-        assert rows[2]["n_events"] == 1
-
-    def test_matches_batch_sessionizer(self, spark, tmp_path):
-        """The streaming operator must agree with the batch twin."""
-        ts = datetime.datetime
-        events = [
-            (u, ts(2024, 1, 1, 8) + datetime.timedelta(minutes=17 * i))
-            for u in (1, 2, 3)
-            for i in range(12)
-        ]
-        input_dir, out, ckpt = (
-            str(tmp_path / "in2"),
-            str(tmp_path / "out2"),
-            str(tmp_path / "ck2"),
-        )
-        os.makedirs(input_dir)
-        self._write(spark, input_dir, events)
-        q = start_session_stream(spark, input_dir, out, ckpt)
-        q.awaitTermination(120)
-        streamed = {
-            (r["user_id"], r["session_idx"]): r["n_events"]
-            for r in spark.read.parquet(out).collect()
-        }
-        batch_events = spark.createDataFrame(
-            [(i, t, u, "view", 0.0, "{}") for i, (u, t) in enumerate(events)],
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string",
-        )
-        batched = {
-            (r["user_id"], r["session_idx"]): r["n_events"]
-            for r in sessionize(batch_events).collect()
-        }
-        assert streamed == batched
 
 
 class TestBucketing:
@@ -332,140 +256,3 @@ class TestTemporalJoins:
             left, right, "k", "k2", "t", "t2", "id", direction="backward"
         ).collect()
         assert len(back) == 1 and back[0]["tag"] == "past"
-
-
-class TestTwsSessions:
-    """transformWithStateInPandas twin (Spark 4 StatefulProcessor +
-    RocksDB store) must carry state across batches and agree with both
-    the applyInPandasWithState operator and the batch sessionizer.
-    Skipped (except the gate test) when protobuf is absent — the
-    pyspark state-server protocol requires it (see tws_sessions)."""
-
-    def test_gate_raises_clearly_without_protobuf(self, spark, tmp_path):
-        from etl_data_warehouse_spark.streaming.tws_sessions import (
-            start_tws_session_stream,
-            tws_available,
-        )
-
-        if tws_available():
-            pytest.skip("protobuf present; gate not exercisable")
-        with pytest.raises(ImportError, match="protobuf"):
-            start_tws_session_stream(
-                spark, str(tmp_path), str(tmp_path / "o"), str(tmp_path / "c")
-            )
-
-    def test_processor_pickles_by_value(self):
-        """The worker unpickles the processor WITHOUT this repo on its
-        sys.path — the class must serialize by value (local class), not
-        by reference to etl_data_warehouse_spark."""
-        import pickle
-
-        from etl_data_warehouse_spark.streaming.tws_sessions import (
-            make_session_processor,
-        )
-
-        try:
-            from pyspark import cloudpickle  # noqa
-            dumps = cloudpickle.dumps
-        except ImportError:
-            from pyspark.serializers import CloudPickleSerializer
-
-            dumps = CloudPickleSerializer().dumps
-        blob = dumps(make_session_processor(60000))
-        # Round-trip in a subprocess whose sys.path does NOT include
-        # this repo — exactly the worker's situation.
-        import base64
-        import subprocess
-        import sys
-
-        code = (
-            "import sys; sys.path = [p for p in sys.path if 'repo' not in p];"
-            "import base64, pickle;"
-            "obj = pickle.loads(base64.b64decode(sys.argv[1]));"
-            "print(type(obj).__name__)"
-        )
-        out = subprocess.run(
-            [sys.executable, "-c", code, base64.b64encode(blob).decode()],
-            capture_output=True,
-            text=True,
-            cwd="/tmp",
-        )
-        assert out.returncode == 0, out.stderr[-500:]
-        assert out.stdout.strip() == "SessionProcessor"
-        del pickle
-
-    def _write(self, spark, d, rows):
-        spark.createDataFrame(rows, "user_id long, ts timestamp").coalesce(
-            1
-        ).write.mode("append").parquet(d)
-
-    def test_state_carries_across_microbatches(self, spark, tmp_path):
-        pytest.importorskip("google.protobuf")
-        from etl_data_warehouse_spark.streaming.tws_sessions import (
-            start_tws_session_stream,
-        )
-
-        ts = datetime.datetime
-        input_dir, out, ckpt = (
-            str(tmp_path / "tin"),
-            str(tmp_path / "tout"),
-            str(tmp_path / "tck"),
-        )
-        os.makedirs(input_dir)
-        self._write(
-            spark,
-            input_dir,
-            [(1, ts(2024, 1, 1, 10, 0)), (1, ts(2024, 1, 1, 10, 10))],
-        )
-        q = start_tws_session_stream(spark, input_dir, out, ckpt)
-        q.awaitTermination(120)
-        rows = spark.read.parquet(out).collect()
-        assert len(rows) == 1 and rows[0]["n_events"] == 2
-        self._write(
-            spark,
-            input_dir,
-            [(1, ts(2024, 1, 1, 10, 20)), (1, ts(2024, 1, 1, 12, 0))],
-        )
-        q2 = start_tws_session_stream(spark, input_dir, out, ckpt)
-        q2.awaitTermination(120)
-        rows = {
-            r["session_idx"]: r for r in spark.read.parquet(out).collect()
-        }
-        assert len(rows) == 2
-        assert rows[1]["n_events"] == 3  # extended across the restart
-        assert rows[2]["n_events"] == 1
-
-    def test_matches_applyinpandas_twin(self, spark, tmp_path):
-        pytest.importorskip("google.protobuf")
-        from etl_data_warehouse_spark.streaming.tws_sessions import (
-            start_tws_session_stream,
-        )
-
-        ts = datetime.datetime
-        events = [
-            (u, ts(2024, 1, 1, 8) + datetime.timedelta(minutes=13 * i))
-            for u in (1, 2, 3)
-            for i in range(15)
-        ]
-        base = {
-            "in": str(tmp_path / "ain"),
-            "out_a": str(tmp_path / "aout"),
-            "ck_a": str(tmp_path / "ack"),
-            "out_t": str(tmp_path / "tout2"),
-            "ck_t": str(tmp_path / "tck2"),
-        }
-        os.makedirs(base["in"])
-        self._write(spark, base["in"], events)
-        qa = start_session_stream(spark, base["in"], base["out_a"], base["ck_a"])
-        qa.awaitTermination(120)
-        qt = start_tws_session_stream(
-            spark, base["in"], base["out_t"], base["ck_t"]
-        )
-        qt.awaitTermination(120)
-        a = sorted(
-            tuple(r) for r in spark.read.parquet(base["out_a"]).collect()
-        )
-        t = sorted(
-            tuple(r) for r in spark.read.parquet(base["out_t"]).collect()
-        )
-        assert a == t and a

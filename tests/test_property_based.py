@@ -400,8 +400,8 @@ def test_cdc_fold_matches_reference(spark_global, changes):
 def test_cdc_batched_merge_converges(spark_global, changes, cut):
     """Splitting the changelog at any ts cut and folding the two
     batches through merge_changelog (tombstones retained) yields the
-    same live state as one fold over everything — the cdc_stream
-    convergence contract, property-tested."""
+    same live state as one fold over everything — the convergence
+    contract an incremental CDC materializer relies on, property-tested."""
     from pyspark.sql import functions as F
 
     from etl_data_warehouse_spark.operators.cdc import (

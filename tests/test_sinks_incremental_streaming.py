@@ -724,150 +724,3 @@ class TestStreamingDedup:
         out = spark.read.parquet(out_dir)
         assert out.filter("order_id = 1").count() == 1
         assert out.filter("order_id = 3").count() == 1
-
-
-class TestStreamStaticEnrichment:
-    def _write_orders(self, spark, input_dir, rows):
-        spark.createDataFrame(
-            rows,
-            "order_id long, customer_id long, order_ts timestamp, amount double",
-        ).coalesce(1).write.mode("append").parquet(input_dir)
-
-    def test_enriched_rollup_equals_batch_twin_and_sees_dim_refresh(
-        self, spark, tmp_path, sf_dir
-    ):
-        import datetime
-
-        from etl_data_warehouse_spark.sources.catalog import load_table
-        from etl_data_warehouse_spark.streaming.enriched_stream import (
-            enrich_orders,
-            segment_revenue_aggregate,
-            start_enriched_stream,
-        )
-
-        ts = datetime.datetime
-        input_dir = str(tmp_path / "in")
-        out_path = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-        os.makedirs(input_dir)
-        customers = load_table(spark, "customer", sf_dir)
-        known = [r["c_custkey"] for r in customers.limit(3).collect()]
-        rows = [
-            (1, known[0], ts(2024, 2, 1, 10), 10.0),
-            (2, known[1], ts(2024, 2, 1, 11), 20.0),
-            (3, known[2], ts(2024, 2, 2, 9), 5.0),
-            (4, 10**12, ts(2024, 2, 2, 10), 7.0),  # orphan
-        ]
-        self._write_orders(spark, input_dir, rows)
-        q = start_enriched_stream(spark, input_dir, customers, out_path, ckpt)
-        q.awaitTermination(120)
-        got = sorted(
-            (str(r["sales_date"]), r["segment"], r["revenue"], r["order_count"])
-            for r in spark.read.parquet(out_path).collect()
-        )
-        # batch twin over the same rows
-        batch = spark.createDataFrame(
-            rows,
-            "order_id long, customer_id long, order_ts timestamp, amount double",
-        )
-        want = sorted(
-            (str(r["sales_date"]), r["segment"], r["revenue"], r["order_count"])
-            for r in segment_revenue_aggregate(
-                enrich_orders(batch, customers)
-            ).collect()
-        )
-        assert got == want
-        assert any(seg == "UNKNOWN" for _, seg, _, _ in got)  # orphan kept
-
-        # dim refresh between triggers: the formerly-orphan key appears
-        # in the static side; the next microbatch resolves it without a
-        # new query plan
-        fixed = customers.limit(1).select(
-            F.lit(10**12).alias("c_custkey"),
-            *[F.col(c) for c in customers.columns if c != "c_custkey"],
-        )
-        refreshed = customers.union(fixed.select(customers.columns))
-        self._write_orders(
-            spark, input_dir, [(5, 10**12, ts(2024, 2, 3, 8), 9.0)]
-        )
-        q2 = start_enriched_stream(spark, input_dir, refreshed, out_path, ckpt)
-        q2.awaitTermination(120)
-        day3 = [
-            r
-            for r in spark.read.parquet(out_path).collect()
-            if str(r["sales_date"]) == "2024-02-03"
-        ]
-        assert len(day3) == 1 and day3[0]["segment"] != "UNKNOWN"
-
-
-class TestMergeInto:
-    """MERGE INTO surface (sources/merge.py): statement generation,
-    capability gate, and join-merge parity (reference ON CONFLICT,
-    warehouse_loader.py:55-83)."""
-
-    def test_merge_sql_do_update(self):
-        from etl_data_warehouse_spark.sources.merge import merge_sql
-
-        sql = merge_sql(
-            "wh.dim_customers", "batch", ["customer_id"],
-            ["customer_id", "name", "tier"],
-        )
-        assert sql == (
-            "MERGE INTO wh.dim_customers t\n"
-            "USING batch s\n"
-            "ON t.customer_id = s.customer_id\n"
-            "WHEN MATCHED THEN UPDATE SET t.name = s.name, t.tier = s.tier\n"
-            "WHEN NOT MATCHED THEN INSERT (customer_id, name, tier) "
-            "VALUES (s.customer_id, s.name, s.tier)"
-        )
-
-    def test_merge_sql_do_nothing(self):
-        from etl_data_warehouse_spark.sources.merge import merge_sql
-
-        sql = merge_sql(
-            "t", "s", ["k"], ["k", "v"], insert_only=True
-        )
-        assert "WHEN MATCHED" not in sql
-        assert "WHEN NOT MATCHED THEN INSERT (k, v)" in sql
-
-    def test_gate_false_in_vanilla_session_and_fallback_parity(
-        self, spark, tmp_path
-    ):
-        from etl_data_warehouse_spark.sources.merge import (
-            catalog_supports_merge,
-            merge_into,
-        )
-
-        assert not catalog_supports_merge(spark)
-        p_merge = str(tmp_path / "via_merge")
-        p_twin = str(tmp_path / "via_upsert")
-        base = _dim(spark, [(10, "ann"), (20, "bob")])
-        batch = _dim(spark, [(20, "bob2"), (30, "cat")])
-        for p in (p_merge, p_twin):
-            merge_upsert(spark, base, p, ["customer_id"])
-        counts = merge_into(
-            spark, batch, ["customer_id"], target_table="wh.dim", path=p_merge
-        )
-        twin = merge_upsert(spark, batch, p_twin, ["customer_id"])
-        assert counts == twin == {"inserted": 1, "updated": 1}
-        a = sorted(map(tuple, spark.read.parquet(p_merge).collect()))
-        b = sorted(map(tuple, spark.read.parquet(p_twin).collect()))
-        assert a == b
-
-    def test_insert_only_fallback(self, spark, tmp_path):
-        from etl_data_warehouse_spark.sources.merge import merge_into
-
-        p = str(tmp_path / "ins_only")
-        merge_into(
-            spark, _dim(spark, [(1, "a")]), ["customer_id"], path=p
-        )
-        out = merge_into(
-            spark, _dim(spark, [(1, "A2"), (2, "b")]), ["customer_id"],
-            path=p, insert_only=True,
-        )
-        assert out == {"inserted": 1, "updated": 0}
-        rows = {
-            r["customer_id"]: r["name"]
-            for r in spark.read.parquet(p).collect()
-        }
-        assert rows == {1: "a", 2: "b"}  # DO NOTHING kept the old row
