@@ -45,7 +45,6 @@ from pyspark.sql import functions as F
 from .pq import (
     ivfadc_topk,
     pack_codes,
-    pack_encode_arrow,
     pq_encode,
     train_pq_codebooks,
 )
@@ -55,7 +54,6 @@ from .similarity import kmeans_centroids, rank_cells, with_norm
 def _assign_cells(
     vectors: DataFrame,
     centroids: DataFrame,
-    assign_arrow: bool,
     vec_col: str,
 ) -> DataFrame:
     from .pq import _dot
@@ -63,11 +61,8 @@ def _assign_cells(
     # Pure assignment: cosine RANKING per row is invariant to the
     # row's own norm (it scales every cell's score equally), so vn is
     # pinned to 1.0 instead of paying the interpreted norm fold over
-    # the whole corpus, and emit_vectors=False keeps the (opaque to
-    # column pruning) arrow pass from shipping every vector back out
-    # of Python just to be dropped (r14 — together with the kmeans
-    # spread fix this took the 1M ivf_pq_index assign stage from 57s
-    # to single digits).
+    # the whole corpus. Only (vid, cell_id) is read, so Catalyst prunes
+    # vv/vn from rank_cells' Generate output.
     para = vectors.sparkSession.sparkContext.defaultParallelism
     v = vectors.repartition(para, "vec_id").select(
         F.col("vec_id").alias("vid"),
@@ -77,9 +72,9 @@ def _assign_cells(
     cents = centroids.select(
         "cell_id", "cv", F.sqrt(_dot("cv", "cv")).alias("cn")
     )
-    return rank_cells(
-        v, cents, 1, assign_arrow=assign_arrow, emit_vectors=False
-    ).select(F.col("vid").alias("vec_id"), "cell_id")
+    return rank_cells(v, cents, 1).select(
+        F.col("vid").alias("vec_id"), "cell_id"
+    )
 
 
 def build_ivf_pq_index(
@@ -92,7 +87,6 @@ def build_ivf_pq_index(
     pq_iterations: int = 4,
     pq_train_limit: int | None = 10000,
     coarse_train_limit: int | None = None,
-    assign_arrow: bool = False,
     vec_col: str = "embedding",
 ) -> None:
     """Train quantizer state on the corpus (PQ codebooks on the
@@ -103,15 +97,11 @@ def build_ivf_pq_index(
     ``coarse_train_limit`` subsamples coarse-quantizer TRAINING the
     same way (the FAISS max_points_per_centroid move — ~64-256 points
     per cell train centroids as good as the full corpus; the FULL
-    corpus is still assigned afterwards). ``assign_arrow=True`` also
-    routes corpus encoding through ``pack_encode_arrow`` — one Arrow
-    pass instead of the N·m·codes-row fold ranking — and, when
-    ``pq_train_limit`` bounds the training set, PQ codebook training
-    through the driver-side numpy twin (train_pq_codebooks_numpy:
-    the distributed fold trainer spends minutes of interpreted
-    HOF-assignment jobs on a 10K sample a laptop Lloyd's finishes in
-    milliseconds); same BLAS-ulp caveat either way, so deterministic
-    replay keeps the default fold paths."""
+    corpus is still assigned afterwards). Training, encoding and
+    assignment run the DataFrame folds only; the retired numpy
+    trainer and Arrow encode/assign twins read with
+    ``git show 44b50ce:etl_data_warehouse_spark/operators/ann_index.py``
+    (and ``.../operators/pq.py``)."""
     train_c = vectors
     if coarse_train_limit is not None:
         train_c = vectors.orderBy("vec_id").limit(coarse_train_limit)
@@ -120,30 +110,18 @@ def build_ivf_pq_index(
         n_cells=n_cells,
         max_iterations=coarse_iterations,
         vec_col=vec_col,
-        assign_arrow=assign_arrow,
     )
     train = vectors
     if pq_train_limit is not None:
         train = vectors.orderBy("vec_id").limit(pq_train_limit)
-    if assign_arrow and pq_train_limit is not None:
-        from .pq import train_pq_codebooks_numpy
-
-        books = train_pq_codebooks_numpy(
-            train, m=m, codes=codes, max_iterations=pq_iterations,
-            vec_col=vec_col,
-        )
-    else:
-        books = train_pq_codebooks(
-            train, m=m, codes=codes, max_iterations=pq_iterations,
-            vec_col=vec_col,
-        )
+    books = train_pq_codebooks(
+        train, m=m, codes=codes, max_iterations=pq_iterations,
+        vec_col=vec_col,
+    )
     cents.write.mode("overwrite").parquet(f"{index_dir}/centroids")
     books.write.mode("overwrite").parquet(f"{index_dir}/codebooks")
-    if assign_arrow:
-        packed = pack_encode_arrow(vectors, books, vec_col=vec_col)
-    else:
-        packed = pack_codes(pq_encode(vectors, books, vec_col=vec_col), books)
-    assigned = _assign_cells(vectors, cents, assign_arrow, vec_col)
+    packed = pack_codes(pq_encode(vectors, books, vec_col=vec_col), books)
+    assigned = _assign_cells(vectors, cents, vec_col)
     packed.write.mode("overwrite").parquet(f"{index_dir}/packed/batch=0")
     assigned.write.mode("overwrite").parquet(f"{index_dir}/assigned/batch=0")
 
@@ -192,7 +170,6 @@ def append_to_ivf_index(
     new_vectors: DataFrame,
     index_dir: str,
     batch_id: int,
-    assign_arrow: bool = False,
     vec_col: str = "embedding",
     skip_indexed: bool = True,
 ) -> None:
@@ -215,18 +192,11 @@ def append_to_ivf_index(
         # every id was a re-crawl — nothing to encode, and writing
         # nothing keeps the batch dirs absent consistently on replay
         return
-    if assign_arrow:
-        packed = pack_encode_arrow(
-            new_vectors, idx["codebooks"], vec_col=vec_col
-        )
-    else:
-        packed = pack_codes(
-            pq_encode(new_vectors, idx["codebooks"], vec_col=vec_col),
-            idx["codebooks"],
-        )
-    assigned = _assign_cells(
-        new_vectors, idx["centroids"], assign_arrow, vec_col
+    packed = pack_codes(
+        pq_encode(new_vectors, idx["codebooks"], vec_col=vec_col),
+        idx["codebooks"],
     )
+    assigned = _assign_cells(new_vectors, idx["centroids"], vec_col)
     packed.write.mode("overwrite").parquet(
         f"{index_dir}/packed/batch={batch_id}"
     )
@@ -242,7 +212,6 @@ def query_ivf_pq_index(
     k: int = 5,
     nprobe: int = 8,
     refine_factor: int = 10,
-    assign_arrow: bool = False,
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Top-k ANN against the persisted index: probe + compressed-domain
@@ -260,7 +229,6 @@ def query_ivf_pq_index(
         assigned=idx["assigned"],
         refine_factor=refine_factor,
         vec_col=vec_col,
-        assign_arrow=assign_arrow,
     )
 
 
@@ -270,8 +238,6 @@ def incremental_semantic_dedup(
     index_dir: str,
     threshold: float = 0.95,
     shortlist: int | None = None,
-    assign_arrow: bool = False,
-    refine_arrow: bool = False,
     vec_col: str = "embedding",
     sort: bool = True,
 ) -> DataFrame:
@@ -304,14 +270,6 @@ def incremental_semantic_dedup(
     occupancy, recall-traded below. Within-batch candidates are never
     pruned (the batch is the small side by construction).
 
-    ``refine_arrow=True`` replaces the per-pair fold cosine with one
-    numpy gram matrix per cell (grouped applyInPandas — the
-    semantic_dedup pairs_arrow discipline): the hot scale path (~5x at
-    the 1M+100K XL point; fold cosines are interpreted). Same caveat
-    as every BLAS twin — summation order can flip exact-threshold
-    ties, so the fold path stays the test-pinned default. Mutually
-    exclusive with ``shortlist``.
-
     Re-running the verdict is idempotent, INCLUDING after the batch was
     appended to the index (append_to_ivf_index): the batch's own rows
     enter ``assigned`` but `earlier < vec_id` excludes self-pairs and
@@ -326,18 +284,11 @@ def incremental_semantic_dedup(
     from .pq import _dot, _subvectors, _vec_dim
     from .similarity import with_norm
 
-    if refine_arrow and shortlist is not None:
-        raise ValueError("refine_arrow and shortlist are mutually exclusive")
     spark = new_vectors.sparkSession
     idx = load_ivf_pq_index(spark, index_dir)
     assigned_new = _assign_cells(
-        new_vectors, idx["centroids"], assign_arrow, vec_col
+        new_vectors, idx["centroids"], vec_col
     ).localCheckpoint()  # batch-sized: reused by 3 consumers
-    if refine_arrow:
-        return _arrow_verdicts(
-            corpus, new_vectors, idx, assigned_new, threshold, vec_col,
-            sort=sort,
-        )
 
     n = assigned_new.select("vec_id", "cell_id")
     cand_idx = (
@@ -423,78 +374,6 @@ def incremental_semantic_dedup(
         )
         .groupBy("vec_id")
         .agg(F.min("earlier_id").alias("dup_of"))
-    )
-    out = (
-        assigned_new.join(dups, "vec_id", "left")
-        .select(
-            "vec_id",
-            "cell_id",
-            F.col("dup_of").isNull().alias("kept"),
-            "dup_of",
-        )
-    )
-    return out.orderBy("vec_id") if sort else out
-
-
-def _arrow_verdicts(
-    corpus: DataFrame,
-    new_vectors: DataFrame,
-    idx: dict,
-    assigned_new: DataFrame,
-    threshold: float,
-    vec_col: str,
-    sort: bool = True,
-) -> DataFrame:
-    """refine_arrow path of :func:`incremental_semantic_dedup`: one
-    numpy gram matrix per TOUCHED cell instead of per-pair fold
-    cosines. Ships only the raw vectors of cells that received a new
-    vector (semi-join pruned corpus read); per-cell memory is
-    n_new x n_cell doubles — bounded by the same n_cells knob that
-    bounds the fold path's candidate count."""
-    import numpy as np
-    import pandas as pd
-
-    tau = float(threshold)
-    cells = assigned_new.select("cell_id").distinct()
-    refs = idx["assigned"].join(F.broadcast(cells), "cell_id", "left_semi")
-    ref_raw = refs.join(corpus.select("vec_id", vec_col), "vec_id").select(
-        "cell_id", "vec_id", F.col(vec_col).alias("vv"),
-        F.lit(False).alias("is_new"),
-    )
-    new_raw = assigned_new.join(
-        new_vectors.select("vec_id", vec_col), "vec_id"
-    ).select(
-        "cell_id", "vec_id", F.col(vec_col).alias("vv"),
-        F.lit(True).alias("is_new"),
-    )
-
-    def prune(pdf):
-        new_mask = pdf["is_new"].to_numpy().astype(bool)
-        if not new_mask.any():
-            return pd.DataFrame({"vec_id": [], "dup_of": []}).astype(
-                {"vec_id": "int64", "dup_of": "int64"}
-            )
-        ids = pdf["vec_id"].to_numpy()
-        V = np.stack([np.asarray(x, dtype=np.float64) for x in pdf["vv"]])
-        V = V / np.linalg.norm(V, axis=1)[:, None]
-        new_idx = np.where(new_mask)[0]
-        sims = V[new_idx] @ V.T  # (n_new, n_cell)
-        earlier = ids[None, :] < ids[new_idx][:, None]
-        hit = (sims >= tau) & earlier
-        out_ids, out_dup = [], []
-        for r, i in enumerate(new_idx):
-            js = np.where(hit[r])[0]
-            if js.size:
-                out_ids.append(ids[i])
-                out_dup.append(ids[js].min())
-        return pd.DataFrame({"vec_id": out_ids, "dup_of": out_dup}).astype(
-            {"vec_id": "int64", "dup_of": "int64"}
-        )
-
-    dups = (
-        ref_raw.unionByName(new_raw)
-        .groupBy("cell_id")
-        .applyInPandas(prune, "vec_id bigint, dup_of bigint")
     )
     out = (
         assigned_new.join(dups, "vec_id", "left")
@@ -628,7 +507,6 @@ def append_to_whitened_ivf_index(
     index_dir: str,
     batch_id: int,
     vec_col: str = "embedding",
-    skip_indexed: bool = True,
     **kw,
 ) -> None:
     """append_to_ivf_index under the frozen whitening model, extending
@@ -662,10 +540,7 @@ def append_to_whitened_ivf_index(
             "be rebuilt with build_whitened_ivf_pq_index before "
             "appending"
         )
-    if skip_indexed:
-        new_vectors = _drop_crossbatch_recrawls(
-            new_vectors, index_dir, batch_id
-        )
+    new_vectors = _drop_crossbatch_recrawls(new_vectors, index_dir, batch_id)
     proj = _project_frozen(new_vectors, model, vec_col).localCheckpoint()
     if not proj.take(1):
         # every id was a re-crawl — write nothing, consistently

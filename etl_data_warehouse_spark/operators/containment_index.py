@@ -247,12 +247,11 @@ def append_to_containment_index(
     max_df: int | None = 1000,
     buckets: int | None = None,
     table_prefix: str | None = None,
-    skip_indexed: bool = True,
     shingles: DataFrame | None = None,
 ) -> None:
     """Make a probed batch part of the corpus: stop set, df counts and
-    sketches. ``skip_indexed`` anti-joins away doc_ids already in the
-    sketch table, making the append idempotent.
+    sketches. doc_ids already in the sketch table are anti-joined away
+    first, making the append idempotent.
 
     ``shingles``: an already-materialized ``hashed_shingles(new_docs,
     n)`` frame for the SAME batch (dedup_index.append_to_index's
@@ -268,28 +267,23 @@ def append_to_containment_index(
     spark = new_docs.sparkSession
     sk_table = f"{table_prefix}_ctsketches" if table_prefix else None
     df_table = f"{table_prefix}_ctdf" if table_prefix else None
-    if skip_indexed:
-        indexed = (
-            _read_sketches(spark, index_dir, sk_table)
-            .select("doc_id")
-            .distinct()
-        )
-        # one index-sized distinct probe → batch-sized fresh-id set →
-        # broadcast semi-joins (the append_to_index discipline: the
-        # probe agg must not re-run once per filtered frame)
-        fresh = (
-            new_docs.select("doc_id")
-            .distinct()
-            .join(indexed, "doc_id", "left_anti")
-            .localCheckpoint()
-        )
-        if not fresh.take(1):
-            return
-        new_docs = new_docs.join(F.broadcast(fresh), "doc_id", "left_semi")
-        if shingles is not None:
-            shingles = shingles.join(
-                F.broadcast(fresh), "doc_id", "left_semi"
-            )
+    indexed = (
+        _read_sketches(spark, index_dir, sk_table).select("doc_id").distinct()
+    )
+    # one index-sized distinct probe → batch-sized fresh-id set →
+    # broadcast semi-joins (the append_to_index discipline: the probe
+    # agg must not re-run once per filtered frame)
+    fresh = (
+        new_docs.select("doc_id")
+        .distinct()
+        .join(indexed, "doc_id", "left_anti")
+        .localCheckpoint()
+    )
+    if not fresh.take(1):
+        return
+    new_docs = new_docs.join(F.broadcast(fresh), "doc_id", "left_semi")
+    if shingles is not None:
+        shingles = shingles.join(F.broadcast(fresh), "doc_id", "left_semi")
     sh = (
         shingles
         if shingles is not None

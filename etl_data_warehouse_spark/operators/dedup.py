@@ -260,7 +260,6 @@ def containment_keep_longest_indexed(
     k: int = 8,
     min_hits: int = 1,
     max_df: int | None = 1000,
-    sketch_df_filter: bool = True,
 ) -> DataFrame:
     """Scale path of :func:`containment_keep_longest`: the same
     per-document verdicts decided from containment_pairs_indexed's
@@ -282,11 +281,10 @@ def containment_keep_longest_indexed(
 
     The corpus shingle table is shared across candidates, verify, and
     the sizes agg via _shingles_shared's repartition Exchange (one
-    materialization, three consumers)."""
+    materialization, three consumers). The sketch is drawn from the
+    df-filtered shingle set (containment_pairs_indexed's default)."""
     sh = _shingles_shared(docs, n)
-    cand = _containment_candidates(
-        sh, k, min_hits, max_df, sketch_df_filter
-    ).localCheckpoint()
+    cand = _containment_candidates(sh, k, min_hits, max_df).localCheckpoint()
     pairs = verify_containment_pairs(cand, sh, threshold)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
     return _keep_longest_verdicts(pairs, sizes, docs.select("doc_id"))
@@ -605,99 +603,24 @@ def hashed_shingles(docs: DataFrame, n: int = 3) -> DataFrame:
     return base.select("doc_id", F.explode(hs).alias("shingle"))
 
 
-def _minhash_signatures_arrow(
-    sh: DataFrame, num_hashes: int, *, co_located: bool = False
-) -> DataFrame:
-    """(doc_id, mh_0..mh_{num_hashes-1}) MinHash signatures via one
-    Arrow/numpy pass — the ``assign_arrow`` pattern for the signature
-    aggregation: the 64 affine permutations become ONE vectorized
-    (chunk x 64) matrix op instead of 64 codegen'd MIN-agg expressions
-    per row, ~2x the JVM agg at 10^5+ docs and it removes the
-    signature shuffle entirely.
-
-    CONTRACT: ALL of a doc's shingle rows must sit in one partition —
-    exactly hashed_shingles' layout (its pre-explode repartition;
-    Generate/Filter/localCheckpoint preserve partitioning). A table
-    re-shuffled on another key (e.g. after a shingle-keyed join) would
-    yield duplicate doc_id rows with partial-min signatures — wrong
-    band rows, no error — so the DEFAULT (``co_located=False``)
-    restores the contract with a doc_id repartition; callers that
-    provably feed hashed_shingles' layout (band_table's documented
-    input) pass ``co_located=True`` to skip the redundant Exchange on
-    the 10^6 hot path. Per-partition state is #docs x num_hashes int64
-    (cross-chunk minimum merge), megabytes at the 10^6 operating
-    point. Bit-identical to the JVM agg (integer min over the same
-    affine mixes — pinned in TestArrowSignatures, incl. the
-    re-shuffled-input case)."""
-    import numpy as np
-    import pandas as pd
-
-    if not co_located:
-        sh = sh.repartition("doc_id")
-
-    a_vec = np.array(
-        [a for a, _ in _MINHASH_COEFFS[:num_hashes]], dtype=np.int64
-    )
-    b_vec = np.array(
-        [b for _, b in _MINHASH_COEFFS[:num_hashes]], dtype=np.int64
-    )
-    cols = [f"mh_{j}" for j in range(num_hashes)]
-    schema = "doc_id long, " + ", ".join(f"{c} long" for c in cols)
-
-    def gen(batches):
-        acc: dict[int, object] = {}
-        for pdf in batches:
-            # numpy % with a positive modulus is non-negative == pmod;
-            # h30 < 2^30 and a < 2^30 keep h30*a + b < 2^60 (int64-safe,
-            # the same bound the JVM expressions rely on)
-            h30 = pdf["shingle"].to_numpy(dtype=np.int64) % _P30
-            sig = (h30[:, None] * a_vec + b_vec) % _P30
-            part = pd.DataFrame(sig)
-            part["doc_id"] = pdf["doc_id"].to_numpy(dtype=np.int64)
-            mins = part.groupby("doc_id", sort=False).min()
-            for did, row in zip(mins.index.to_numpy(), mins.to_numpy()):
-                prev = acc.get(did)
-                acc[did] = row if prev is None else np.minimum(prev, row)
-        if acc:
-            out = pd.DataFrame(
-                np.vstack(list(acc.values())), columns=cols
-            )
-            out.insert(
-                0,
-                "doc_id",
-                np.fromiter(acc.keys(), dtype=np.int64, count=len(acc)),
-            )
-            yield out
-
-    return sh.mapInPandas(gen, schema=schema)
-
-
 def band_table(
     sh: DataFrame,
     num_hashes: int = 64,
     bands: int = 32,
-    arrow: bool = False,
 ) -> DataFrame:
     """(doc_id, band_idx, bh) banded MinHash signatures from a hashed
     shingle table — the LSH index rows (persist these for incremental
-    dedup, see dedup_index.py). ``arrow=True`` computes the signatures
-    with the numpy twin (_minhash_signatures_arrow — bit-identical;
-    the 10^6 execution mode); the band hashes stay JVM xxhash64 in both
-    modes, so band values are comparable across persisted indexes
-    regardless of how their signatures were computed. ``sh`` must be
-    hashed_shingles output (doc-co-located by its pre-explode
-    repartition) — the arrow twin relies on that layout and is told so
-    here (co_located=True); feed anything re-shuffled on another key
-    through _minhash_signatures_arrow's safe default instead."""
+    dedup, see dedup_index.py). Signatures are one JVM MIN-agg per
+    permutation and band hashes are xxhash64, so band values are
+    comparable across persisted indexes. The retired numpy signature
+    twin reads with
+    ``git show 44b50ce:etl_data_warehouse_spark/operators/dedup.py``."""
     rows_per_band = num_hashes // bands
-    if arrow:
-        sig = _minhash_signatures_arrow(sh, num_hashes, co_located=True)
-    else:
-        sig = (
-            sh.withColumn("h30", F.pmod(F.col("shingle"), F.lit(_P30)))
-            .groupBy("doc_id")
-            .agg(*_minhash_aggs(num_hashes))
-        )
+    sig = (
+        sh.withColumn("h30", F.pmod(F.col("shingle"), F.lit(_P30)))
+        .groupBy("doc_id")
+        .agg(*_minhash_aggs(num_hashes))
+    )
     band_cols = [
         F.xxhash64(
             F.lit(b), *[f"mh_{b * rows_per_band + r}" for r in range(rows_per_band)]
@@ -797,7 +720,6 @@ def minhash_lsh_pairs(
     bands: int = 32,
     threshold: float = JACCARD_THRESHOLD,
     n: int = 3,
-    arrow: bool = False,
 ) -> DataFrame:
     """MinHash + banded LSH candidate generation, exact-Jaccard verify.
 
@@ -813,15 +735,8 @@ def minhash_lsh_pairs(
     # and the verify join (otherwise Spark re-shingles three times);
     # collision-safety of the long-hashed shingles documented on
     # hashed_shingles.
-    # ``arrow`` switches the signature aggregation to the bit-identical
-    # numpy twin (_minhash_signatures_arrow; TestArrowSignatures) —
-    # same output either way. Measured r13: for THIS one-shot shape the
-    # JVM agg wins at 5K–100K docs (fold 4.6–6.2s vs arrow 10.7–23.5s
-    # at 100K — the whole checkpointed shingle table crosses to Python
-    # per run); the arrow twin pays off in the persisted-index builds
-    # (dedup_index), where it also removes the signature shuffle.
     sh = hashed_shingles(docs, n).localCheckpoint()
-    banded = band_table(sh, num_hashes, bands, arrow=arrow)
+    banded = band_table(sh, num_hashes, bands)
     left = banded.select(
         F.col("doc_id").alias("doc_a"), "band_idx", "bh"
     )

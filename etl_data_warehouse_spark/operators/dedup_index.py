@@ -98,7 +98,6 @@ def build_minhash_index(
     n: int = 3,
     buckets: int | None = None,
     table_prefix: str | None = None,
-    arrow: bool = False,
 ) -> None:
     """One-time (or per-backfill) index build: persist band and shingle
     tables for the corpus.
@@ -111,7 +110,7 @@ def build_minhash_index(
     shuffles), which is the 100 TB posture: the per-batch join cost is
     O(batch), never O(corpus)."""
     sh = hashed_shingles(docs, n).localCheckpoint()
-    bt = band_table(sh, num_hashes, bands, arrow=arrow)
+    bt = band_table(sh, num_hashes, bands)
     if buckets:
         if not table_prefix:
             raise ValueError("bucketed index build requires table_prefix")
@@ -136,8 +135,6 @@ def append_to_index(
     n: int = 3,
     buckets: int | None = None,
     table_prefix: str | None = None,
-    skip_indexed: bool = True,
-    arrow: bool = False,
     shingles: DataFrame | None = None,
     bands_df: DataFrame | None = None,
 ) -> None:
@@ -145,53 +142,46 @@ def append_to_index(
     index tables. Append-only (no rewrite of existing index files);
     per-document state means the result equals a fresh full build.
 
-    ``skip_indexed`` (default on) makes the append IDEMPOTENT: doc_ids
-    already present are anti-joined away first, so a re-run after a
-    partial failure cannot double-insert shingle rows (verify_pairs
-    counts rows — duplicates would inflate intersections and corrupt
-    Jaccard). The probe reads only the shingle table's doc_id column
-    (column-pruned scan; bucketed-on-doc_id when the index is bucketed).
-    Pass skip_indexed=False only when doc_ids are guaranteed fresh and
-    the probe scan is worth skipping.
+    The append is IDEMPOTENT: doc_ids already present are anti-joined
+    away first, so a re-run after a partial failure cannot double-insert
+    shingle rows (verify_pairs counts rows — duplicates would inflate
+    intersections and corrupt Jaccard). The probe reads only the
+    shingle table's doc_id column (column-pruned scan;
+    bucketed-on-doc_id when the index is bucketed).
 
     ``shingles`` / ``bands_df``: already-materialized
     ``hashed_shingles(new_docs, n)`` / ``band_table(shingles, ...)``
     frames (same parameters), so a caller that has ALREADY shingled
     and signed the batch (day-2's incremental_dedup probe, or its
     containment-arm sibling append) feeds both uses one computation.
-    The skip_indexed anti-join is applied to them here — pass the full
+    The idempotency anti-join is applied to them here — pass the full
     batch's frames, not pre-filtered ones."""
     spark = new_docs.sparkSession
-    if skip_indexed:
-        indexed = (
-            _read_shingles(
-                spark, index_dir,
-                f"{table_prefix}_shingles" if table_prefix else None,
-            )
-            .select("doc_id")
-            .distinct()
+    indexed = (
+        _read_shingles(
+            spark, index_dir,
+            f"{table_prefix}_shingles" if table_prefix else None,
         )
-        # ONE corpus-sized distinct probe, reduced to the batch-sized
-        # fresh-id set and materialized; every frame is then filtered
-        # with a broadcast semi-join. Anti-joining each frame against
-        # `indexed` directly would re-run the corpus scan+agg once per
-        # frame — three times with shingles/bands_df passed (this
-        # tripled index_appends at 1M+100K before it was caught).
-        fresh = (
-            new_docs.select("doc_id")
-            .distinct()
-            .join(indexed, "doc_id", "left_anti")
-            .localCheckpoint()
-        )
-        new_docs = new_docs.join(F.broadcast(fresh), "doc_id", "left_semi")
-        if shingles is not None:
-            shingles = shingles.join(
-                F.broadcast(fresh), "doc_id", "left_semi"
-            )
-        if bands_df is not None:
-            bands_df = bands_df.join(
-                F.broadcast(fresh), "doc_id", "left_semi"
-            )
+        .select("doc_id")
+        .distinct()
+    )
+    # ONE corpus-sized distinct probe, reduced to the batch-sized
+    # fresh-id set and materialized; every frame is then filtered
+    # with a broadcast semi-join. Anti-joining each frame against
+    # `indexed` directly would re-run the corpus scan+agg once per
+    # frame — three times with shingles/bands_df passed (this
+    # tripled index_appends at 1M+100K before it was caught).
+    fresh = (
+        new_docs.select("doc_id")
+        .distinct()
+        .join(indexed, "doc_id", "left_anti")
+        .localCheckpoint()
+    )
+    new_docs = new_docs.join(F.broadcast(fresh), "doc_id", "left_semi")
+    if shingles is not None:
+        shingles = shingles.join(F.broadcast(fresh), "doc_id", "left_semi")
+    if bands_df is not None:
+        bands_df = bands_df.join(F.broadcast(fresh), "doc_id", "left_semi")
     sh = (
         shingles
         if shingles is not None
@@ -200,10 +190,10 @@ def append_to_index(
     bt = (
         bands_df
         if bands_df is not None
-        else band_table(sh, num_hashes, bands, arrow=arrow)
+        else band_table(sh, num_hashes, bands)
     )
     # Write order matters for crash safety: bands FIRST, shingles last.
-    # The skip_indexed guard above probes the SHINGLE table, so a doc
+    # The idempotency guard above probes the SHINGLE table, so a doc
     # must only become visible there once its band rows are already on
     # disk. A crash between the two writes then leaves band rows without
     # shingles — harmless, because a replay re-appends both (duplicate
@@ -236,7 +226,6 @@ def incremental_dedup(
     n: int = 3,
     bands_table: str | None = None,
     shingles_table: str | None = None,
-    arrow: bool = False,
     shingles: DataFrame | None = None,
     bands_df: DataFrame | None = None,
 ) -> DataFrame:
@@ -270,8 +259,7 @@ def incremental_dedup(
     new_bands = (
         bands_df
         if bands_df is not None
-        else band_table(new_sh, num_hashes, bands, arrow=arrow)
-        .localCheckpoint()
+        else band_table(new_sh, num_hashes, bands).localCheckpoint()
     )
     idx_bands = _read_bands(spark, index_dir, bands_table)
 

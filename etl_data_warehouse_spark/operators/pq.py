@@ -174,70 +174,6 @@ def train_pq_codebooks(
     return centroids.withColumn("cnorm2", _dot("cv", "cv")).localCheckpoint()
 
 
-def train_pq_codebooks_numpy(
-    vectors: DataFrame,
-    m: int = 4,
-    codes: int = 16,
-    max_iterations: int = 8,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Driver-side numpy twin of :func:`train_pq_codebooks` for BOUNDED
-    training sets (PQ training is always subsampled in production —
-    build_ivf_pq_index's pq_train_limit): collect the n x d training
-    block once (10K x 16 doubles = 1.2 MB at the XL operating point)
-    and run the same deterministic Lloyd's locally instead of
-    max_iterations x m interpreted fold-assignment jobs.
-
-    Same CONTROL FLOW as the distributed trainer: seeding = the
-    ``codes`` lowest vec_ids per subspace, assignment = argmin squared
-    distance with asc-code_id tiebreak (numpy argmin first-occurrence
-    over code_id-ordered centroids), empty cells keep their previous
-    centroid, early stop when assignments stop changing. Centroid
-    VALUES can differ from the fold trainer in final ulps (BLAS
-    summation order vs the sequential fold) — same caveat as every
-    assign_arrow twin, so this is the index-BUILD path
-    (build_ivf_pq_index arrow mode), not the oracle-checked one; the
-    recall gate measures the result where it matters.
-    """
-    import numpy as np
-
-    rows = (
-        vectors.select("vec_id", vec_col)
-        .orderBy("vec_id")
-        .collect()
-    )
-    V = np.array([r[1] for r in rows], dtype=np.float64)
-    dim = V.shape[1]
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    sub_dim = dim // m
-    out_rows = []
-    for s in range(m):
-        S = V[:, s * sub_dim : (s + 1) * sub_dim]
-        cents = S[: codes].copy()  # code_id = row index + 1
-        n_c = cents.shape[0]
-        prev = None
-        for _ in range(max_iterations):
-            d = ((S[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-            a = np.argmin(d, axis=1)
-            if prev is not None and np.array_equal(a, prev):
-                break
-            prev = a
-            for c in range(n_c):
-                mask = a == c
-                if mask.any():
-                    cents[c] = S[mask].mean(axis=0)
-        for c in range(n_c):
-            cv = [float(x) for x in cents[c]]
-            out_rows.append(
-                (s, c + 1, cv, float(sum(x * x for x in cv)))
-            )
-    spark = vectors.sparkSession
-    return spark.createDataFrame(
-        out_rows, "subspace int, code_id int, cv array<double>, cnorm2 double"
-    ).localCheckpoint()
-
-
 def pq_encode(
     vectors: DataFrame, codebooks: DataFrame, vec_col: str = "embedding"
 ) -> DataFrame:
@@ -291,75 +227,6 @@ def pack_codes(codes_table: DataFrame, codebooks: DataFrame) -> DataFrame:
                 lambda acc, x: acc + x,
             ).alias("rnorm2"),
         )
-    )
-
-
-def pack_encode_arrow(
-    vectors: DataFrame, codebooks: DataFrame, vec_col: str = "embedding"
-) -> DataFrame:
-    """Throughput twin of ``pack_codes(pq_encode(...))``: one
-    mapInPandas pass emits the packed layout (vec_id, code_ids,
-    rnorm2) directly — no m-way explode, no broadcast join against
-    every code, and no N·m·codes-row ranking window (the fold path
-    pushes 64M rows through row_number at 1M vectors, m=4, codes=16;
-    this path touches N rows once).
-
-    Equivalence: per subspace, codes are sorted by code_id so numpy
-    argmin's first-occurrence rule IS the fold path's asc-code_id
-    tiebreak; the matmul drops the row-constant |sv|^2 term (argmin
-    unaffected); rnorm2 accumulates the codebooks' OWN cnorm2 values
-    in subspace order — the same left fold as pack_codes. Same caveat
-    as every assign_arrow path: BLAS summation can flip exact-distance
-    ties, so the fold path remains the oracle-checked default
-    (tests/test_pq.py pins equality on the test corpus)."""
-    import numpy as np
-    import pandas as pd  # noqa: F401  (mapInPandas contract)
-
-    rows = codebooks.select("subspace", "code_id", "cv", "cnorm2").collect()
-    m = max(r["subspace"] for r in rows) + 1
-    books, ids, norms = [], [], []
-    for s in range(m):
-        rs = sorted(
-            (r for r in rows if r["subspace"] == s),
-            key=lambda r: r["code_id"],
-        )
-        books.append(
-            np.stack([np.asarray(r["cv"], dtype=np.float64) for r in rs])
-        )
-        ids.append(np.array([r["code_id"] for r in rs], dtype=np.int32))
-        norms.append(np.array([r["cnorm2"] for r in rs], dtype=np.float64))
-    subdim = books[0].shape[1]
-    d2 = [(b * b).sum(axis=1) for b in books]
-    np_ = np
-
-    def enc(batches):
-        import pandas as pd_
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vmat = np_.stack(
-                [np_.asarray(x, dtype=np_.float64) for x in pdf[vec_col]]
-            )
-            n = len(pdf)
-            code_mat = np_.empty((n, m), dtype=np_.int32)
-            rn = np_.zeros(n, dtype=np_.float64)
-            for s in range(m):
-                sub = vmat[:, s * subdim : (s + 1) * subdim]
-                d = d2[s][None, :] - 2.0 * (sub @ books[s].T)
-                a = np_.argmin(d, axis=1)
-                code_mat[:, s] = ids[s][a]
-                rn = rn + norms[s][a]
-            yield pd_.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "code_ids": list(code_mat),
-                    "rnorm2": rn,
-                }
-            )
-
-    return vectors.select("vec_id", vec_col).mapInPandas(
-        enc, schema="vec_id bigint, code_ids array<int>, rnorm2 double"
     )
 
 
@@ -482,7 +349,6 @@ def ivfadc_topk(
     refine_with: DataFrame | None = None,
     refine_factor: int = 10,
     vec_col: str = "embedding",
-    assign_arrow: bool = False,
 ) -> DataFrame:
     """IVFADC: IVF cell pruning composed with PQ ADC scoring and exact
     refine — the standard production ANN form (Jégou et al. 2011, §IV:
@@ -534,11 +400,8 @@ def ivfadc_topk(
             F.col("_v").alias("vv"),
             F.col("_norm").alias("vn"),
         )
-        assigned = (
-            rank_cells(
-                v, cents, 1, assign_arrow=assign_arrow, emit_vectors=False
-            )
-            .select(F.col("vid").alias("vec_id"), "cell_id")
+        assigned = rank_cells(v, cents, 1).select(
+            F.col("vid").alias("vec_id"), "cell_id"
         )
     else:
         assigned = assigned.select("vec_id", "cell_id")
@@ -547,13 +410,8 @@ def ivfadc_topk(
         F.col("_v").alias("vv"),
         F.col("_norm").alias("vn"),
     )
-    # emit_vectors=False: only (vid, cell_id) is consumed, and the
-    # arrow pass is opaque to column pruning (r14)
-    probe_cells = (
-        rank_cells(
-            q, cents, nprobe, assign_arrow=assign_arrow, emit_vectors=False
-        )
-        .select(F.col("vid").alias("src_id"), "cell_id")
+    probe_cells = rank_cells(q, cents, nprobe).select(
+        F.col("vid").alias("src_id"), "cell_id"
     )
 
     # Query ADC lookup table: m*codes partial dot products per query.

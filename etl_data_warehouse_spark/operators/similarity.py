@@ -137,8 +137,6 @@ def rank_cells(
     vdf: DataFrame,
     centroids: DataFrame,
     nprobe: int,
-    assign_arrow: bool = False,
-    emit_vectors: bool = True,
 ) -> DataFrame:
     """Rank each vector's top-``nprobe`` nearest centroids by cosine.
 
@@ -147,209 +145,40 @@ def rank_cells(
     [0, nprobe), ordered desc csim with asc cell_id tiebreak. Shared
     by ivf_topk (coarse search) and ivfadc_topk (cell restriction).
 
-    Fold path: collapse the (small) centroid table into ONE array row,
-    attach via broadcast cross join, then the selection is pure
-    map-side higher-order-function work — score all cells,
-    comparator-sort, slice. No shuffle (the previous design pushed
-    N*n_cells full-vector rows through a row_number window).
-
-    Arrow path: the same ranking as a numpy matmul per Arrow batch —
-    ~10x faster at 100K+ rows (lambda folds are interpreted, not
-    codegen'd), equal up to BLAS summation ulps on cosine ties.
-
-    ``emit_vectors=False`` drops vv/vn from the output (rows and
-    ordering identical — r14): pure-ASSIGNMENT consumers (index cell
-    assignment, ivfadc probe-cell restriction) only read (vid, r,
-    cell_id), but a mapInPandas is opaque to column pruning, so the
-    arrow path was shipping every input vector back JVM→Python→JVM
-    just to discard it.
+    Collapse the (small) centroid table into ONE array row, attach via
+    broadcast cross join, then the selection is pure map-side
+    higher-order-function work — score all cells, comparator-sort,
+    slice. No shuffle (the previous design pushed N*n_cells
+    full-vector rows through a row_number window). Consumers that read
+    only (vid, r, cell_id) do not carry vv/vn past the posexplode:
+    Catalyst prunes them from the Generate's output.
     """
-    if not assign_arrow:
-        cent_row = centroids.agg(
-            F.collect_list(F.struct("cell_id", "cv", "cn")).alias("cells")
-        )
-        scored_cells = F.slice(
-            F.array_sort(
-                F.transform(
-                    "cells",
-                    lambda c: F.struct(
-                        (
-                            _dot(F.col("vv"), c["cv"]) / (F.col("vn") * c["cn"])
-                        ).alias("csim"),
-                        c["cell_id"].alias("cell_id"),
-                    ),
-                ),
-                lambda a, b: F.when(a["csim"] > b["csim"], F.lit(-1))
-                .when(a["csim"] < b["csim"], F.lit(1))
-                .otherwise(
-                    F.signum(a["cell_id"] - b["cell_id"]).cast("int")
+    cent_row = centroids.agg(
+        F.collect_list(F.struct("cell_id", "cv", "cn")).alias("cells")
+    )
+    scored_cells = F.slice(
+        F.array_sort(
+            F.transform(
+                "cells",
+                lambda c: F.struct(
+                    (
+                        _dot(F.col("vv"), c["cv"]) / (F.col("vn") * c["cn"])
+                    ).alias("csim"),
+                    c["cell_id"].alias("cell_id"),
                 ),
             ),
-            1,
-            nprobe,
-        )
-        carry = ["vid", "vv", "vn"] if emit_vectors else ["vid"]
-        out = vdf.crossJoin(F.broadcast(cent_row)).select(
-            *carry,
-            F.posexplode(scored_cells).alias("r", "pc"),
-        )
-        return out.select(
-            *carry, "r", F.col("pc")["cell_id"].alias("cell_id")
-        )
-
-    # Arrow path. Centroid matrix is tiny (n_cells x dim doubles);
-    # collect once and ship in the task closure. np.lexsort reproduces
-    # the fold path's ordering (desc csim, asc cell_id).
-    import numpy as np
-    import pandas as pd
-
-    rows = centroids.select("cell_id", "cv", "cn").collect()
-    cell_ids = np.array([r["cell_id"] for r in rows], dtype=np.int64)
-    cmat = np.stack([np.asarray(r["cv"], dtype=np.float64) for r in rows])
-    cmat = cmat / np.array([r["cn"] for r in rows], dtype=np.float64)[:, None]
-    np_, pd_ = np, pd
-
-    # Chunk BOTH rows and cells so peak memory is O(row_chunk x
-    # cell_chunk) regardless of n_cells — an unchunked batch x cells
-    # score matrix is ~1.3 GB per worker at 10K rows x 16K cells and
-    # crashed workers at 1M x 16K. Each cell chunk contributes its
-    # top-nprobe per row (argpartition), merged into a running
-    # lexsort-pruned best set, so the final ranking equals the one-shot
-    # lexsort (desc csim, asc cell_id) except on sim ties at a chunk's
-    # selection boundary — inside the BLAS-ulp caveat this path already
-    # carries.
-    ROW_CHUNK, CELL_CHUNK = 4096, 4096
-
-    def topcells(batches):
-        for pdf in batches:
-            for start in range(0, len(pdf), ROW_CHUNK):
-                sub = pdf.iloc[start : start + ROW_CHUNK]
-                if not len(sub):
-                    continue
-                vmat = np_.stack(
-                    [np_.asarray(x, dtype=np_.float64) for x in sub["vv"]]
-                )
-                vmat = vmat / sub["vn"].to_numpy()[:, None]
-                m = len(sub)
-                best_sims = best_ids = None
-                for cs in range(0, len(cell_ids), CELL_CHUNK):
-                    sims = vmat @ cmat[cs : cs + CELL_CHUNK].T
-                    ids = cell_ids[cs : cs + CELL_CHUNK]
-                    take = min(nprobe, sims.shape[1])
-                    if sims.shape[1] > take:
-                        idx = np_.argpartition(-sims, take - 1, axis=1)[
-                            :, :take
-                        ]
-                        cand_sims = np_.take_along_axis(sims, idx, axis=1)
-                        cand_ids = ids[idx]
-                    else:
-                        cand_sims = sims
-                        cand_ids = np_.broadcast_to(
-                            ids, sims.shape
-                        )
-                    if best_sims is None:
-                        best_sims = cand_sims
-                        best_ids = np_.ascontiguousarray(cand_ids)
-                    else:
-                        best_sims = np_.concatenate(
-                            [best_sims, cand_sims], axis=1
-                        )
-                        best_ids = np_.concatenate(
-                            [best_ids, cand_ids], axis=1
-                        )
-                    order = np_.lexsort((best_ids, -best_sims), axis=1)[
-                        :, :nprobe
-                    ]
-                    best_sims = np_.take_along_axis(best_sims, order, axis=1)
-                    best_ids = np_.take_along_axis(best_ids, order, axis=1)
-                p = best_ids.shape[1]
-                cols = {"vid": sub["vid"].to_numpy().repeat(p)}
-                if emit_vectors:
-                    cols["vv"] = sub["vv"].to_numpy().repeat(p)
-                    cols["vn"] = sub["vn"].to_numpy().repeat(p)
-                cols["r"] = np_.tile(np_.arange(p), m)
-                cols["cell_id"] = best_ids.ravel()
-                yield pd_.DataFrame(cols)
-
-    if emit_vectors:
-        schema = (
-            "vid bigint, vv array<double>, vn double, r int, cell_id bigint"
-        )
-    else:
-        schema = "vid bigint, r int, cell_id bigint"
-    return vdf.mapInPandas(topcells, schema=schema)
-
-
-def _ivf_score_grouped(probes: DataFrame, assigned: DataFrame) -> DataFrame:
-    """Candidate scoring as ONE numpy matmul per probed cell (cogrouped
-    applyInPandas on cell_id) — the r13 scale path for IVF scoring.
-
-    Why this beats both earlier variants (r4 measurements on
-    ``score_arrow``): the per-candidate row ships BOTH full vectors to
-    the Python worker (~1 KB/candidate; ~400 MB at the q28 sf0.1 shape),
-    so row-wise Arrow scoring lost to the JVM fold. Grouping by cell
-    ships each vector ONCE PER CELL (probes: N*nprobe rows, members: N
-    rows — ~100x fewer vector transfers at nprobe*N/n_cells candidates
-    per probe) and the per-cell |probes| x |members| matmul gives numpy
-    the batching the row-wise dot never had. Only the narrow
-    (src_id, neighbor_id, cosine_sim) rows come back.
-
-    Same BLAS-summation ulp caveat as assign_arrow: bench/throughput
-    path, not the bit-exact oracle shape (q28's registered form keeps
-    the fold). Cell sizes are bounded (~N/n_cells members, ~N*nprobe/
-    n_cells probes), so per-group memory is small by construction."""
-    import numpy as np
-    import pandas as pd
-
-    # Probe-side row blocks bound per-group memory at BLOCK x |members|
-    # doubles regardless of cell skew (r14, ADVICE): centroids are
-    # caller-supplied, so one degenerate cell can capture a large
-    # corpus fraction and an unblocked |probes| x |members| sims+mask
-    # pair would blow up the Python worker. Blocking changes nothing
-    # numerically — each probe row's matmul is independent.
-    _BLOCK = 4096
-
-    def score(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "src_id": pd.Series(dtype="int64"),
-                "neighbor_id": pd.Series(dtype="int64"),
-                "cosine_sim": pd.Series(dtype="float64"),
-            }
-        )
-        if not len(left) or not len(right):
-            return empty
-        v = np.stack([np.asarray(x, dtype=np.float64) for x in right["vv"]])
-        vn = right["vn"].to_numpy(dtype=np.float64)
-        nid = right["vid"].to_numpy(dtype=np.int64)
-        parts = []
-        for lo in range(0, len(left), _BLOCK):
-            blk = left.iloc[lo : lo + _BLOCK]
-            q = np.stack(
-                [np.asarray(x, dtype=np.float64) for x in blk["qv"]]
-            )
-            sims = (q @ v.T) / np.outer(
-                blk["qn"].to_numpy(dtype=np.float64), vn
-            )
-            src = blk["src_id"].to_numpy(dtype=np.int64)
-            si, ni = np.nonzero(src[:, None] != nid[None, :])
-            parts.append(
-                pd.DataFrame(
-                    {
-                        "src_id": src[si],
-                        "neighbor_id": nid[ni],
-                        "cosine_sim": sims[si, ni],
-                    }
-                )
-            )
-        return pd.concat(parts, ignore_index=True) if parts else empty
-
-    return (
-        probes.groupBy("cell_id")
-        .cogroup(assigned.groupBy("cell_id"))
-        .applyInPandas(
-            score, "src_id bigint, neighbor_id bigint, cosine_sim double"
-        )
+            lambda a, b: F.when(a["csim"] > b["csim"], F.lit(-1))
+            .when(a["csim"] < b["csim"], F.lit(1))
+            .otherwise(F.signum(a["cell_id"] - b["cell_id"]).cast("int")),
+        ),
+        1,
+        nprobe,
+    )
+    out = vdf.crossJoin(F.broadcast(cent_row)).select(
+        "vid", "vv", "vn", F.posexplode(scored_cells).alias("r", "pc")
+    )
+    return out.select(
+        "vid", "vv", "vn", "r", F.col("pc")["cell_id"].alias("cell_id")
     )
 
 
@@ -360,9 +189,6 @@ def ivf_topk(
     nprobe: int | None = None,
     centroids: DataFrame | None = None,
     queries: DataFrame | None = None,
-    assign_arrow: bool = False,
-    score_arrow: bool = False,
-    score_grouped: bool = False,
 ) -> DataFrame:
     """IVF-style approximate top-k: coarse-quantize to n_cells centroids
     (default seeding: the first n_cells vec_ids; pass
@@ -375,14 +201,6 @@ def ivf_topk(
     query batch vs large indexed corpus; corpus-side work stays linear
     (one assignment pass) and the candidate join touches only
     |Q| * N * nprobe / n_cells rows.
-
-    ``assign_arrow=True`` switches the cell-ranking stage (vector x all
-    centroids) from Catalyst higher-order folds to an Arrow-batched
-    numpy matmul per partition — ~10x faster at bench scale because
-    lambda-expression folds are interpreted, not codegen'd. Candidate
-    scoring stays fold-based either way. BLAS reorders the summation,
-    so assignment can differ on exact cosine ties (ulp-level): use the
-    default fold path when bit-exact oracle parity matters (q28).
 
     Defaults scale with the table: n_cells ≈ N/64 (clamped [16, 256]),
     nprobe = n_cells/8 — candidate sets shrink ~n_cells/nprobe-fold vs
@@ -399,8 +217,9 @@ def ivf_topk(
     numpy scoring is ~10× faster but not bit-exact (BLAS summation
     order) — it would break the differential oracle this query exists
     to satisfy. So ~2.6s min / ~3.3s p50 IS the floor for the
-    oracle-checked shape; throughput users take assign_arrow=True and
-    Arrow scoring (brute_force_topk_arrow pattern) instead."""
+    oracle-checked shape. The fold is the only path: the retired Arrow
+    cell-assignment and candidate-scoring twins read with
+    ``git show 44b50ce:etl_data_warehouse_spark/operators/similarity.py``."""
     if centroids is not None and n_cells is None:
         n_cells = centroids.count()
     if n_cells is None:
@@ -430,14 +249,11 @@ def ivf_topk(
         F.col("_norm").alias("vn"),
     )
 
-    def _rank_cells(vdf: DataFrame) -> DataFrame:
-        return rank_cells(vdf, centroids, nprobe, assign_arrow=assign_arrow)
-
     if queries is None:
         # Self-search: assignment and probe lists come from one compute.
         # N*nprobe rows (nprobe ≈ n_cells/8): 8x smaller than the old
         # materialization; checkpoint so assign + probe share it.
-        ranked = _rank_cells(v).localCheckpoint()
+        ranked = rank_cells(v, centroids, nprobe).localCheckpoint()
         assigned = ranked.filter(F.col("r") == 0).select(
             "vid", "vv", "vn", "cell_id"
         )
@@ -450,10 +266,10 @@ def ivf_topk(
     else:
         # Separate query batch: corpus only needs its top-1 assignment —
         # rank with nprobe=1 rather than ranking all nprobe cells and
-        # filtering r==0 (identical result; 8x less Arrow/explode
-        # traffic on the corpus, which dominates at |corpus| >> |Q|).
+        # filtering r==0 (identical result; 8x less explode traffic on
+        # the corpus, which dominates at |corpus| >> |Q|).
         assigned = (
-            rank_cells(v, centroids, 1, assign_arrow=assign_arrow)
+            rank_cells(v, centroids, 1)
             .filter(F.col("r") == 0)
             .select("vid", "vv", "vn", "cell_id")
         )
@@ -462,76 +278,23 @@ def ivf_topk(
             F.col("_v").alias("vv"),
             F.col("_norm").alias("vn"),
         )
-        probes = _rank_cells(q).select(
+        probes = rank_cells(q, centroids, nprobe).select(
             F.col("vid").alias("src_id"),
             F.col("vv").alias("qv"),
             F.col("vn").alias("qn"),
             "cell_id",
         )
-    if score_grouped:
-        # Per-cell grouped matmul — never materializes the per-candidate
-        # vector-pair rows at all (see _ivf_score_grouped). Each
-        # neighbor lives in exactly one cell → no pair duplicates.
-        sims = _ivf_score_grouped(probes, assigned)
-        w = Window.partitionBy("src_id").orderBy(
-            F.desc("cosine_sim"), F.col("neighbor_id")
-        )
-        return (
-            sims.withColumn("rank", F.row_number().over(w).cast("int"))
-            .filter(F.col("rank") <= k)
-            .orderBy("src_id", "rank")
-        )
     # Each neighbor lives in exactly one cell → no pair duplicates.
     cands = probes.join(assigned, "cell_id").filter(
         F.col("src_id") != F.col("vid")
     )
-    if score_arrow:
-        # Candidate scoring as a per-batch numpy row-wise dot. Same
-        # BLAS-ulp caveat as assign_arrow (fold path for bit-exact
-        # oracle replay). Measured r4 on the 100K-corpus/1K-query
-        # ~3M-candidate bench shape this is SLOWER than the JVM fold
-        # at BOTH dim 16 (5.1s vs 3.9s p50; 4.6s even via mapInArrow)
-        # and dim 64 (5.4s vs 4.0s): shipping both vectors per
-        # candidate row to the Python worker costs more than the
-        # interpreted fold — the row-wise dot, unlike rank_cells'
-        # N×K matmul, gives numpy no batching advantage. Kept for
-        # genuinely expensive per-candidate metrics; for plain cosine
-        # prefer the default fold.
-        import numpy as np
-        import pandas as pd
-
-        def score(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                Q = np.stack(
-                    [np.asarray(x, dtype=np.float64) for x in pdf["qv"]]
-                )
-                V = np.stack(
-                    [np.asarray(x, dtype=np.float64) for x in pdf["vv"]]
-                )
-                sims_ = np.einsum("ij,ij->i", Q, V) / (
-                    pdf["qn"].to_numpy() * pdf["vn"].to_numpy()
-                )
-                yield pd.DataFrame(
-                    {
-                        "src_id": pdf["src_id"],
-                        "neighbor_id": pdf["vid"],
-                        "cosine_sim": sims_,
-                    }
-                )
-
-        sims = cands.mapInPandas(
-            score, "src_id bigint, neighbor_id bigint, cosine_sim double"
-        )
-    else:
-        sims = cands.select(
-            "src_id",
-            F.col("vid").alias("neighbor_id"),
-            (
-                _dot(F.col("qv"), F.col("vv")) / (F.col("qn") * F.col("vn"))
-            ).alias("cosine_sim"),
-        )
+    sims = cands.select(
+        "src_id",
+        F.col("vid").alias("neighbor_id"),
+        (
+            _dot(F.col("qv"), F.col("vv")) / (F.col("qn") * F.col("vn"))
+        ).alias("cosine_sim"),
+    )
     w = Window.partitionBy("src_id").orderBy(
         F.desc("cosine_sim"), F.col("neighbor_id")
     )
@@ -777,62 +540,11 @@ def srp_candidate_count(
     return int(row["pairs"] or 0), int(row["max_bucket"] or 0)
 
 
-def brute_force_topk_arrow(
-    vectors: DataFrame, queries: DataFrame, k: int = 5
-) -> DataFrame:
-    """Arrow/pandas-UDF variant of brute_force_topk: the dot product runs
-    as numpy (BLAS) over Arrow batches instead of a Catalyst fold.
-
-    ~identical results (BLAS reorders the summation, so doubles can
-    differ in final ulps — rankings agree except on exact ties); kept as
-    the vectorized-Python reference implementation and cross-checked
-    against the fold-based path in tests. Prefer the fold-based path
-    when bit-exact cross-engine parity matters."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def _cos(a, b):
-        va = np.stack(a.to_numpy()).astype(np.float64)
-        vb = np.stack(b.to_numpy()).astype(np.float64)
-        dots = np.einsum("ij,ij->i", va, vb)
-        na = np.linalg.norm(va, axis=1)
-        nb = np.linalg.norm(vb, axis=1)
-        return pd.Series(dots / (na * nb))
-
-    # real type objects (module uses `from __future__ import annotations`,
-    # which would stringify inline hints beyond pyspark's resolver)
-    _cos.__annotations__ = {"a": pd.Series, "b": pd.Series, "return": pd.Series}
-    cos_sim = pandas_udf(_cos, "double")
-
-    q = queries.select(
-        F.col("vec_id").alias("src_id"), F.col("embedding").alias("qv")
-    )
-    para = vectors.sparkSession.sparkContext.defaultParallelism
-    v = vectors.repartition(para, "vec_id").select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("nv")
-    )
-    sims = (
-        v.crossJoin(F.broadcast(q))
-        .filter(F.col("src_id") != F.col("neighbor_id"))
-        .select("src_id", "neighbor_id", cos_sim("qv", "nv").alias("cosine_sim"))
-    )
-    w = Window.partitionBy("src_id").orderBy(
-        F.desc("cosine_sim"), F.col("neighbor_id")
-    )
-    return (
-        sims.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .orderBy("src_id", "rank")
-    )
-
-
 def kmeans_centroids(
     vectors: DataFrame,
     n_cells: int,
     max_iterations: int = 10,
     vec_col: str = "embedding",
-    assign_arrow: bool = False,
 ) -> DataFrame:
     """Deterministic Lloyd's k-means over DataFrame ops — real centroids
     for the IVF coarse quantizer (ivf_topk's default seeding is the
@@ -847,17 +559,15 @@ def kmeans_centroids(
     centroid. Centroid VALUES are reproducible only up to
     floating-point summation order — F.avg folds partials in partition
     order, so a different partitioning can move means by ulps and, on
-    exact-tie boundaries, flip an assignment; identical input
-    partitioning gives bit-identical output. Stops early when
-    assignments stop changing (one driver-side count per round —
-    inherent to any fixed-point loop; lineage truncated per round via
-    localCheckpoint).
-
-    ``assign_arrow=True`` runs the per-iteration assignment as a numpy
-    distance matmul over Arrow batches instead of the Catalyst fold —
-    same ~10x speedup story as rank_cells at 100K+ rows, same caveat
-    (BLAS summation can flip exact-distance ties; use the fold path
-    when bit-stable replay matters). Requires a bigint vec_id.
+    exact-tie boundaries, flip an assignment. Identical input
+    partitioning gives bit-identical output only within one session and
+    environment (same Spark version, parallelism and JVM), and only
+    while the Exchange hands each partition its rows in a stable order,
+    which Spark does not strictly guarantee; across environments only
+    the ulp-level reproducibility above is promised.
+    Stops early when assignments stop changing (one driver-side count
+    per round — inherent to any fixed-point loop; lineage truncated per
+    round via localCheckpoint).
 
     100 TB posture: per round, one broadcast of k·dim doubles and ONE
     shuffle whose key space is k — linear in the corpus, constant in
@@ -872,8 +582,9 @@ def kmeans_centroids(
     # every Lloyd's iteration then ran its whole assignment matmul on
     # one core (measured: 145s of the 1M ivf_pq_index build's 202s).
     # Hash on vec_id (not round robin) so the layout is a pure function
-    # of the data — the docstring's "identical partitioning →
-    # bit-identical centroids" contract stays caller-independent.
+    # of the data and the parallelism — the docstring's same-session
+    # "identical partitioning → bit-identical centroids" contract stays
+    # caller-independent.
     para = vectors.sparkSession.sparkContext.defaultParallelism
     v = (
         vectors.select("vec_id", _as_double(vec_col).alias("vv"))
@@ -890,7 +601,7 @@ def kmeans_centroids(
         )
         .localCheckpoint()
     )
-    def _assign_fold(cents: DataFrame) -> DataFrame:
+    def _assign(cents: DataFrame) -> DataFrame:
         # Map-side argmin via higher-order fold over ONE collected-array
         # centroid row (same no-shuffle trick as rank_cells): strictly
         # equal to orderBy(dist, cell_id) pick-first — argmin distance,
@@ -925,47 +636,6 @@ def kmeans_centroids(
             "vec_id", "vv", best["cell_id"].alias("cell_id")
         )
 
-    def _assign_arrow(cents: DataFrame) -> DataFrame:
-        import numpy as np
-        import pandas as pd
-
-        rows = cents.select("cell_id", "cv").collect()
-        cell_ids = np.array([r["cell_id"] for r in rows], dtype=np.int64)
-        # sort centroids by cell_id so argmin's first-occurrence tie
-        # rule IS the asc-cell_id tiebreak — an O(k) argmin per row
-        # instead of the previous full-row lexsort (O(k log k) with a
-        # large constant: at k=4096 the lexsort dominated 1M-row builds)
-        by_id = np.argsort(cell_ids, kind="stable")
-        cell_ids = cell_ids[by_id]
-        cmat = np.stack(
-            [np.asarray(r["cv"], dtype=np.float64) for r in rows]
-        )[by_id]
-        cnorm2 = (cmat * cmat).sum(axis=1)
-        np_, pd_ = np, pd
-
-        def nearest(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                vmat = np_.stack(
-                    [np_.asarray(x, dtype=np_.float64) for x in pdf["vv"]]
-                )
-                # ||v-c||^2 up to the row-constant ||v||^2 term
-                d = cnorm2[None, :] - 2.0 * (vmat @ cmat.T)
-                order = np_.argmin(d, axis=1)
-                yield pd_.DataFrame(
-                    {
-                        "vec_id": pdf["vec_id"],
-                        "vv": pdf["vv"],
-                        "cell_id": cell_ids[order].astype("int32"),
-                    }
-                )
-
-        return v.mapInPandas(
-            nearest, schema="vec_id bigint, vv array<double>, cell_id int"
-        )
-
-    _assign = _assign_arrow if assign_arrow else _assign_fold
 
     prev_assign = None
     for _ in range(max_iterations):
@@ -1033,8 +703,6 @@ def semantic_dedup(
     threshold: float = 0.95,
     n_cells: int | None = None,
     centroids: DataFrame | None = None,
-    assign_arrow: bool = False,
-    pairs_arrow: bool = False,
     sort: bool = True,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
@@ -1054,7 +722,7 @@ def semantic_dedup(
     earlier same-cell vec_id above threshold (NULL when kept).
 
     Scale shape: assignment is one map-side pass (broadcast centroid
-    array or Arrow matmul — rank_cells nprobe=1); the pair search is a
+    array — rank_cells nprobe=1); the pair search is a
     self-join ON cell_id, so cost is sum over cells of |cell|^2, the
     SemDeDup cost model — n_cells is the knob that bounds cell size
     (size it so N/n_cells stays ~10^4 at 100 TB). One shuffle on
@@ -1065,19 +733,11 @@ def semantic_dedup(
     deterministic); pass ``centroids=kmeans_centroids(...)`` for
     trained cells in production.
 
-    ``pairs_arrow=True`` replaces the within-cell pair self-join with a
-    grouped applyInPandas: one numpy gram matrix per cell — exactly the
-    per-cluster similarity matrix the paper computes. ~10x+ faster at
-    bench scale (fold cosines are interpreted); same caveat as
-    assign_arrow — BLAS summation can flip exact-threshold ties, so the
-    fold path remains the oracle-checked default. One shuffle on
-    cell_id either way.
-
     ``sort=False`` skips the closing presentation orderBy (one
     rangepartitioning Exchange + sort of the FULL verdict frame — pure
     overhead at 10^6 rows; the driver compare is order-insensitive):
-    the brute_force_topk ``sort`` convention, passed by the XL/scale
-    bench paths and the day-2 pipeline, whose consumers join on vec_id.
+    the brute_force_topk ``sort`` convention, passed by the day-2
+    pipeline, whose consumers join on vec_id.
     """
     if centroids is not None and n_cells is None:
         n_cells = centroids.count()
@@ -1104,61 +764,33 @@ def semantic_dedup(
         F.col("_norm").alias("vn"),
     )
     assigned = (
-        rank_cells(v, cents, 1, assign_arrow=assign_arrow)
+        rank_cells(v, cents, 1)
         .filter(F.col("r") == 0)
         .select("vid", "vv", "vn", "cell_id")
         .localCheckpoint()
     )
-    if pairs_arrow:
-        import numpy as np
-        import pandas as pd
-
-        tau = float(threshold)
-
-        def prune(pdf):
-            if len(pdf) < 2:
-                return pd.DataFrame({"vec_id": [], "dup_of": []}).astype(
-                    {"vec_id": "int64", "dup_of": "int64"}
-                )
-            order = np.argsort(pdf["vid"].to_numpy(), kind="stable")
-            ids = pdf["vid"].to_numpy()[order]
-            V = np.stack(
-                [np.asarray(x, dtype=np.float64) for x in pdf["vv"]]
-            )[order]
-            V = V / pdf["vn"].to_numpy()[order][:, None]
-            hits = np.triu(V @ V.T >= tau, k=1)  # hits[i, j]: i < j
-            any_dup = hits.any(axis=0)
-            first = hits.argmax(axis=0)  # first i with hits[i, j]
-            return pd.DataFrame(
-                {"vec_id": ids[any_dup], "dup_of": ids[first[any_dup]]}
-            )
-
-        dups = assigned.groupBy("cell_id").applyInPandas(
-            prune, "vec_id bigint, dup_of bigint"
+    a = assigned.select(
+        "cell_id",
+        F.col("vid").alias("earlier_id"),
+        F.col("vv").alias("av"),
+        F.col("vn").alias("an"),
+    )
+    b = assigned.select(
+        "cell_id",
+        F.col("vid").alias("vec_id"),
+        F.col("vv").alias("bv"),
+        F.col("vn").alias("bn"),
+    )
+    dups = (
+        a.join(b, "cell_id")
+        .filter(F.col("earlier_id") < F.col("vec_id"))
+        .filter(
+            _dot(F.col("av"), F.col("bv")) / (F.col("an") * F.col("bn"))
+            >= threshold
         )
-    else:
-        a = assigned.select(
-            "cell_id",
-            F.col("vid").alias("earlier_id"),
-            F.col("vv").alias("av"),
-            F.col("vn").alias("an"),
-        )
-        b = assigned.select(
-            "cell_id",
-            F.col("vid").alias("vec_id"),
-            F.col("vv").alias("bv"),
-            F.col("vn").alias("bn"),
-        )
-        dups = (
-            a.join(b, "cell_id")
-            .filter(F.col("earlier_id") < F.col("vec_id"))
-            .filter(
-                _dot(F.col("av"), F.col("bv")) / (F.col("an") * F.col("bn"))
-                >= threshold
-            )
-            .groupBy("vec_id")
-            .agg(F.min("earlier_id").alias("dup_of"))
-        )
+        .groupBy("vec_id")
+        .agg(F.min("earlier_id").alias("dup_of"))
+    )
     out = (
         assigned.select(F.col("vid").alias("vec_id"), "cell_id")
         .join(dups, "vec_id", "left")
@@ -1370,10 +1002,7 @@ def whitened_semantic_dedup(
     k: int | None = None,
     n_cells: int | None = None,
     centroids: DataFrame | None = None,
-    assign_arrow: bool = False,
-    pairs_arrow: bool = False,
     vec_col: str = "embedding",
-    sort: bool = True,
 ) -> DataFrame:
     """SemDeDup AS PUBLISHED (Abbas et al. 2023, arXiv:2303.09540 §3:
     embeddings are whitened before clustering): PCA-whiten the corpus
@@ -1412,7 +1041,4 @@ def whitened_semantic_dedup(
         threshold=threshold,
         n_cells=n_cells,
         centroids=centroids,
-        assign_arrow=assign_arrow,
-        pairs_arrow=pairs_arrow,
-        sort=sort,
     )

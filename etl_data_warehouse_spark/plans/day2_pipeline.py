@@ -167,7 +167,15 @@ def _load_or_init_config(state_dir: str, overrides: dict) -> dict:
     overrides that disagree — LSH band structure, shingle width, PQ
     geometry and thresholds are index state, not per-run knobs (a
     mismatch would silently produce wrong verdicts, the worst failure
-    mode a dedup pipeline has)."""
+    mode a dedup pipeline has). A key that is not a config knob raises
+    too: stored at bootstrap and ignored by every later day, a
+    misspelt or retired knob would otherwise vanish silently."""
+    unknown = sorted(set(overrides) - set(_DEFAULTS))
+    if unknown:
+        raise ValueError(
+            f"unknown day-2 config keys {unknown}; known keys: "
+            f"{sorted(_DEFAULTS)}"
+        )
     path = os.path.join(state_dir, _CONFIG)
     if os.path.exists(path):
         with open(path) as fh:
@@ -223,8 +231,6 @@ def run_day2_ingest(
     vectors: DataFrame,
     state_dir: str,
     batch_id: int,
-    semantic_arrow: bool = False,
-    minhash_arrow: bool = False,
     **overrides,
 ) -> dict:
     """Ingest one daily batch; returns the audit summary.
@@ -235,17 +241,11 @@ def run_day2_ingest(
     one; missing coverage raises rather than silently skipping the
     semantic arm).
 
-    ``semantic_arrow`` routes the semantic arm through the Arrow scale
-    twins (numpy cell assignment / gram-matrix refine / Arrow PQ
-    encode) — the 10^6-row execution mode (day-2 semantic stage
-    116s -> single-digit seconds at 1M+100K,
-    `git show b4f93cf:BENCH_XL.json`). It is an
-    execution knob, NOT pipeline config: both paths compute the same
-    verdicts except on exact-threshold float ties (the documented
-    fold-vs-BLAS caveat, operators/similarity.py), so the fold default
-    stays the bit-stable contract the equality tests pin, and the
-    arrow==fold equivalence on a clear-margin corpus is itself
-    test-pinned (test_day2_pipeline.py).
+    ``overrides`` are pipeline config keys (``_DEFAULTS``); any other
+    key raises ``ValueError``. Every arm runs the operators' DataFrame
+    folds; the retired Arrow/numpy execution twins of the semantic and
+    MinHash arms read with
+    ``git show 44b50ce:etl_data_warehouse_spark/plans/day2_pipeline.py``.
 
     Re-running a day (crash replay) is a no-op for every sink; see the
     module docstring for the contracts. Day 1 (no state yet)
@@ -423,8 +423,7 @@ def run_day2_ingest(
                     survivors, cfg["shingle_n"]
                 ).localCheckpoint()
                 bt_batch = dedup.band_table(
-                    sh_batch, cfg["num_hashes"], cfg["bands"],
-                    arrow=minhash_arrow,
+                    sh_batch, cfg["num_hashes"], cfg["bands"]
                 ).localCheckpoint()
                 pairs = incremental_dedup(
                     spark,
@@ -435,7 +434,6 @@ def run_day2_ingest(
                     shingles_table=(
                         f"{mh_prefix}_shingles" if mh_prefix else None
                     ),
-                    arrow=minhash_arrow,
                     shingles=sh_batch,
                     bands_df=bt_batch,
                     **mh_kw,
@@ -458,15 +456,12 @@ def run_day2_ingest(
                     m=cfg["m"],
                     codes=cfg["codes"],
                     pq_train_limit=None,
-                    assign_arrow=semantic_arrow,
                 )
                 cents = spark.read.parquet(os.path.join(ann_dir, "centroids"))
                 verdicts = similarity.semantic_dedup(
                     batch_vecs,
                     threshold=cfg["cosine_threshold"],
                     centroids=cents,
-                    assign_arrow=semantic_arrow,
-                    pairs_arrow=semantic_arrow,
                     sort=False,  # verdicts feed joins; order is cosmetic
                 )
             else:
@@ -481,8 +476,6 @@ def run_day2_ingest(
                     batch_vecs,
                     ann_dir,
                     threshold=cfg["cosine_threshold"],
-                    assign_arrow=semantic_arrow,
-                    refine_arrow=semantic_arrow,
                     sort=False,
                 )
             return (
@@ -567,8 +560,7 @@ def run_day2_ingest(
             if bootstrap:
                 build_minhash_index(
                     survivors, minhash_dir,
-                    buckets=mh_buckets, table_prefix=mh_prefix,
-                    arrow=minhash_arrow, **mh_kw,
+                    buckets=mh_buckets, table_prefix=mh_prefix, **mh_kw,
                 )
                 if cfg.get("containment"):
                     from ..operators.containment_index import (
@@ -588,8 +580,7 @@ def run_day2_ingest(
                 append_to_index(
                     survivors, minhash_dir,
                     buckets=mh_buckets, table_prefix=mh_prefix,
-                    arrow=minhash_arrow, shingles=sh_batch,
-                    bands_df=bt_batch, **mh_kw,
+                    shingles=sh_batch, bands_df=bt_batch, **mh_kw,
                 )
                 if cfg.get("containment"):
                     from ..operators.containment_index import (
@@ -603,10 +594,7 @@ def run_day2_ingest(
                         buckets=mh_buckets, table_prefix=mh_prefix,
                         shingles=sh_batch,
                     )
-                append_to_ivf_index(
-                    batch_vecs, ann_dir, batch_id=batch_id,
-                    assign_arrow=semantic_arrow,
-                )
+                append_to_ivf_index(batch_vecs, ann_dir, batch_id=batch_id)
             batch_vecs.write.mode("overwrite").parquet(
                 os.path.join(vec_dir, f"batch={batch_id}")
             )

@@ -355,53 +355,21 @@ def q85_crossdoc_ngram_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape. At 100 TB the gram JOIN KEY would be xxhash64(gram) to keep
     the shuffle narrow (collision odds ~N^2/2^64 are acceptable for a
     filter signal); the string key is kept here so the DuckDB oracle
-    replays exactly. ``crossdoc_ngram_dup(hash_keys=True)`` is that
-    scale config — the bench override (r13), the q95 pattern.
+    replays exactly. The retired hashed-key scale twin reads with
+    ``git show 44b50ce:etl_data_warehouse_spark/plans/text_quality.py``.
     """
     docs = load_table(spark, "documents", sf_dir)
     return crossdoc_ngram_dup(docs)
 
 
-def crossdoc_ngram_dup(
-    docs: DataFrame, hash_keys: bool = False
-) -> DataFrame:
-    """q85's body over an arbitrary (doc_id, text) frame.
-    ``hash_keys=True`` is the scale config: the gram key is xxhash64
-    over the 8 TOKEN hashes (the hashed_shingles discipline, WITH
-    repeats and no distinct) — gram strings are never built, tokens are
-    hashed once per doc BEFORE the spread repartition (the Exchange is
-    the CollapseProject barrier), and the doc-freq shuffle + join-back
-    carry an 8-byte key instead of a ~50-char string. Dup verdicts
-    equal the string path absent 64-bit collisions (P ~ n^2/2^65)."""
+def crossdoc_ngram_dup(docs: DataFrame) -> DataFrame:
+    """q85's body over an arbitrary (doc_id, text) frame."""
     para = docs.sparkSession.sparkContext.defaultParallelism
-    if hash_keys:
-        pre = docs.select(
-            "doc_id",
-            F.transform(tokens("text"), lambda x: F.xxhash64(x)).alias(
-                "_th"
-            ),
-        )
-        sz = F.size("_th")
-        hs = F.when(
-            sz >= 8,
-            F.transform(
-                F.sequence(F.lit(1), sz - 7),
-                lambda i: F.xxhash64(
-                    *[F.element_at("_th", i + F.lit(k)) for k in range(8)]
-                ),
-            ),
-        ).otherwise(F.array().cast("array<bigint>"))
-        grams = (
-            pre.repartition(para, "doc_id")
-            .select("doc_id", F.explode(hs).alias("gram"))
-            .localCheckpoint()
-        )
-    else:
-        grams = (
-            docs.repartition(para, "doc_id")
-            .select("doc_id", F.explode(word_ngrams("text", 8)).alias("gram"))
-            .localCheckpoint()
-        )
+    grams = (
+        docs.repartition(para, "doc_id")
+        .select("doc_id", F.explode(word_ngrams("text", 8)).alias("gram"))
+        .localCheckpoint()
+    )
     doc_freq = grams.groupBy("gram").agg(
         F.count_distinct("doc_id").alias("doc_freq")
     )
@@ -492,7 +460,7 @@ def q95_dup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     return remove_dup_spans(docs)
 
 
-def _token_grams(docs: DataFrame, hash_keys: bool):
+def _token_grams(docs: DataFrame):
     """Shared span machinery: (tok, grams) for a (doc_id, text) frame —
     the token-array Exchange plus the positioned word-8-gram explode."""
     para = docs.sparkSession.sparkContext.defaultParallelism
@@ -519,10 +487,6 @@ def _token_grams(docs: DataFrame, hash_keys: bool):
     grams = tok.select(
         "doc_id", F.posexplode(gram_arr).alias("pos", "gram")
     )
-    if hash_keys:
-        grams = grams.select(
-            "doc_id", "pos", F.xxhash64("gram").alias("gram")
-        )
     return tok, grams
 
 
@@ -570,16 +534,10 @@ def _cut_spans(tok: DataFrame, grams: DataFrame, banned: DataFrame) -> DataFrame
     )
 
 
-def remove_dup_spans(docs: DataFrame, hash_keys: bool = False) -> DataFrame:
+def remove_dup_spans(docs: DataFrame) -> DataFrame:
     """Core of q95 over any (doc_id, text) frame — see q95 docstring.
-
-    ``hash_keys=True`` is the scale configuration: the gram join/group
-    key becomes ``xxhash64(gram)`` (8 bytes instead of a ~60-char
-    string), narrowing both the doc-freq shuffle and the join-back.
-    False-collision odds are ~n_grams^2/2^64 — at 10^12 grams that is
-    still <<1 spurious removal corpus-wide. The string-key default is
-    what the DuckDB oracle replays bit-exactly."""
-    tok, grams = _token_grams(docs, hash_keys)
+    The string gram key is what the DuckDB oracle replays bit-exactly."""
+    tok, grams = _token_grams(docs)
     # no checkpoint: both gram consumers re-explode from the reused
     # token Exchange (cheap CPU, no resident blocks — the 1M shape)
     dup_grams = (
@@ -594,8 +552,6 @@ def remove_dup_spans(docs: DataFrame, hash_keys: bool = False) -> DataFrame:
 def decontaminate_spans(
     docs: DataFrame,
     eval_docs: DataFrame,
-    hash_keys: bool = False,
-    broadcast_banned: bool = True,
 ) -> DataFrame:
     """Eval-set decontamination as a TRANSFORM: remove from ``docs``
     every token position covered by a word 8-gram that occurs ANYWHERE
@@ -605,16 +561,12 @@ def decontaminate_spans(
     n-grams (the GPT-3/PaLM-style n-gram decontamination policy).
 
     Scale shape: the banned set is the eval corpus's distinct grams —
-    benchmark-sized, so it is BROADCAST by default and the train-side
-    cut needs no extra shuffle beyond q95's machinery (one token
-    Exchange, gram explode, position anti-join, per-doc rebuild). For
-    an eval set too large to broadcast, pass broadcast_banned=False
-    (shuffle semi-join) and hash_keys=True (8-byte keys)."""
-    tok, grams = _token_grams(docs, hash_keys)
-    _etok, egrams = _token_grams(eval_docs, hash_keys)
-    banned = egrams.select("gram").distinct()
-    if broadcast_banned:
-        banned = F.broadcast(banned)
+    benchmark-sized, so it is BROADCAST and the train-side cut needs no
+    extra shuffle beyond q95's machinery (one token Exchange, gram
+    explode, position anti-join, per-doc rebuild)."""
+    tok, grams = _token_grams(docs)
+    _etok, egrams = _token_grams(eval_docs)
+    banned = F.broadcast(egrams.select("gram").distinct())
     return _cut_spans(tok, grams, banned)
 
 

@@ -59,25 +59,25 @@ _N_SHARDS = 4
 # dominate a shard; everything else defaults to ~7s. Balancing by these
 # keeps the slowest shard near max(total/N, the slowest file).
 _FILE_WEIGHTS = {
-    "test_day2_pipeline.py": 799,
+    "test_day2_pipeline.py": 674,
     "test_oracle_parity.py": 532,
-    "test_extensions.py": 331,
     "test_pipeline_models_plans.py": 264,
+    "test_extensions.py": 251,
     "test_property_based.py": 242,
     "test_sinks_incremental_streaming.py": 170,
-    "test_semantic_dedup_incremental.py": 143,
     "test_containment_index.py": 141,
-    "test_dedup_index.py": 138,
+    "test_semantic_dedup_incremental.py": 127,
+    "test_dedup_index.py": 123,
     "test_whitened_semdedup.py": 121,
     "test_ann_index.py": 87,
+    "test_pq.py": 73,
     "test_bpe_trainer.py": 50,
-    "test_pq.py": 47,
     "test_cluster_index.py": 40,
     "test_web_curation.py": 40,
     "test_scd2.py": 36,
     "test_containment.py": 30,
     "test_graph.py": 26,
-    "test_decontamination.py": 16,
+    "test_decontamination.py": 14,
     "test_manifest_shards.py": 13,
     "test_training_shards.py": 12,
     "test_curation_stream.py": 12,

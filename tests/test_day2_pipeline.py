@@ -519,43 +519,6 @@ class TestDay2Pipeline:
             read_clusters(spark, os.path.join(sa, "clusters"))
         ) == _rows(read_clusters(spark, os.path.join(sb, "clusters")))
 
-    def test_semantic_arrow_mode_equals_fold_mode(self, spark, tmp_path):
-        # semantic_arrow=True (the 10^6 execution mode: numpy cell
-        # assignment, gram-matrix refine, Arrow PQ encode) must produce
-        # the same state as the fold default on a clear-margin corpus —
-        # the documented fold-vs-BLAS divergence is confined to
-        # exact-threshold float ties, which the planted corpus avoids
-        from etl_data_warehouse_spark.operators.cluster_index import (
-            read_clusters as _rc,
-        )
-
-        docs, vecs = _corpus(spark)
-        d1, d2, v1, v2 = _split_days(docs, vecs)
-        states = {}
-        for mode, arrow in (("fold", False), ("arrow", True)):
-            st = str(tmp_path / f"state_{mode}")
-            # minhash_arrow rides along: the numpy signature twin is
-            # bit-identical (TestArrowSignatures), so the whole-chain
-            # state must not move either
-            run_day2_ingest(
-                d1, v1, st, batch_id=1, semantic_arrow=arrow,
-                minhash_arrow=arrow, **CFG
-            )
-            run_day2_ingest(
-                d2, v2, st, batch_id=2, semantic_arrow=arrow,
-                minhash_arrow=arrow, **CFG
-            )
-            states[mode] = st
-        for sub in ("shards", "clean_documents"):
-            assert _shard_rows(
-                spark, os.path.join(states["fold"], sub)
-            ) == _shard_rows(
-                spark, os.path.join(states["arrow"], sub)
-            ), f"{sub} diverged between fold and arrow modes"
-        assert _rows(_rc(spark, os.path.join(states["fold"], "clusters"))) == (
-            _rows(_rc(spark, os.path.join(states["arrow"], "clusters")))
-        )
-
     def test_day2_replay_is_idempotent(self, spark, tmp_path):
         docs, vecs = _corpus(spark)
         d1, d2, v1, v2 = _split_days(docs, vecs)
@@ -652,6 +615,16 @@ class TestDay2Pipeline:
 
         with pytest.raises(ValueError, match="config mismatch"):
             run_day2_ingest(d1, v1, state, batch_id=1, **bad)
+        # keys that are not config knobs raise before anything is
+        # stored: a misspelt knob at bootstrap, a retired one later
+        fresh = str(tmp_path / "fresh")
+        with pytest.raises(ValueError, match="unknown day-2 config keys"):
+            run_day2_ingest(d1, v1, fresh, batch_id=1, n_cell=8)
+        assert not os.path.exists(fresh)
+        with pytest.raises(ValueError, match="unknown day-2 config keys"):
+            run_day2_ingest(
+                d1, v1, state, batch_id=1, semantic_arrow=True, **CFG
+            )
 
 
 class TestShardCompaction:

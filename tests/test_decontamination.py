@@ -54,19 +54,6 @@ class TestDecontaminateSpans:
         assert rows[3]["n_removed"] == 0
         assert rows[3]["clean_text"] == _TRAIN[2][1]
 
-    def test_hash_keys_variant_equivalent(self, spark, frames):
-        train, evals = frames
-        a = sorted(
-            tuple(r) for r in decontaminate_spans(train, evals).collect()
-        )
-        b = sorted(
-            tuple(r)
-            for r in decontaminate_spans(
-                train, evals, hash_keys=True
-            ).collect()
-        )
-        assert a == b
-
     def test_written_shards_free_of_eval_grams(
         self, spark, frames, tmp_path
     ):

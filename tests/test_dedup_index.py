@@ -89,81 +89,6 @@ class TestIncrementalDedup:
         assert _pairs_set(inc2) == _pairs_set(expected)
 
 
-class TestArrowSignatures:
-    def test_band_table_arrow_equals_fold(self, spark, sf_dir):
-        # the numpy signature twin must be BIT-IDENTICAL to the JVM
-        # 64-min-agg path (integer min over the same affine mixes) —
-        # band hashes included, since they are computed from the
-        # signatures by the same JVM xxhash64 projection in both modes
-        from etl_data_warehouse_spark.operators.dedup import (
-            band_table,
-            hashed_shingles,
-        )
-
-        docs = load_table(spark, "documents", sf_dir)
-        sh = hashed_shingles(docs, 3).localCheckpoint()
-        fold = sorted(
-            tuple(r) for r in band_table(sh, 64, 32).collect()
-        )
-        arrow = sorted(
-            tuple(r) for r in band_table(sh, 64, 32, arrow=True).collect()
-        )
-        assert fold == arrow
-
-    def test_arrow_safe_default_survives_reshuffle(self, spark, sf_dir):
-        # _minhash_signatures_arrow's co-location contract: a shingle
-        # table re-shuffled on ANOTHER key would yield duplicate doc_id
-        # rows with partial-min signatures. The safe default
-        # (co_located=False) must restore the layout and stay
-        # bit-identical to the co-located run.
-        from etl_data_warehouse_spark.operators.dedup import (
-            _minhash_signatures_arrow,
-            hashed_shingles,
-        )
-
-        docs = load_table(spark, "documents", sf_dir)
-        sh = hashed_shingles(docs, 3).localCheckpoint()
-        good = sorted(
-            tuple(r)
-            for r in _minhash_signatures_arrow(
-                sh, 64, co_located=True
-            ).collect()
-        )
-        # adversarial layout: shingle-keyed shuffle splits docs' rows
-        shuffled = sh.repartition("shingle")
-        safe = sorted(
-            tuple(r)
-            for r in _minhash_signatures_arrow(shuffled, 64).collect()
-        )
-        assert safe == good
-        assert len({r[0] for r in safe}) == len(safe)  # one row per doc
-
-    def test_incremental_dedup_arrow_equals_fold(
-        self, spark, sf_dir, tmp_path
-    ):
-        from etl_data_warehouse_spark.operators.dedup_index import (
-            build_minhash_index,
-            incremental_dedup,
-        )
-
-        docs = load_table(spark, "documents", sf_dir)
-        corpus = docs.filter(F.col("doc_id") % 2 == 0)
-        batch = docs.filter(F.col("doc_id") % 2 == 1)
-        idx = str(tmp_path / "idx_arrow")
-        build_minhash_index(corpus, idx, arrow=True)
-        fold = sorted(
-            tuple(r)
-            for r in incremental_dedup(spark, batch, idx).collect()
-        )
-        arrow = sorted(
-            tuple(r)
-            for r in incremental_dedup(
-                spark, batch, idx, arrow=True
-            ).collect()
-        )
-        assert fold == arrow and len(fold) > 0
-
-
 class TestBucketedIndex:
     def test_bucketed_index_join_no_exchange_on_index_side(
         self, spark, sf_dir, tmp_path

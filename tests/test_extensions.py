@@ -205,18 +205,6 @@ class TestMultimodal:
         assert bytes(assets["payload"]) == doc["text"].encode("utf-8")
 
 
-class TestArrowSimilarity:
-    def test_arrow_path_agrees_with_fold_path(self, emb):
-        fold = similarity.brute_force_topk(emb, emb, k=5).collect()
-        arrow = similarity.brute_force_topk_arrow(emb, emb, k=5).collect()
-        fold_m = {(r["src_id"], r["neighbor_id"]): r["cosine_sim"] for r in fold}
-        arrow_m = {(r["src_id"], r["neighbor_id"]): r["cosine_sim"] for r in arrow}
-        # rankings agree pair-for-pair; similarities within BLAS ulp noise
-        assert set(fold_m) == set(arrow_m)
-        for k_, v in fold_m.items():
-            assert abs(v - arrow_m[k_]) < 1e-9
-
-
 class TestFrameSampling:
     def test_video_assets_fan_out_to_frames(self, docs):
         assets = multimodal.fake_assets(docs)
@@ -416,70 +404,6 @@ class TestIvfQueryBatch:
         recall = len(ivf_set & bf_set) / len(bf_set)
         assert recall >= 0.95, recall
 
-    def test_arrow_assignment_matches_fold(self, spark):
-        """assign_arrow=True must return the same (src, neighbor, rank)
-        set as the fold path on clustered data (ties are measure-zero
-        here; BLAS ulp drift cannot flip well-separated assignments)."""
-        from etl_data_warehouse_spark.operators import similarity
-
-        corpus, queries = self._data(spark)
-        fold = similarity.ivf_topk(
-            corpus, k=3, n_cells=32, nprobe=4, queries=queries
-        ).collect()
-        arrow = similarity.ivf_topk(
-            corpus, k=3, n_cells=32, nprobe=4, queries=queries,
-            assign_arrow=True,
-        ).collect()
-        assert [(r["src_id"], r["neighbor_id"], r["rank"]) for r in fold] == [
-            (r["src_id"], r["neighbor_id"], r["rank"]) for r in arrow
-        ]
-
-    def test_arrow_scoring_matches_fold(self, spark):
-        """score_arrow=True (numpy candidate scoring) must return the
-        same (src, neighbor, rank) set as the fold path — same
-        measure-zero-tie argument as assignment."""
-        from etl_data_warehouse_spark.operators import similarity
-
-        corpus, queries = self._data(spark)
-        fold = similarity.ivf_topk(
-            corpus, k=3, n_cells=32, nprobe=4, queries=queries
-        ).collect()
-        arrow = similarity.ivf_topk(
-            corpus, k=3, n_cells=32, nprobe=4, queries=queries,
-            assign_arrow=True, score_arrow=True,
-        ).collect()
-        assert [(r["src_id"], r["neighbor_id"], r["rank"]) for r in fold] == [
-            (r["src_id"], r["neighbor_id"], r["rank"]) for r in arrow
-        ]
-
-    def test_grouped_scoring_matches_fold(self, spark):
-        """score_grouped=True (per-cell cogrouped matmul, the r13 scale
-        scoring path) must return the same (src, neighbor, rank) set as
-        the fold path — same measure-zero-tie argument — on BOTH the
-        query-batch and the self-search (q28) shape."""
-        from etl_data_warehouse_spark.operators import similarity
-
-        corpus, queries = self._data(spark)
-        fold = similarity.ivf_topk(
-            corpus, k=3, n_cells=32, nprobe=4, queries=queries
-        ).collect()
-        grouped = similarity.ivf_topk(
-            corpus, k=3, n_cells=32, nprobe=4, queries=queries,
-            assign_arrow=True, score_grouped=True,
-        ).collect()
-        assert [(r["src_id"], r["neighbor_id"], r["rank"]) for r in fold] == [
-            (r["src_id"], r["neighbor_id"], r["rank"]) for r in grouped
-        ]
-        self_fold = similarity.ivf_topk(corpus, k=3, n_cells=32).collect()
-        self_grouped = similarity.ivf_topk(
-            corpus, k=3, n_cells=32, assign_arrow=True, score_grouped=True
-        ).collect()
-        assert [
-            (r["src_id"], r["neighbor_id"], r["rank"]) for r in self_fold
-        ] == [
-            (r["src_id"], r["neighbor_id"], r["rank"]) for r in self_grouped
-        ]
-
     def test_no_cartesian_in_query_batch_plan(self, spark):
         from etl_data_warehouse_spark.operators import similarity
 
@@ -493,35 +417,6 @@ class TestIvfQueryBatch:
             .toString()
         )
         assert "CartesianProduct" not in plan
-
-
-class TestKmeansArrowAssignment:
-    def test_arrow_assignment_matches_fold(self, spark):
-        from etl_data_warehouse_spark.operators.similarity import (
-            kmeans_centroids,
-        )
-        from etl_data_warehouse_spark.sources.generators import (
-            generate_clustered_embeddings,
-        )
-
-        data = generate_clustered_embeddings(
-            spark, 800, dim=8, n_clusters=16
-        ).localCheckpoint()
-        fold = {
-            r["cell_id"]: r["cv"]
-            for r in kmeans_centroids(data, 16, max_iterations=5).collect()
-        }
-        arrow = {
-            r["cell_id"]: r["cv"]
-            for r in kmeans_centroids(
-                data, 16, max_iterations=5, assign_arrow=True
-            ).collect()
-        }
-        assert fold.keys() == arrow.keys()
-        for k in fold:
-            assert all(
-                abs(x - y) < 1e-9 for x, y in zip(fold[k], arrow[k])
-            )
 
 
 class TestSemanticDedup:
@@ -593,17 +488,3 @@ class TestSemanticDedup:
             self._twin_corpus(emb), threshold=0.9
         )._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in plan
-
-    def test_pairs_arrow_matches_fold(self, emb):
-        corpus = self._twin_corpus(emb)
-        fold = sorted(
-            tuple(r)
-            for r in similarity.semantic_dedup(corpus, threshold=0.9).collect()
-        )
-        arrow = sorted(
-            tuple(r)
-            for r in similarity.semantic_dedup(
-                corpus, threshold=0.9, assign_arrow=True, pairs_arrow=True
-            ).collect()
-        )
-        assert fold == arrow

@@ -222,66 +222,3 @@ class TestIvfPq:
             codes_packed=packed, assigned=assigned,
         ).collect()
         assert sorted(map(tuple, base)) == sorted(map(tuple, fast))
-
-
-class TestPackEncodeArrow:
-    def test_equals_fold_path(self, spark, corpus, codebooks):
-        """The Arrow packer must reproduce pack_codes(pq_encode(...))
-        exactly on the test corpus: same codes (argmin first-occurrence
-        == asc-code_id tiebreak), bit-equal rnorm2 (same left fold over
-        the codebooks' own cnorm2 values)."""
-        from etl_data_warehouse_spark.operators.pq import (
-            pack_codes,
-            pack_encode_arrow,
-        )
-
-        fold = {
-            r["vec_id"]: (list(r["code_ids"]), r["rnorm2"])
-            for r in pack_codes(
-                pq_encode(corpus, codebooks), codebooks
-            ).collect()
-        }
-        arrow = {
-            r["vec_id"]: (list(r["code_ids"]), r["rnorm2"])
-            for r in pack_encode_arrow(corpus, codebooks).collect()
-        }
-        assert set(fold) == set(arrow)
-        diff_codes = [
-            v for v in fold if fold[v][0] != arrow[v][0]
-        ]
-        assert not diff_codes, diff_codes[:5]
-        for v in fold:
-            assert fold[v][1] == arrow[v][1], v
-
-
-class TestNumpyPqTrainer:
-    def test_matches_fold_trainer_on_separated_corpus(
-        self, spark, corpus, codebooks
-    ):
-        """train_pq_codebooks_numpy (the build_ivf_pq_index arrow-mode
-        trainer) must reproduce the distributed fold trainer's
-        codebooks on a well-separated corpus: identical control flow
-        (seeding, asc-code_id tiebreak, empty-cell carry, early stop)
-        means identical member sets, so centroids differ only by
-        summation order — pinned at 1e-9, six orders above double ulps
-        on unit-scale data."""
-        from etl_data_warehouse_spark.operators.pq import (
-            train_pq_codebooks_numpy,
-        )
-
-        got = {
-            (r["subspace"], r["code_id"]): (list(r["cv"]), r["cnorm2"])
-            for r in train_pq_codebooks_numpy(
-                corpus, m=4, codes=16, max_iterations=4
-            ).collect()
-        }
-        want = {
-            (r["subspace"], r["code_id"]): (list(r["cv"]), r["cnorm2"])
-            for r in codebooks.collect()
-        }
-        assert set(got) == set(want)
-        for key in want:
-            wv, wn = want[key]
-            gv, gn = got[key]
-            assert max(abs(a - b) for a, b in zip(wv, gv)) < 1e-9, key
-            assert abs(wn - gn) < 1e-9, key

@@ -118,16 +118,3 @@ def test_no_cartesian_and_pruned_refine(spark, sf_dir, tmp_path):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan
-
-
-def test_refine_arrow_matches_fold(spark, sf_dir, tmp_path):
-    both, corpus, batch = _split(spark, sf_dir)
-    idx = str(tmp_path / "semdedup_idx_arrow")
-    build_ivf_pq_index(corpus, idx, **_PARAMS)
-    fold = _rows(incremental_semantic_dedup(corpus, batch, idx, threshold=_TH))
-    arrow = _rows(
-        incremental_semantic_dedup(
-            corpus, batch, idx, threshold=_TH, refine_arrow=True
-        )
-    )
-    assert fold == arrow

@@ -74,22 +74,6 @@ class TestDupSpanRemoval:
         # empty text tokenizes to one empty token, nothing removable
         assert cleaned[5]["n_removed"] == 0
 
-    def test_hash_keys_scale_path_matches_string_keys(
-        self, spark, sf_dir
-    ):
-        from etl_data_warehouse_spark.plans.text_quality import (
-            remove_dup_spans,
-        )
-        from etl_data_warehouse_spark.sources.catalog import load_table
-
-        docs = load_table(spark, "documents", sf_dir)
-        a = {tuple(r) for r in remove_dup_spans(docs).collect()}
-        b = {
-            tuple(r)
-            for r in remove_dup_spans(docs, hash_keys=True).collect()
-        }
-        assert a == b
-
     def test_counts_consistent(self, cleaned):
         for r in cleaned.values():
             if not r["clean_text"]:
