@@ -11,9 +11,6 @@ scale answer is persisted index state with FROZEN quantizers:
 - ``codebooks/``  (subspace, code_id, cv, cnorm2) — PQ codebooks
 - ``packed/batch=N/``   (vec_id, code_ids, rnorm2) — compressed codes
 - ``assigned/batch=N/`` (vec_id, cell_id)          — cell assignment
-- ``projected/batch=N/`` (vec_id, embedding)       — whitened vectors
-  (whitened indexes only: build/append project each vector ONCE and
-  keep the result as state, so no later pass re-projects the corpus)
 
 Quantizer state is trained at build time and never touched by appends
 (periodic retraining is an offline REBUILD, the standard production
@@ -25,10 +22,10 @@ subdirectories with mode=overwrite, so a replayed batch rewrites
 byte-identical content instead of appending duplicates — duplicate
 packed/assigned rows would double-score candidates in the ADC scan,
 so append-mode idempotency-by-guard is NOT enough here. The
-``skip_indexed`` guard exists for CROSS-batch re-crawls (an id
-resubmitted in a later batch) and probes the UNION of both tables'
-ids: an id left half-written by a crashed batch K is skipped by later
-batches (K's replay completes it via overwrite) yet never lost.
+re-crawl guard exists for CROSS-batch re-crawls (an id resubmitted in
+a later batch) and probes the UNION of both tables' ids: an id left
+half-written by a crashed batch K is skipped by later batches (K's
+replay completes it via overwrite) yet never lost.
 
 Reference parity: none (the reference has no vector search); this is
 the brief's training-data extension, composed from public methods
@@ -36,8 +33,6 @@ the brief's training-data extension, composed from public methods
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -143,7 +138,7 @@ def load_ivf_pq_index(spark: SparkSession, index_dir: str) -> dict:
 def _drop_crossbatch_recrawls(
     new_vectors: DataFrame, index_dir: str, batch_id: int
 ) -> DataFrame:
-    """The skip_indexed probe: anti-join ids already in packed OR
+    """The re-crawl guard: anti-join ids already in packed OR
     assigned of any OTHER batch — re-crawled ids across batches drop,
     while this batch's own earlier (possibly partial) write is excluded
     so a replay always re-encodes the full batch and the overwrite
@@ -171,23 +166,17 @@ def append_to_ivf_index(
     index_dir: str,
     batch_id: int,
     vec_col: str = "embedding",
-    skip_indexed: bool = True,
 ) -> None:
     """Encode + assign a new batch under the FROZEN quantizer state and
     persist it as ``batch=batch_id`` (overwrite → replay-idempotent;
     see module docstring for why append-mode would corrupt the scan).
-    ``skip_indexed`` anti-joins ids already in packed OR assigned of
-    any OTHER batch — re-crawled ids across batches are dropped, while
-    this batch's own earlier (possibly partial) write is excluded from
-    the probe so a replay always re-encodes the full batch and the
-    overwrite completes it."""
+    The re-crawl guard (``_drop_crossbatch_recrawls``) first drops ids
+    already indexed by any OTHER batch."""
     spark = new_vectors.sparkSession
     idx = load_ivf_pq_index(spark, index_dir)
-    if skip_indexed:
-        new_vectors = _drop_crossbatch_recrawls(
-            new_vectors, index_dir, batch_id
-        )
-    new_vectors = new_vectors.localCheckpoint()
+    new_vectors = _drop_crossbatch_recrawls(
+        new_vectors, index_dir, batch_id
+    ).localCheckpoint()
     if not new_vectors.take(1):
         # every id was a re-crawl — nothing to encode, and writing
         # nothing keeps the batch dirs absent consistently on replay
@@ -385,214 +374,3 @@ def incremental_semantic_dedup(
         )
     )
     return out.orderBy("vec_id") if sort else out
-
-
-# --- Whitened SemDeDup against the persisted index ---------------------------
-# SemDeDup as published whitens before clustering (Abbas et al. 2023
-# §3). For the INCREMENTAL path the whitening model is INDEX STATE,
-# frozen at build time exactly like the coarse centroids and PQ
-# codebooks: every later batch projects under the day-1 model, so
-# verdicts keep the decomposition property (a batch verdict depends
-# only on earlier members' positions in ONE fixed whitened space —
-# retraining the model per day would silently move the space under
-# the standing corpus).
-
-def _write_whitening(index_dir: str, mean, components, eigenvalues) -> None:
-    import pyarrow as pa
-    import pyarrow.parquet as papq
-
-    os.makedirs(index_dir, exist_ok=True)
-    papq.write_table(
-        pa.table(
-            {
-                "mean": pa.array([list(map(float, mean))],
-                                 type=pa.list_(pa.float64())),
-                "components": pa.array(
-                    [[float(x) for row in components for x in row]],
-                    type=pa.list_(pa.float64()),
-                ),
-                "eigenvalues": pa.array(
-                    [list(map(float, eigenvalues))],
-                    type=pa.list_(pa.float64()),
-                ),
-                "k": pa.array([len(eigenvalues)], type=pa.int32()),
-                "dim": pa.array([len(mean)], type=pa.int32()),
-            }
-        ),
-        os.path.join(index_dir, "whitening.parquet"),
-    )
-
-
-def load_whitening(index_dir: str):
-    """(mean, components, eigenvalues) numpy arrays of the frozen
-    whitening model, or None when the index was built unwhitened."""
-    import numpy as np
-    import pyarrow.parquet as papq
-
-    path = os.path.join(index_dir, "whitening.parquet")
-    if not os.path.exists(path):
-        return None
-    t = papq.read_table(path)
-    mean = np.asarray(t.column("mean").to_pylist()[0], dtype=np.float64)
-    k = t.column("k").to_pylist()[0]
-    dim = t.column("dim").to_pylist()[0]
-    comps = np.asarray(
-        t.column("components").to_pylist()[0], dtype=np.float64
-    ).reshape(k, dim)
-    evals = np.asarray(
-        t.column("eigenvalues").to_pylist()[0], dtype=np.float64
-    )
-    return mean, comps, evals
-
-
-def _project_frozen(vectors: DataFrame, model, vec_col: str) -> DataFrame:
-    from .similarity import pca_project
-
-    mean, comps, evals = model
-    return pca_project(vectors, mean, comps, evals, vec_col=vec_col).select(
-        "vec_id", F.col("projected").alias("embedding")
-    )
-
-
-def build_whitened_ivf_pq_index(
-    vectors: DataFrame,
-    index_dir: str,
-    k: int | None = None,
-    vec_col: str = "embedding",
-    **build_kw,
-) -> None:
-    """Train the PCA-whitening model on the corpus, persist it as index
-    state (whitening.parquet), and build the IVF-PQ index over the
-    WHITENED vectors. ``build_kw`` forwards to build_ivf_pq_index.
-
-    The projection runs ONCE: the projected corpus is materialized as
-    ``projected/batch=0`` — a first-class state table next to the
-    packed codes — and every downstream training/encode/assign pass
-    scans that parquet. Before r11 the lazy mapInPandas projection
-    re-executed inside each consumer (k-means checkpoint, PQ train,
-    encode, assign — ~4 corpus-wide projection passes per build; the
-    76.2s-vs-45.8s XL gap the r10 verdict flagged). Persisting it also
-    IS the daily-path state ``incremental_semantic_dedup_whitened``
-    wants: the exact-refine scans projected vectors predicate-pushed
-    on vec_id instead of re-projecting the corpus per batch."""
-    from .similarity import pca_model
-
-    spark = vectors.sparkSession
-    dim = vectors.select(F.size(vec_col).alias("d")).first()["d"]
-    mean, comps, evals = pca_model(vectors, dim, k or dim, vec_col=vec_col)
-    _write_whitening(index_dir, mean, comps, evals)
-    _project_frozen(vectors, (mean, comps, evals), vec_col).write.mode(
-        "overwrite"
-    ).parquet(f"{index_dir}/projected/batch=0")
-    proj = (
-        spark.read.option("basePath", f"{index_dir}/projected")
-        .parquet(f"{index_dir}/projected/batch=0")
-        .drop("batch")
-    )
-    build_ivf_pq_index(proj, index_dir, **build_kw)
-
-
-def load_projected(spark: SparkSession, index_dir: str) -> DataFrame:
-    """The whitened index's projected-corpus state table (all batches):
-    (vec_id, embedding) in the frozen whitened space."""
-    return (
-        spark.read.option("basePath", f"{index_dir}/projected")
-        .parquet(f"{index_dir}/projected")
-        .drop("batch")
-    )
-
-
-def append_to_whitened_ivf_index(
-    new_vectors: DataFrame,
-    index_dir: str,
-    batch_id: int,
-    vec_col: str = "embedding",
-    **kw,
-) -> None:
-    """append_to_ivf_index under the frozen whitening model, extending
-    the ``projected/`` state table with the batch's whitened vectors
-    (projected ONCE — the localCheckpoint serves encode, assign, and
-    the projected write from one batch-sized materialization).
-
-    Write order: packed/assigned first (via append_to_ivf_index),
-    ``projected/batch=N`` LAST — the recrawl guard probes
-    packed/assigned, so a doc must only appear in projected once the
-    rows the guard sees are on disk (the dedup_index bands-vs-shingles
-    ordering argument); a crash in between is completed by this
-    batch's own replay (overwrite) and the half-written ids stay
-    invisible to other batches' guards until then."""
-    model = load_whitening(index_dir)
-    if model is None:
-        raise ValueError(
-            f"{index_dir} has no whitening.parquet — built unwhitened?"
-        )
-    if not os.path.exists(os.path.join(index_dir, "projected", "batch=0")):
-        # A whitened index built before projected/ became state (r11)
-        # has packed codes only: projected vectors CANNOT be
-        # reconstructed from them, and appending projected/batch=N
-        # beside a missing batch=0 would make the daily corpus=None
-        # dedup silently compare against post-upgrade batches alone
-        # (missed duplicates, no error). Same explicit pre-upgrade
-        # handling minhash_buckets gets in dedup_index.
-        raise ValueError(
-            f"{index_dir} has no projected/batch=0 state table — this "
-            "whitened index predates projected-corpus state and must "
-            "be rebuilt with build_whitened_ivf_pq_index before "
-            "appending"
-        )
-    new_vectors = _drop_crossbatch_recrawls(new_vectors, index_dir, batch_id)
-    proj = _project_frozen(new_vectors, model, vec_col).localCheckpoint()
-    if not proj.take(1):
-        # every id was a re-crawl — write nothing, consistently
-        return
-    append_to_ivf_index(
-        proj, index_dir, batch_id=batch_id, skip_indexed=False, **kw
-    )
-    proj.write.mode("overwrite").parquet(
-        f"{index_dir}/projected/batch={batch_id}"
-    )
-
-
-def incremental_semantic_dedup_whitened(
-    corpus: DataFrame | None,
-    new_vectors: DataFrame,
-    index_dir: str,
-    threshold: float = 0.95,
-    vec_col: str = "embedding",
-    corpus_projected: bool = False,
-    **kw,
-) -> DataFrame:
-    """incremental_semantic_dedup in the index's frozen whitened space:
-    project the batch under the persisted model, then run the standard
-    O(batch) verdict. Verdicts equal similarity.whitened_semantic_dedup
-    over the cumulative corpus (with the same frozen model/centroids)
-    restricted to the batch — the same decomposition the raw-space twin
-    pins (tests/test_whitened_semdedup.py).
-
-    ``corpus=None`` (the daily default since r11) reads the index's own
-    ``projected/`` state table — build and append maintain it, so the
-    refine's semi-join prune pushes vec_id straight to that parquet
-    scan and NOTHING is re-projected but the batch. Passing a
-    pre-projected table explicitly still works with
-    ``corpus_projected=True``; passing RAW vectors
-    (corpus_projected=False) projects them inline — correct, but the
-    mapInPandas is a pushdown barrier, so that projection pass is
-    O(corpus) per batch: fine for backfills, wrong as the daily path."""
-    model = load_whitening(index_dir)
-    if model is None:
-        raise ValueError(
-            f"{index_dir} has no whitening.parquet — built unwhitened?"
-        )
-    if corpus is None:
-        corpus_w = load_projected(new_vectors.sparkSession, index_dir)
-    elif corpus_projected:
-        corpus_w = corpus.select("vec_id", F.col(vec_col).alias("embedding"))
-    else:
-        corpus_w = _project_frozen(corpus, model, vec_col)
-    return incremental_semantic_dedup(
-        corpus_w,
-        _project_frozen(new_vectors, model, vec_col),
-        index_dir,
-        threshold=threshold,
-        **kw,
-    )

@@ -555,17 +555,6 @@ def _minhash_aggs(num_hashes: int) -> list:
     ]
 
 
-def minhash_signatures(
-    docs: DataFrame, num_hashes: int = 64, n: int = 3
-) -> DataFrame:
-    """MinHash signatures: min over shingles of affine permutations of
-    one xxhash64(shingle) — one shuffle on doc_id."""
-    sh = shingle_table(docs, n).withColumn(
-        "h30", F.pmod(F.xxhash64("shingle"), F.lit(_P30))
-    )
-    return sh.groupBy("doc_id").agg(*_minhash_aggs(num_hashes))
-
-
 def hashed_shingles(docs: DataFrame, n: int = 3) -> DataFrame:
     """(doc_id, shingle) with shingles carried as xxhash64 LONGS: ~4x
     smaller state/shuffles than strings; Jaccard over hashes equals

@@ -6,7 +6,7 @@ run as Arrow-batched pandas functions over ``mapInPandas`` (the only
 place Python touches row data in this engine — and it is vectorized).
 
 The actual media codecs (PIL / librosa / av) are NOT in this container,
-so the decode step is STUBBED: ``decode_*`` raise NotImplementedError
+so the decode step is STUBBED: ``decode_image`` raises NotImplementedError
 unless the codec import succeeds, and ``extract_features`` uses a
 deterministic byte-level fake decode. The Spark-side plumbing — schema,
 Arrow batch shapes, partitioning, UDF signatures — is real and tested.
@@ -68,16 +68,6 @@ def decode_image(payload: bytes):
             "image decode requires PIL, which is not available in this "
             "environment; use extract_features() for the deterministic "
             "byte-level path"
-        ) from e
-
-
-def decode_audio(payload: bytes):
-    """Decode an audio payload. STUB: requires soundfile/librosa."""
-    try:
-        import soundfile  # noqa: F401
-    except ImportError as e:
-        raise NotImplementedError(
-            "audio decode requires soundfile/librosa (unavailable here)"
         ) from e
 
 

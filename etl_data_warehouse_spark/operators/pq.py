@@ -33,8 +33,6 @@ this is brief-mandated training-data-pipeline surface.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -228,109 +226,6 @@ def pack_codes(codes_table: DataFrame, codebooks: DataFrame) -> DataFrame:
             ).alias("rnorm2"),
         )
     )
-
-
-def pq_topk(
-    codes_table: DataFrame,
-    codebooks: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    refine_with: DataFrame | None = None,
-    refine_factor: int = 10,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate cosine top-k per query over the PQ codes.
-
-    Pure-ADC mode (refine_with=None): rank by the table-lookup cosine.
-    Refine mode: ADC shortlists k*refine_factor candidates, then exact
-    cosine over the original vectors (``refine_with``) re-ranks —
-    touching only shortlist rows of the raw corpus.
-    Output: (src_id, neighbor_id, score, rank); self-matches excluded.
-    """
-    m = codebooks.select(F.max("subspace")).first()[0] + 1
-    dim = _vec_dim(queries, vec_col)
-    qsub = _subvectors(
-        queries.select(F.col("vec_id"), F.col(vec_col)), m, dim, vec_col
-    ).withColumnRenamed("vec_id", "src_id")
-    # (src_id, subspace, code_id, partial, cnorm2): m·codes rows/query
-    table = (
-        qsub.join(F.broadcast(codebooks), "subspace")
-        .select(
-            "src_id",
-            "subspace",
-            "code_id",
-            _dot("sv", "cv").alias("partial"),
-            "cnorm2",
-        )
-    )
-    qnorm = queries.select(
-        F.col("vec_id").alias("src_id"),
-        F.sqrt(
-            _dot(
-                F.transform(vec_col, lambda x: x.cast("double")),
-                F.transform(vec_col, lambda x: x.cast("double")),
-            )
-        ).alias("qn"),
-    )
-    adc = (
-        codes_table.join(F.broadcast(table), ["subspace", "code_id"])
-        .groupBy("src_id", "vec_id")
-        .agg(
-            F.sum("partial").alias("num"),
-            F.sum("cnorm2").alias("rnorm2"),
-            F.count(F.lit(1)).alias("m_terms"),
-        )
-        .filter(F.col("m_terms") == m)  # guard against partial indexes
-        .join(F.broadcast(qnorm), "src_id")
-        .filter(F.col("src_id") != F.col("vec_id"))
-        .select(
-            "src_id",
-            F.col("vec_id").alias("neighbor_id"),
-            (
-                F.col("num") / (F.col("qn") * F.sqrt(F.col("rnorm2")))
-            ).alias("score"),
-        )
-    )
-    w = Window.partitionBy("src_id").orderBy(F.desc("score"), "neighbor_id")
-    if refine_with is None:
-        return (
-            adc.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .orderBy("src_id", "rank")
-        )
-    shortlist = (
-        adc.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k * refine_factor)
-        .select("src_id", "neighbor_id")
-    )
-    dblv = F.transform(vec_col, lambda x: x.cast("double"))
-    corpus = refine_with.select(
-        F.col("vec_id").alias("neighbor_id"), dblv.alias("nv")
-    )
-    qv = queries.select(F.col("vec_id").alias("src_id"), dblv.alias("qv"))
-    exact = (
-        shortlist.join(corpus, "neighbor_id")
-        .join(F.broadcast(qv), "src_id")
-        .select(
-            "src_id",
-            "neighbor_id",
-            (
-                _dot("qv", "nv")
-                / (F.sqrt(_dot("qv", "qv")) * F.sqrt(_dot("nv", "nv")))
-            ).alias("score"),
-        )
-    )
-    w2 = Window.partitionBy("src_id").orderBy(F.desc("score"), "neighbor_id")
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .orderBy("src_id", "rank")
-    )
-
-
-def compression_ratio(dim: int, m: int, codes: int) -> float:
-    """Raw float32 bytes per vector vs effective PQ code bytes."""
-    return (4.0 * dim) / (m * max(1.0, math.ceil(math.log2(codes)) / 8.0))
 
 
 def ivfadc_topk(

@@ -4,7 +4,9 @@ and dbt schema tests — SURVEY.md §2.11).
 Every check is a lazy DataFrame returning violations or stats — the
 engine-side twin of the reference's SQL round-trips. At 100 TB each
 check is a single scan (null rates / assertions fold into one
-aggregation per table) or a broadcast anti-join (orphans).
+aggregation per table). Orphan detection lives in the plans that
+need it: a left-anti join in q11, a broadcast left join in the
+``run_pipeline`` quality gate.
 """
 
 from __future__ import annotations
@@ -47,22 +49,6 @@ def duplicate_keys(df: DataFrame, key: str) -> DataFrame:
     """Business keys appearing more than once
     (reference: data_quality_check.py:76-105)."""
     return df.groupBy(key).count().filter(F.col("count") > 1)
-
-
-def orphan_count(fact: DataFrame, dim: DataFrame, fk: str, pk: str) -> DataFrame:
-    """Fact rows whose FK misses the dimension — LEFT ANTI join
-    (reference: data_quality_check.py:108-138 LEFT JOIN ... IS NULL)."""
-    return fact.join(
-        F.broadcast(dim.select(F.col(pk).alias(fk)).distinct()), fk, "left_anti"
-    )
-
-
-def assert_empty(df: DataFrame, name: str) -> None:
-    """Raise if a violation set is non-empty (dbt test semantics,
-    reference: dbt_warehouse/tests/*.sql)."""
-    n = df.limit(1).count()
-    if n:
-        raise AssertionError(f"quality check failed: {name} has violations")
 
 
 def audit_log_row(

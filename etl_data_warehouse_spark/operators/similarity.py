@@ -993,52 +993,3 @@ def pca_project(
         .repartition(para)
         .mapInPandas(project, "vec_id bigint, projected array<double>")
     )
-
-
-def whitened_semantic_dedup(
-    vectors: DataFrame,
-    threshold: float = 0.95,
-    dim: int | None = None,
-    k: int | None = None,
-    n_cells: int | None = None,
-    centroids: DataFrame | None = None,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """SemDeDup AS PUBLISHED (Abbas et al. 2023, arXiv:2303.09540 §3:
-    embeddings are whitened before clustering): PCA-whiten the corpus
-    — one distributed fixed-point Gramian pass trains the model
-    (pca_model), one Arrow map pass projects (pca_project) — then run
-    :func:`semantic_dedup` in the whitened space. Whitening equalizes
-    per-direction variance, so cosine thresholds measure novelty
-    instead of rewarding alignment with the corpus's dominant
-    directions — on corpora with strong anisotropy it separates planted
-    twins from merely-correlated neighbors better than raw cosine
-    (pinned in tests/test_whitened_semdedup.py).
-
-    ``k`` keeps the top-k components (default: all ``dim``). Verdict
-    columns match semantic_dedup: (vec_id, cell_id, kept, dup_of) —
-    cell ids live in the WHITENED space.
-
-    Deterministic end to end for a given corpus: the Gramian and sums
-    are BIGINT fixed-point (partition-order independent), eigh and the
-    projection matmul are driver/numpy-deterministic. Not
-    SQL-replayable (eigensolver) — a pytest-proven operator, same
-    class as kmeans training.
-
-    100 TB shape: + one Gramian aggregate (d^2-sized partials,
-    map-side combined) and one map pass over the corpus on top of
-    semantic_dedup's own cost; the eigendecomposition is d x d on the
-    driver.
-    """
-    if dim is None:
-        dim = vectors.select(F.size(vec_col).alias("d")).first()["d"]
-    mean, comps, evals = pca_model(vectors, dim, k or dim, vec_col=vec_col)
-    proj = pca_project(vectors, mean, comps, evals, vec_col=vec_col).select(
-        "vec_id", F.col("projected").alias("embedding")
-    )
-    return semantic_dedup(
-        proj,
-        threshold=threshold,
-        n_cells=n_cells,
-        centroids=centroids,
-    )

@@ -1,30 +1,34 @@
-"""Mergeable distinct-count sketches (HLL) — the 100 TB COUNT(DISTINCT)
-pattern.
+"""Mergeable sketches — the 100 TB pre-aggregate-then-rollup pattern.
 
-Exact COUNT(DISTINCT) requires a full shuffle of every distinct value
-per group (Expand + two-phase agg); at petabyte scale the idiomatic
-answer is pre-aggregated HyperLogLog sketches: build one small binary
-sketch per fine-grained partition (e.g. per day), persist it, and
-answer ANY coarser rollup (month, year, total, sliding window) by
-merging sketches — no rescan of the fact, no re-shuffle of raw values,
-and sketch union is lossless w.r.t. the sketch's own accuracy
-(register-wise max), so pre-agg + merge == one-pass sketch on raw data.
+Exact COUNT(DISTINCT) and exact heavy hitters need a full shuffle of
+every distinct value per group; at petabyte scale the idiomatic answer
+is a small per-partition sketch (e.g. per day), persisted and merged
+to ANY coarser rollup (month, year, total, sliding window) with no
+rescan of the fact. Sketch union is lossless w.r.t. the sketch's own
+accuracy, so pre-agg + merge == one-pass sketch on raw data.
 
-Spark exposes Apache DataSketches HLL natively (Spark 3.5+):
-``hll_sketch_agg`` / ``hll_union_agg`` / ``hll_sketch_estimate`` —
-JVM-side, no UDFs. The reference's analytics use exact COUNT(DISTINCT)
-only (reference: warehouse/analytics_queries.sql); this module is the
-scale superset; its accuracy and merge-consistency contracts are pinned
-in tests (TestHllSketches) rather than the DuckDB oracle because
-DataSketches binaries are not reproducible in DuckDB.
+- Distinct count: the portable register HLL (``hll_register_cols`` /
+  ``hll_registers`` / ``hll_merge_registers`` / ``hll_estimate``),
+  plain integer/bit Spark SQL that Catalyst plans and DuckDB replays
+  token-for-token, so its ESTIMATE sits under the oracle hash gate
+  (q132).
+- Heavy hitters: ``daily_topk_sketches`` / ``rollup_topk`` /
+  ``global_topk`` over Spark's DataSketches ``approx_top_k_*``
+  functions (q92).
+- Membership, quantiles and frequencies: the portable Bloom filter
+  (q136), log-linear quantile histogram (q137) and count-min sketch,
+  each in the same hash-exact integer arithmetic.
+
+The reference's analytics use exact COUNT(DISTINCT) only (reference:
+warehouse/analytics_queries.sql); this module is the scale superset.
+(The DataSketches HLL rollups that duplicated the portable HLL are
+retired: git show 5be66ed:etl_data_warehouse_spark/operators/sketches.py.)
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-DEFAULT_LG_K = 12  # 4096 registers, ~1.6% relative standard error
 
 _MILLIS_PER_DAY = 86_400_000
 
@@ -42,59 +46,16 @@ def _utc_day(ts_col: str) -> F.Column:
     )
 
 
-def daily_distinct_sketches(
-    events: DataFrame,
-    value_col: str = "user_id",
-    ts_col: str = "ts",
-    lg_k: int = DEFAULT_LG_K,
-) -> DataFrame:
-    """Per-day HLL sketch of ``value_col`` — the fine-grained
-    pre-aggregate a pipeline would persist alongside its daily
-    partitions. One shuffle at day grain; map-side partial sketches."""
-    return events.groupBy(_utc_day(ts_col).alias("day")).agg(
-        F.hll_sketch_agg(value_col, F.lit(lg_k)).alias("sketch"),
-        F.count(F.lit(1)).alias("n_rows"),
-    )
-
-
-def rollup_distinct(
-    sketches: DataFrame, grain_expr: F.Column, grain_name: str = "grain"
-) -> DataFrame:
-    """Merge per-day sketches to any coarser grain and estimate.
-    ``grain_expr`` maps the ``day`` column, e.g.
-    ``F.date_trunc('month', F.col('day'))``."""
-    return (
-        sketches.groupBy(grain_expr.alias(grain_name))
-        .agg(
-            F.hll_union_agg("sketch").alias("merged"),
-            F.sum("n_rows").alias("n_rows"),
-        )
-        .select(
-            grain_name,
-            F.hll_sketch_estimate("merged").alias("approx_distinct"),
-            "n_rows",
-        )
-    )
-
-
-def total_distinct(sketches: DataFrame) -> int:
-    """Global distinct estimate from the persisted daily sketches."""
-    row = sketches.agg(
-        F.hll_sketch_estimate(F.hll_union_agg("sketch")).alias("est")
-    ).first()
-    return int(row["est"])
-
-
 # --- Frequent-items (heavy hitters) sketches --------------------------------
 # Spark 4.1 ships DataSketches frequent-items as SQL functions:
 # approx_top_k(expr, k, maxItemsTracked) for one-shot estimation, and
 # the mergeable triple approx_top_k_accumulate / _combine / _estimate
-# for the pre-aggregate-then-rollup pattern (same shape as the HLL
-# rows above). Guarantee: with maxItemsTracked M, every item with
-# count > n/M is reported and counts are within n/M of exact — so for
-# a bounded-cardinality column (event_type, lang, source, status) a
-# modest M makes the sketch EXACT. Like HLL, the binary state is not
-# DuckDB-reproducible, so contracts are test-pinned.
+# for the pre-aggregate-then-rollup pattern (same shape as the
+# register HLL below). Guarantee: with maxItemsTracked M, every item
+# with count > n/M is reported and counts are within n/M of exact — so
+# for a bounded-cardinality column (event_type, lang, source, status)
+# a modest M makes the sketch EXACT. The binary state is not
+# DuckDB-reproducible, so the merge contracts are test-pinned.
 
 
 def daily_topk_sketches(
@@ -150,19 +111,17 @@ def global_topk(sketches: DataFrame, k: int, max_items: int = 1024) -> list:
 
 
 # --- Portable register-level HLL (cross-engine hash-exact) -------------------
-# The DataSketches paths above are the production sketches, but their
-# binary state is not reproducible outside the JVM, so their evidence
-# is test-pinned. This family implements the HLL register math
-# DIRECTLY (Flajolet et al. 2007): md5-derived 60-bit hash, p register
-# bits, rho = leading-zero rank of the remaining 52-bit window,
-# register = MAX(rho) — every step integer/bit arithmetic that DuckDB
-# reproduces token-for-token, so the ORACLE GATE can hash-check a
-# sketch end-to-end (q132). The harmonic-mean denominator is kept as
-# an EXACT BIGINT (sum of 2^(53-M_j), max 256*2^53 < 2^62); the only
-# float op is one literal/BIGINT divide at the output boundary.
-# Register tables are mergeable by register-wise MAX — union == merge
-# is pinned by TestPortableHll, the same contract the DataSketches
-# rollups rely on.
+# The distinct-count sketch. DataSketches HLL binary state is not
+# reproducible outside the JVM, so this family implements the HLL
+# register math DIRECTLY (Flajolet et al. 2007): md5-derived 60-bit
+# hash, p register bits, rho = leading-zero rank of the remaining 52-bit
+# window, register = MAX(rho) — every step integer/bit arithmetic that
+# DuckDB reproduces token-for-token, so the ORACLE GATE can hash-check a
+# sketch end-to-end (q132). The harmonic-mean denominator is kept as an
+# EXACT BIGINT (sum of 2^(53-M_j), max 256*2^53 < 2^62); the only float
+# op is one literal/BIGINT divide at the output boundary. Register
+# tables are mergeable by register-wise MAX — union == merge is pinned
+# by TestPortableHll.
 
 HLL_P = 8  # 256 registers; RSE ~ 1.04/sqrt(256) = 6.5%
 _HLL_M = 1 << HLL_P

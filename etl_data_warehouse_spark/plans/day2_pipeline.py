@@ -102,7 +102,7 @@ metastore needs to outlive the session. ``minhash_buckets=0`` opts
 back into plain parquet; state dirs bootstrapped before r11 carry no
 ``minhash_buckets`` key and keep reading their plain layout — the
 physical layout is index state, pinned at bootstrap like every other
-config knob.
+config knob, so a later override of it on such a dir raises.
 """
 
 from __future__ import annotations
@@ -167,9 +167,12 @@ def _load_or_init_config(state_dir: str, overrides: dict) -> dict:
     overrides that disagree — LSH band structure, shingle width, PQ
     geometry and thresholds are index state, not per-run knobs (a
     mismatch would silently produce wrong verdicts, the worst failure
-    mode a dedup pipeline has). A key that is not a config knob raises
-    too: stored at bootstrap and ignored by every later day, a
-    misspelt or retired knob would otherwise vanish silently."""
+    mode a dedup pipeline has). An override of a knob the stored config
+    lacks (a dir bootstrapped before the knob existed) is a mismatch
+    too: the stored state keeps the knob's pre-existing behaviour. A
+    key that is not a config knob raises as well: stored at bootstrap
+    and ignored by every later day, a misspelt or retired knob would
+    otherwise vanish silently."""
     unknown = sorted(set(overrides) - set(_DEFAULTS))
     if unknown:
         raise ValueError(
@@ -181,9 +184,9 @@ def _load_or_init_config(state_dir: str, overrides: dict) -> dict:
         with open(path) as fh:
             cfg = json.load(fh)
         clash = {
-            k: (v, cfg[k])
+            k: (v, cfg.get(k, "<absent>"))
             for k, v in overrides.items()
-            if k in cfg and cfg[k] != v
+            if k not in cfg or cfg[k] != v
         }
         if clash:
             raise ValueError(

@@ -1456,8 +1456,10 @@ ORDER BY s.vec_id
 # 100 TB shape: the projection is MAP-ONLY — the K-row model collapses
 # to a single broadcast row (sort_array(collect_list(struct))), so no
 # shuffle is added on top of semantic_dedup's own cell shuffle; the
-# per-row cost is K x d fused multiply-adds, the same matmul the Arrow
-# scale path (ann_index.build_whitened_ivf_pq_index) runs vectorized.
+# per-row cost is K x d fused multiply-adds, the same matmul
+# similarity.pca_project runs vectorized. (The persisted whitened
+# IVF-PQ index that once ran it at scale is retired:
+# git show 5be66ed:etl_data_warehouse_spark/operators/ann_index.py.)
 
 _Q157_ARTIFACT_DIR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),

@@ -480,16 +480,15 @@ ORDER BY bin
 
 def q132_hll_register_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct-user HLL sketch per event type PLUS the merged-total
-    grain, with the register math itself under the hash gate: the
-    DataSketches paths (operators/sketches.py daily_distinct_sketches)
-    are the production sketches but their binary state cannot be
-    reproduced in DuckDB, so this query implements the HLL registers
-    portably (md5 60-bit hash, 8 register bits, bit_length rho,
-    register-wise MAX) and the oracle recomputes them token-for-token
-    — the first sketch in the registry whose ESTIMATE is hash-checked,
-    not test-pinned. The harmonic denominator stays an exact BIGINT
-    (sum of 2^(53-M_j) + closed-form empty-register correction); the
-    single float op is one literal/BIGINT divide at the boundary.
+    grain, with the register math itself under the hash gate:
+    DataSketches HLL binary state cannot be reproduced in DuckDB, so
+    this query implements the HLL registers portably (md5 60-bit hash, 8
+    register bits, bit_length rho, register-wise MAX) and the oracle
+    recomputes them token-for-token — the first sketch in the registry
+    whose ESTIMATE is hash-checked, not test-pinned. The harmonic
+    denominator stays an exact BIGINT (sum of 2^(53-M_j) + closed-form
+    empty-register correction); the single float op is one
+    literal/BIGINT divide at the boundary.
 
     The '__all__' grain is stacked into the SAME scan (explode of
     [event_type, '__all__']) — per-grain registers and the union

@@ -143,9 +143,3 @@ _rotated = {k: QUERIES[k] for k in _WINDOW_FIRST if k in QUERIES}
 for _k, _v in QUERIES.items():
     _rotated.setdefault(_k, _v)
 QUERIES = _rotated
-
-
-def register(name: str, fn: QueryFn, oracle: str | None) -> None:
-    QUERIES[name] = fn
-    if oracle is not None:
-        ORACLES[name] = oracle

@@ -18,12 +18,12 @@ One pass per sink: each builds its merged frame once and writes it
 once, and the counts it returns come from that write. Rows carry their
 origin in a ``__sink_tag`` column; a ``pyspark.sql.Observation`` counts
 the tags as rows stream into the writer, and the rows the merge discards
-(replaced existing rows, unchanged SCD2 versions) are filtered out after
-it. ``_atomic_swap_write`` finishes the temp directory before renaming,
-so a frame reading the old table needs no ``localCheckpoint``. Two stay,
-where a frame is read after its source changed: ``merge_upsert_stable``'s
-keyed frame (callers join facts to it after the swap) and the in-place
-dynamic partition overwrites, whose target is also their source.
+(replaced existing rows) are filtered out after it. ``_atomic_swap_write``
+finishes the temp directory before renaming, so a frame reading the old
+table needs no ``localCheckpoint``. Two stay, where a frame is read after
+its source changed: ``merge_upsert_stable``'s keyed frame (callers join
+facts to it after the swap) and the in-place dynamic partition overwrite
+of ``merge_upsert_partitioned``, whose target is also its source.
 
 Crash recovery: a crash between the swap's two renames leaves no table
 at ``path``, only ``path.__old_*``. Sinks open their target through
@@ -266,192 +266,3 @@ def merge_upsert_partitioned(
     merged, obs = _observe(merged.withColumn(_TAG, F.lit("rows")), "rows")
     _overwrite_partitions(_untag(merged), path, partition_col)
     return obs.get["rows"]
-
-
-def _scd2_merge(
-    incoming: DataFrame,
-    current: DataFrame | None,
-    business_key: str,
-    tracked_cols: list[str],
-    effective_date: str,
-) -> DataFrame:
-    """The SCD2 classifier both SCD2 sinks share: the next state of the
-    current versions (``current`` is None on a first load), tagged
-    ``inserted``/``changed`` (incoming rows stamped as version 1 / the
-    current version + 1), ``unchanged`` (same tracked-attribute hash;
-    the caller drops them after counting), ``closed`` (current rows a
-    changed key supersedes) or null (current rows left alone)."""
-    incoming = incoming.dropDuplicates([business_key])
-    eff = F.lit(effective_date).cast("date")
-
-    def stamped(version, tag):
-        return [
-            eff.alias("valid_from"),
-            F.lit(None).cast("date").alias("valid_to"),
-            F.lit(True).alias("is_current"),
-            version.cast("int").alias("version"),
-            tag.alias(_TAG),
-        ]
-
-    if current is None:
-        return incoming.select("*", *stamped(F.lit(1), F.lit("inserted")))
-    change_hash = F.md5(
-        F.concat_ws(
-            "\x1f", *[F.coalesce(F.col(c).cast("string"), F.lit("\x00"))
-                      for c in tracked_cols]
-        )
-    )
-    joined = incoming.withColumn("__new_hash", change_hash).alias("i").join(
-        F.broadcast(
-            current.select(
-                F.col(business_key).alias("__bk"),
-                change_hash.alias("__cur_hash"),
-                F.col("version").alias("__cur_version"),
-            )
-        ),
-        F.col(f"i.{business_key}") == F.col("__bk"),
-        "left",
-    )
-    kind = (
-        F.when(F.col("__bk").isNull(), "inserted")
-        .when(F.col("__new_hash") != F.col("__cur_hash"), "changed")
-        .otherwise("unchanged")
-    )
-    versions = joined.select(
-        *[F.col(f"i.{c}").alias(c) for c in incoming.columns],
-        *stamped(F.coalesce(F.col("__cur_version") + 1, F.lit(1)), kind),
-    )
-    changed_keys = versions.filter(F.col(_TAG) == "changed").select(
-        business_key
-    )
-    closed = (
-        current.join(changed_keys, business_key, "left_semi")
-        .withColumn("valid_to", eff)
-        .withColumn("is_current", F.lit(False))
-        .withColumn(_TAG, F.lit("closed"))
-    )
-    untouched = current.join(changed_keys, business_key, "left_anti")
-    return versions.unionByName(closed).unionByName(
-        untouched, allowMissingColumns=True
-    )
-
-
-def scd2_upsert(
-    spark: SparkSession,
-    incoming: DataFrame,
-    path: str,
-    business_key: str,
-    tracked_cols: list[str],
-    effective_date: str,
-) -> dict:
-    """Type-2 slowly-changing-dimension merge (beyond the reference's
-    SCD1 ON CONFLICT DO UPDATE, warehouse_loader.py:24-83): when a
-    tracked attribute changes, the current version row is CLOSED
-    (``valid_to`` = effective_date, ``is_current`` = false) and a new
-    version is appended, preserving full history.
-
-    Table columns = incoming columns + (valid_from, valid_to,
-    is_current, version). Idempotent: re-running the same batch on the
-    same effective_date changes nothing (change detection compares
-    tracked-attribute hashes, and an unchanged hash short-circuits).
-
-    Scale: one equi-join incoming ⋈ current on the business key
-    (dimension-scale → broadcast), one union rewrite via atomic swap;
-    use date-partitioned history tables for very large dims.
-    """
-    existing = _open_table(spark, path)
-    current = None
-    if existing is not None:
-        current = existing.filter(F.col("is_current"))
-    out = _scd2_merge(
-        incoming, current, business_key, tracked_cols, effective_date
-    )
-    if existing is not None:
-        out = existing.filter(~F.col("is_current")).unionByName(
-            out, allowMissingColumns=True
-        )
-    out, obs = _observe(out, "inserted", "changed", "unchanged")
-    _atomic_swap_write(_untag(out, "unchanged"), path)
-    return obs.get
-
-
-def scd2_upsert_partitioned(
-    spark: SparkSession,
-    incoming: DataFrame,
-    path: str,
-    business_key: str,
-    tracked_cols: list[str],
-    effective_date: str,
-) -> dict:
-    """Date-partitioned Type-2 SCD merge — same semantics as
-    ``scd2_upsert`` but the history table is partitioned on
-    ``scd_part`` ('current' | 'closed_YYYY-MM' of valid_to), so one
-    run rewrites ONLY the current partition plus the single month
-    partition receiving newly closed rows. Months closed in earlier
-    runs are never touched again.
-
-    This is the 100 TB variant: ``scd2_upsert`` re-unions the FULL
-    history every run (cost grows with table age); here run cost is
-    ∝ |current dim| + |this month's closures|, constant over time,
-    and the as-of read path (``scd2_snapshot``) partition-prunes to
-    'current' + months after the snapshot date.
-    """
-    part_of_eff = "closed_" + effective_date[:7]
-    table = _open_table(spark, path)
-    current = None
-    if table is not None:
-        # partition-pruned: only the 'current' directory is scanned
-        current = table.filter(F.col("scd_part") == "current").drop(
-            "scd_part"
-        )
-    out = _scd2_merge(
-        incoming, current, business_key, tracked_cols, effective_date
-    )
-    data_cols = [
-        c for c in (out if table is None else table).columns
-        if c not in ("scd_part", _TAG)
-    ]
-    out = out.withColumn(
-        "scd_part",
-        F.when(F.col(_TAG) == "closed", part_of_eff).otherwise("current"),
-    )
-    if table is not None:
-        # prior closures of this run's month (partition-pruned scan),
-        # rewritten only when this run closes rows into that month
-        out = out.unionByName(
-            table.filter(F.col("scd_part") == part_of_eff).withColumn(
-                _TAG, F.lit("prior")
-            )
-        )
-    out, obs = _observe(out, "inserted", "changed", "unchanged")
-    out = out.localCheckpoint()  # sever self-read-overwrite lineage
-    counts = obs.get
-    drop = ("unchanged",) if counts["changed"] else ("unchanged", "prior")
-    _overwrite_partitions(
-        _untag(out, *drop).select(*data_cols, "scd_part"), path, "scd_part"
-    )
-    return counts
-
-
-def scd2_snapshot(spark: SparkSession, path: str, as_of: str) -> DataFrame:
-    """Dimension state as of ``as_of`` (inclusive) from a
-    ``scd2_upsert_partitioned`` table.
-
-    Partition pruning does the heavy lifting: rows closed in months
-    BEFORE the snapshot month cannot satisfy ``valid_to > as_of``
-    ('closed_YYYY-MM' sorts lexicographically, and 'current' > any
-    'closed_*'), so their directories are never scanned.
-    """
-    floor_part = "closed_" + as_of[:7]
-    return (
-        spark.read.parquet(path)
-        .filter(F.col("scd_part") >= floor_part)  # partition filter
-        .filter(
-            (F.col("valid_from") <= F.lit(as_of).cast("date"))
-            & (
-                F.col("valid_to").isNull()
-                | (F.col("valid_to") > F.lit(as_of).cast("date"))
-            )
-        )
-        .drop("scd_part")
-    )

@@ -111,8 +111,8 @@ class TestIvfPqIndex:
         assert state["assigned"].count() == n_corpus  # still missing
 
         # the batch's own replay completes it — the guard excludes the
-        # batch's own partial write, so the default skip_indexed=True
-        # replay still re-encodes everything (overwrite, no dups)
+        # batch's own partial write, so the replay still re-encodes
+        # everything (overwrite, no dups)
         append_to_ivf_index(b1, idx, batch_id=1)
         state = load_ivf_pq_index(spark, idx)
         assert state["packed"].count() == n_corpus + n_b1

@@ -625,6 +625,20 @@ class TestDay2Pipeline:
             run_day2_ingest(
                 d1, v1, state, batch_id=1, semantic_arrow=True, **CFG
             )
+        # a dir bootstrapped before a knob existed stores no value for
+        # it: overriding that knob is a mismatch, not a silent no-op
+        import json
+
+        cfg_path = os.path.join(state, "_config.json")
+        with open(cfg_path) as fh:
+            stored = json.load(fh)
+        del stored["minhash_buckets"]
+        with open(cfg_path, "w") as fh:
+            json.dump(stored, fh)
+        with pytest.raises(ValueError, match="config mismatch"):
+            run_day2_ingest(
+                d1, v1, state, batch_id=1, minhash_buckets=0, **CFG
+            )
 
 
 class TestShardCompaction:

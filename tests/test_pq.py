@@ -1,19 +1,15 @@
 """Product quantization (operators/pq.py): encoding correctness,
-ADC-vs-exact consistency on reconstructible vectors, shortlist+refine
-recall on clustered corpora, and plan hygiene."""
+IVFADC shortlist+refine recall on clustered corpora, and plan
+hygiene."""
 
 from __future__ import annotations
-
-import math
 
 import pytest
 from pyspark.sql import functions as F
 
 from etl_data_warehouse_spark.operators import similarity
 from etl_data_warehouse_spark.operators.pq import (
-    compression_ratio,
     pq_encode,
-    pq_topk,
     train_pq_codebooks,
 )
 from etl_data_warehouse_spark.sources.generators import (
@@ -54,64 +50,6 @@ class TestPq:
             (F.col("n") != 4) | (F.col("ns") != 4)
         ).count()
         assert bad == 0
-
-    def test_adc_equals_exact_on_reconstructible_vectors(
-        self, spark, codebooks
-    ):
-        """Vectors that ARE codebook-entry concatenations lose nothing
-        to quantization: ADC cosine must equal exact cosine."""
-        books = {
-            (r["subspace"], r["code_id"]): list(r["cv"])
-            for r in codebooks.collect()
-        }
-        # synthetic corpus: concatenations of entries (1,2,3,4), (5,6,7,8)...
-        vecs = []
-        for i, base in enumerate((1, 5, 9, 13)):
-            flat = []
-            for s in range(4):
-                flat += books[(s, base + (s % 2))]
-            vecs.append((100 + i, [float(x) for x in flat]))
-        syn = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
-        codes = pq_encode(syn, codebooks)
-        out = pq_topk(codes, codebooks, syn, k=3).collect()
-        exact = {
-            (r["src_id"], r["neighbor_id"]): r["cosine_sim"]
-            for r in similarity.brute_force_topk(syn, syn, k=3).collect()
-        }
-        assert out
-        for r in out:
-            ex = exact[(r["src_id"], r["neighbor_id"])]
-            assert abs(r["score"] - ex) < 1e-9, (r, ex)
-
-    def test_refined_recall_on_clustered_corpus(self, spark, corpus, codebooks):
-        """ADC shortlist + exact re-rank must recover the true top-5:
-        PQ's job is recalling the right neighborhood; exact scoring
-        orders it."""
-        queries = corpus.filter(F.col("vec_id") < 20)
-        codes = pq_encode(corpus, codebooks)
-        approx = pq_topk(
-            codes, codebooks, queries, k=5,
-            refine_with=corpus, refine_factor=10,
-        ).collect()
-        truth = {
-            (r["src_id"], r["neighbor_id"])
-            for r in similarity.brute_force_topk(corpus, queries, k=5).collect()
-        }
-        got = {(r["src_id"], r["neighbor_id"]) for r in approx}
-        recall = len(truth & got) / len(truth)
-        assert recall >= 0.9, f"refined PQ recall {recall}"
-
-    def test_no_cartesian_in_adc_plan(self, spark, corpus, codebooks):
-        queries = corpus.filter(F.col("vec_id") < 5)
-        codes = pq_encode(corpus, codebooks)
-        df = pq_topk(codes, codebooks, queries, k=3)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "CartesianProduct" not in plan
-
-    def test_compression_ratio(self):
-        # d=64 float32 = 256 bytes; m=4, 16 codes -> 4 codes of 4 bits
-        assert compression_ratio(64, 4, 16) == 256.0 / 4.0
-        assert math.isclose(compression_ratio(16, 4, 256), 64.0 / 4.0)
 
 
 class TestIvfPq:

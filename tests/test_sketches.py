@@ -1,64 +1,16 @@
-"""HLL sketch operators (operators/sketches.py): accuracy vs exact,
-and the merge-consistency contract that justifies pre-aggregation."""
+"""Sketch operators (operators/sketches.py): accuracy vs exact, and
+the merge-consistency contract that justifies pre-aggregation."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from etl_data_warehouse_spark.operators.sketches import (
-    daily_distinct_sketches,
     daily_topk_sketches,
     global_topk,
-    rollup_distinct,
     rollup_topk,
-    total_distinct,
 )
 from etl_data_warehouse_spark.sources.catalog import load_table
-
-
-class TestHllSketches:
-    def test_monthly_rollup_within_error_bound(self, spark, sf_dir):
-        events = load_table(spark, "events", sf_dir)
-        daily = daily_distinct_sketches(events).cache()
-        monthly = rollup_distinct(
-            daily, F.date_trunc("month", F.col("day")), "month"
-        )
-        exact = (
-            events.groupBy(
-                F.date_trunc("month", F.to_date("ts")).alias("month")
-            )
-            .agg(F.countDistinct("user_id").alias("exact"))
-        )
-        joined = monthly.join(exact, "month").collect()
-        assert joined
-        for r in joined:
-            # lg_k=12 -> rse ~1.6%; allow 5% (3 sigma + slack)
-            assert abs(r["approx_distinct"] - r["exact"]) <= max(
-                0.05 * r["exact"], 2.0
-            ), r
-        daily.unpersist()
-
-    def test_merge_of_partials_equals_one_pass_sketch(self, spark, sf_dir):
-        """Union of per-day sketches must estimate EXACTLY what a single
-        sketch over the raw data estimates — the lossless-merge property
-        that makes persisting daily sketches safe."""
-        events = load_table(spark, "events", sf_dir)
-        merged_est = total_distinct(daily_distinct_sketches(events))
-        one_pass = events.agg(
-            F.hll_sketch_estimate(
-                F.hll_sketch_agg("user_id", F.lit(12))
-            ).alias("est")
-        ).first()["est"]
-        assert merged_est == int(one_pass)
-
-    def test_no_expand_in_sketch_plan(self, spark, sf_dir):
-        """The sketch path must not pay COUNT(DISTINCT)'s Expand node —
-        that is its reason to exist at scale."""
-        events = load_table(spark, "events", sf_dir)
-        daily = daily_distinct_sketches(events)
-        plan = daily._jdf.queryExecution().executedPlan().toString()
-        assert "Expand" not in plan
-        assert "hll_sketch_agg" in plan
 
 
 class TestTopKSketches:
