@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..sources.sinks import counted
 from .pq import (
     ivfadc_topk,
     pack_codes,
@@ -121,41 +122,44 @@ def build_ivf_pq_index(
     assigned.write.mode("overwrite").parquet(f"{index_dir}/assigned/batch=0")
 
 
-def load_ivf_pq_index(spark: SparkSession, index_dir: str) -> dict:
-    """Index state as DataFrames; `packed`/`assigned` span all batches."""
+def _read_index(spark: SparkSession, index_dir: str) -> dict:
+    """Index state as DataFrames, each directory listed and its schema
+    inferred once. `packed`/`assigned` span all batches and keep their
+    `batch` partition column, which the re-crawl guard filters on. A
+    frame lists its files when it is read, so a day that probes the
+    index and then appends to it reads the state once, before either,
+    and passes it to both (``index=``)."""
+    def batched(name: str) -> DataFrame:
+        path = f"{index_dir}/{name}"
+        return spark.read.option("basePath", path).parquet(path)
+
     return {
         "centroids": spark.read.parquet(f"{index_dir}/centroids"),
         "codebooks": spark.read.parquet(f"{index_dir}/codebooks"),
-        "packed": spark.read.option("basePath", f"{index_dir}/packed")
-        .parquet(f"{index_dir}/packed")
-        .drop("batch"),
-        "assigned": spark.read.option("basePath", f"{index_dir}/assigned")
-        .parquet(f"{index_dir}/assigned")
-        .drop("batch"),
+        "packed": batched("packed"),
+        "assigned": batched("assigned"),
+    }
+
+
+def load_ivf_pq_index(spark: SparkSession, index_dir: str) -> dict:
+    """Index state as DataFrames; `packed`/`assigned` span all batches."""
+    return {
+        k: df.drop("batch") for k, df in _read_index(spark, index_dir).items()
     }
 
 
 def _drop_crossbatch_recrawls(
-    new_vectors: DataFrame, index_dir: str, batch_id: int
+    new_vectors: DataFrame, idx: dict, batch_id: int
 ) -> DataFrame:
     """The re-crawl guard: anti-join ids already in packed OR
     assigned of any OTHER batch — re-crawled ids across batches drop,
     while this batch's own earlier (possibly partial) write is excluded
     so a replay always re-encodes the full batch and the overwrite
     completes it."""
-    spark = new_vectors.sparkSession
     other = F.col("batch") != batch_id
     seen = (
-        spark.read.option("basePath", f"{index_dir}/packed")
-        .parquet(f"{index_dir}/packed")
-        .filter(other)
-        .select("vec_id")
-        .unionByName(
-            spark.read.option("basePath", f"{index_dir}/assigned")
-            .parquet(f"{index_dir}/assigned")
-            .filter(other)
-            .select("vec_id")
-        )
+        idx["packed"].filter(other).select("vec_id")
+        .unionByName(idx["assigned"].filter(other).select("vec_id"))
         .distinct()
     )
     return new_vectors.join(seen, "vec_id", "left_anti")
@@ -166,18 +170,23 @@ def append_to_ivf_index(
     index_dir: str,
     batch_id: int,
     vec_col: str = "embedding",
+    index: dict | None = None,
 ) -> None:
     """Encode + assign a new batch under the FROZEN quantizer state and
     persist it as ``batch=batch_id`` (overwrite → replay-idempotent;
     see module docstring for why append-mode would corrupt the scan).
     The re-crawl guard (``_drop_crossbatch_recrawls``) first drops ids
-    already indexed by any OTHER batch."""
+    already indexed by any OTHER batch. ``index``: this index's state
+    from ``_read_index`` when the caller already read it today."""
     spark = new_vectors.sparkSession
-    idx = load_ivf_pq_index(spark, index_dir)
-    new_vectors = _drop_crossbatch_recrawls(
-        new_vectors, index_dir, batch_id
-    ).localCheckpoint()
-    if not new_vectors.take(1):
+    idx = index or _read_index(spark, index_dir)
+    # checkpointed: both writes below read the guarded batch; its row
+    # count rides on the checkpoint
+    new_vectors, n_new = counted(
+        _drop_crossbatch_recrawls(new_vectors, idx, batch_id)
+    )
+    new_vectors = new_vectors.localCheckpoint()
+    if not n_new():
         # every id was a re-crawl — nothing to encode, and writing
         # nothing keeps the batch dirs absent consistently on replay
         return
@@ -229,6 +238,7 @@ def incremental_semantic_dedup(
     shortlist: int | None = None,
     vec_col: str = "embedding",
     sort: bool = True,
+    index: dict | None = None,
 ) -> DataFrame:
     """O(batch) semantic-dedup VERDICT for a new batch against the
     standing corpus — the embedding twin of dedup_index.incremental_dedup:
@@ -269,12 +279,14 @@ def incremental_semantic_dedup(
     ``sort=False`` skips the closing presentation orderBy (the
     semantic_dedup convention, r14) — the day-2 pipeline consumes the
     verdicts via joins, so the batch-sized range shuffle is overhead.
+    ``index``: this index's state from ``_read_index`` when the caller
+    already read it today.
     """
     from .pq import _dot, _subvectors, _vec_dim
     from .similarity import with_norm
 
     spark = new_vectors.sparkSession
-    idx = load_ivf_pq_index(spark, index_dir)
+    idx = index or _read_index(spark, index_dir)
     assigned_new = _assign_cells(
         new_vectors, idx["centroids"], vec_col
     ).localCheckpoint()  # batch-sized: reused by 3 consumers

@@ -239,7 +239,8 @@ def incremental_dedup(
     ``hashed_shingles(new_docs, n)`` / ``band_table(shingles, ...)``
     frames (same parameters). The day-2 pipeline computes each ONCE
     and feeds both this probe and the later index append — otherwise
-    the batch is shingled and signed twice per day.
+    the batch is shingled and signed twice per day. The pairs come
+    unsorted: callers consume them through joins or as a set.
 
     Measured-and-rejected (r14; r12 verdict task #6): checkpointing the
     batch band table PRE-PARTITIONED on the band keys, so the probe
@@ -296,4 +297,4 @@ def incremental_dedup(
         F.broadcast(touched), "doc_id", "left_semi"
     )
     all_sh = idx_sh.unionByName(new_sh)
-    return verify_pairs(candidates, all_sh, threshold)
+    return verify_pairs(candidates, all_sh, threshold, sort=False)

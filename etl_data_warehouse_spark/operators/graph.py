@@ -19,16 +19,18 @@ fixed point.
   digits even at corpus scale. For adversarially long path graphs the
   O(log n) alternating large-star/small-star variant would replace this
   loop; not needed for dedup workloads.
-- ``localCheckpoint`` per round truncates lineage so the plan doesn't
-  grow with iterations; the convergence test is one driver-side count
-  per round (inherent to any fixed-point loop).
+- A ``localCheckpoint`` every two rounds truncates lineage so the plan
+  doesn't grow with iterations. The convergence test rides on that
+  checkpoint: each node's own old label is carried through the second
+  round's min aggregate, and an ``Observation`` counts the changed
+  labels as the checkpoint runs, so two rounds cost one action.
 - Edges are the SMALL relation (near-dup pairs ≪ corpus); the loop
   never touches full documents, only (node, label) longs.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -49,31 +51,47 @@ def connected_components(
     sym = edges.select(
         F.col(src).alias("node"), F.col(dst).alias("peer")
     ).union(edges.select(F.col(dst).alias("node"), F.col(src).alias("peer")))
+    # checkpointed: every action joins the edges again
     sym = sym.distinct().localCheckpoint()
 
+    def step(labels: DataFrame) -> DataFrame:
+        """One round: each node's new label, and its old one."""
+        neighbor_labels = sym.join(
+            labels.withColumnRenamed("node", "peer"), "peer"
+        ).select("node", "component", F.lit(False).alias("own"))
+        return (
+            labels.withColumn("own", F.lit(True))
+            .union(neighbor_labels)
+            .groupBy("node")
+            .agg(
+                F.min("component").alias("component"),
+                F.min(F.when(F.col("own"), F.col("component"))).alias("old"),
+            )
+        )
+
+    # the first action's checkpoint materializes the seed labels
     labels = (
         sym.select("node")
         .distinct()
         .select("node", F.col("node").alias("component"))
-        .localCheckpoint()
     )
-    for _ in range(max_iterations):
-        neighbor_labels = sym.join(
-            labels.withColumnRenamed("node", "peer"), "peer"
-        ).select("node", "component")
-        new_labels = (
-            labels.union(neighbor_labels)
-            .groupBy("node")
-            .agg(F.min("component").alias("component"))
+    # Two rounds per action, and the second round's changed count is the
+    # convergence test: a graph that settles in one round (the dedup
+    # case) costs one action, not two.
+    for _ in range(0, max_iterations, 2):
+        obs = Observation()
+        # checkpointed: the next action reads these labels twice, and
+        # without it every action would recompute the rounds before it
+        labels = (
+            step(step(labels).select("node", "component"))
+            .observe(
+                obs,
+                F.count_if(F.col("component") != F.col("old")).alias("n"),
+            )
+            .select("node", "component")
             .localCheckpoint()
         )
-        changed = (
-            new_labels.join(labels.withColumnRenamed("component", "old"), "node")
-            .filter(F.col("component") != F.col("old"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
+        if obs.get["n"] == 0:
             return labels
     raise RuntimeError(
         f"connected_components did not converge in {max_iterations} rounds"

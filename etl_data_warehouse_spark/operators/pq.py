@@ -179,9 +179,12 @@ def pq_encode(
     (broadcast argmin join, deterministic code_id tiebreak). This long
     layout IS the PQ index — persist it partitioned however the corpus
     is partitioned."""
-    m = codebooks.select(F.max("subspace")).first()[0] + 1
-    dim = _vec_dim(vectors, vec_col)
-    sub = _subvectors(vectors, m, dim, vec_col)
+    # one small collect of the codebook gives the subspace count and the
+    # subvector width, so neither the codebook nor the vectors pay an
+    # aggregate job for them
+    book = codebooks.select("subspace", F.size("cv").alias("w")).collect()
+    m = max(r["subspace"] for r in book) + 1
+    sub = _subvectors(vectors, m, m * book[0]["w"], vec_col)
     l2 = F.aggregate(
         F.zip_with("sv", "cv", lambda x, y: (x - y) * (x - y)),
         F.lit(0.0),

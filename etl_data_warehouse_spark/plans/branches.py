@@ -1,4 +1,4 @@
-"""Concurrent branches of one load, and per-step wall times.
+"""Concurrent branches of one load, and per-stage wall times and job tags.
 
 Spark's scheduler accepts jobs from several driver threads at once, so
 steps with no data dependency between them overlap instead of queueing
@@ -15,8 +15,10 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 from typing import Callable
 
-from pyspark import inheritable_thread_target
+from pyspark import SparkContext, inheritable_thread_target
 from pyspark.sql import SparkSession
+
+STAGE_TAG = "sparkhouse.stage."
 
 
 def run_branches(spark: SparkSession, *branches: Callable) -> list:
@@ -33,8 +35,19 @@ def run_branches(spark: SparkSession, *branches: Callable) -> list:
 
 
 @contextlib.contextmanager
-def timed(stage_sec: dict, name: str):
-    """Record the block's wall time (s) as ``stage_sec[name]``."""
+def timed(sc: SparkContext, stage_sec: dict, name: str):
+    """Record the block's wall time (s) as ``stage_sec[name]`` and tag
+    every Spark job the block starts ``sparkhouse.stage.<name>``, so the
+    status store can count a stage's jobs. Tags live in the thread's
+    local properties: a branch started inside the block carries the tag
+    (``run_branches``), and sibling branches keep their own. The context
+    is passed in because ``SparkSession.getActiveSession()`` is None on
+    a branch thread; the caller's job group is left alone."""
+    tag = STAGE_TAG + name
+    sc.addJobTag(tag)
     t0 = time.perf_counter()
-    yield
+    try:
+        yield
+    finally:
+        sc.removeJobTag(tag)
     stage_sec[name] = round(time.perf_counter() - t0, 3)

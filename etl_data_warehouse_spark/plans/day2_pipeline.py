@@ -79,7 +79,8 @@ State layout under ``state_dir``::
     vectors/            batch=N raw survivor vectors (refine source)
     minhash_index/      bands/ + shingles/ (dedup_index)
     ann_index/          centroids/codebooks/packed/assigned (ann_index)
-    clusters/           versioned snapshots + _CURRENT pointer
+    clusters/           versioned snapshots + _CURRENT pointer (the
+                        pointed version and the one it replaced)
     containment_drops/  batch=N oriented (doc_id, container) drop rows
                         (containment arm only; compaction input)
     shards/             batch=N/shard=M packed training chunks
@@ -110,12 +111,13 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..operators import dedup, similarity
 from ..operators.ann_index import (
+    _read_index,
     append_to_ivf_index,
     build_ivf_pq_index,
     incremental_semantic_dedup,
@@ -129,7 +131,7 @@ from ..operators.dedup_index import (
     register_minhash_tables,
 )
 from ..sources.shards import append_training_batch
-from ..sources.sinks import append_dedup
+from ..sources.sinks import append_dedup, counted
 from ..streaming.corpus_stream import clean_document_stream
 from ..streaming.curation_stream import cap_and_write_batch
 from .branches import run_branches, timed
@@ -213,20 +215,22 @@ def _minhash_table_prefix(state_dir: str) -> str:
 
 
 def _survivor_batch(
-    spark: SparkSession, state_dir: str, batch_id: int
+    spark: SparkSession,
+    clean_path: str,
+    schema: StructType,
+    curated: DataFrame,
 ) -> DataFrame:
     """Clean survivors OF THIS BATCH: sink rows whose doc_id belongs to
     the batch's curated partition. Reading the SINK back (not the lazy
-    funnel frame) makes replays see exactly what was committed."""
-    curated = spark.read.parquet(
-        os.path.join(state_dir, "curated", f"batch={batch_id}")
-    ).select("doc_id")
-    clean = spark.read.parquet(os.path.join(state_dir, "clean_documents"))
+    funnel frame) makes replays see exactly what was committed. The
+    append just changed the sink's files, so it is read afresh, with
+    ``schema``, the schema of the rows the sink is written from."""
+    clean = spark.read.schema(schema).parquet(clean_path)
     # the semi-join reorders columns doc_id-first; restore the sink's
     # own order so shard files inherit ONE stable column order
-    return clean.join(curated, "doc_id", "left_semi").select(
-        *clean.columns
-    )
+    return clean.join(
+        curated.select("doc_id"), "doc_id", "left_semi"
+    ).select(*clean.columns)
 
 
 def run_day2_ingest(
@@ -258,42 +262,53 @@ def run_day2_ingest(
     operators reduce to on an empty index.
 
     Steps with no data dependency run as concurrent branches
-    (plans/branches.py): the MinHash arm (3a, then the optional
-    containment arm 3c) beside the semantic arm (3b), which both only
-    read the indexes; then, once every arm is done, the index and
-    raw-vector appends (6) beside cluster maintenance → keep verdicts
-    → shard append (4 → 5 → 7), which touch other state dirs. The
-    appends never overlap the index probes. ``stage_sec`` maps each
+    (plans/branches.py). After curation and the clean funnel (1 → 2):
+
+    - the MinHash arm (3a, then the optional containment arm 3c) beside
+      the semantic arm (3b), which both only read the indexes;
+    - then, once every arm is done, three branches that touch disjoint
+      state dirs: cluster maintenance → keep verdicts → shard append
+      (4 → 5 → 7); the MinHash (and containment) index append; and
+      the IVF-PQ index append followed by the raw-vector write. The
+      last two make up stage 6.
+
+    The appends never overlap the index probes. ``stage_sec`` maps each
     stage to its own wall time in seconds, so stages on different
     branches overlap and the values can add up to more than the call's
-    wall time."""
+    wall time. Every Spark job the call starts is tagged
+    ``sparkhouse.stage.<stage>`` (``branches.timed``).
+
+    Every audit count rides on a write or checkpoint that runs anyway
+    (an ``Observation``), and each state directory whose schema the
+    day already holds is read with that schema, so neither costs a job
+    of its own. Keep verdicts (5) only plan: the shard append's
+    write runs them."""
     spark = docs.sparkSession
+    sc = spark.sparkContext
     cfg = _load_or_init_config(
         state_dir, {k: v for k, v in overrides.items() if v is not None}
     )
     stage_sec: dict[str, float] = {}
 
     # --- 1. curation gates: blocklist + cross-day per-domain cap ------
-    with timed(stage_sec, "curation"):
-        n_ingested = docs.count()
-        cap_and_write_batch(
-            spark,
-            # hosted_unblocked runs inside cap_and_write_batch's shared
-            # stream twin; here the batch frame must already carry host
-            # — reuse the stream's stateless half so the two entry
-            # points cannot diverge.
-            _curate_stateless(docs),
-            state_dir,
-            batch_id,
-            cfg["domain_cap"],
+    with timed(sc, stage_sec, "curation"):
+        docs, ingested = counted(docs)
+        # hosted_unblocked runs inside cap_and_write_batch's shared
+        # stream twin; here the batch frame must already carry host —
+        # reuse the stream's stateless half so the two entry points
+        # cannot diverge.
+        batch = _curate_stateless(docs)
+        n_curated = cap_and_write_batch(
+            spark, batch, state_dir, batch_id, cfg["domain_cap"]
         )
-        curated = spark.read.parquet(
+        n_ingested = ingested()
+        # the partition was just written from ``batch``: no inference
+        curated = spark.read.schema(batch.schema).parquet(
             os.path.join(state_dir, "curated", f"batch={batch_id}")
         )
-        n_curated = curated.count()
 
     # --- 2. clean funnel + exact-fingerprint dedup vs the sink --------
-    with timed(stage_sec, "clean_funnel"):
+    with timed(sc, stage_sec, "clean_funnel"):
         cleaned = clean_document_stream(curated)
         w = Window.partitionBy("fingerprint").orderBy("doc_id")
         canonical = (
@@ -303,16 +318,22 @@ def run_day2_ingest(
         )
         clean_path = os.path.join(state_dir, "clean_documents")
         append_dedup(spark, canonical, clean_path, keys=["fingerprint"])
-        survivors = _survivor_batch(
-            spark, state_dir, batch_id
-        ).localCheckpoint()
-        n_survivors = survivors.count()
-        batch_vecs = vectors.join(
-            survivors.select(F.col("doc_id").alias("vec_id")),
-            "vec_id",
-            "left_semi",
-        ).localCheckpoint()
-        n_vecs = batch_vecs.count()
+        # Checkpointed, as is batch_vecs: the arms, the appends and the
+        # keep verdicts read them, each in its own action.
+        survivors, surv_count = counted(
+            _survivor_batch(spark, clean_path, canonical.schema, curated)
+        )
+        survivors = survivors.localCheckpoint()
+        n_survivors = surv_count()
+        batch_vecs, vec_count = counted(
+            vectors.join(
+                survivors.select(F.col("doc_id").alias("vec_id")),
+                "vec_id",
+                "left_semi",
+            )
+        )
+        batch_vecs = batch_vecs.localCheckpoint()
+        n_vecs = vec_count()
         if n_vecs != n_survivors:
             raise ValueError(
                 "every clean survivor needs an embedding: "
@@ -412,7 +433,7 @@ def run_day2_ingest(
         # containment probe, and both index appends (r12 task #3/#6:
         # each used to re-shingle and re-sign the batch independently).
         sh_batch = bt_batch = None
-        with timed(stage_sec, "minhash_pairs"):
+        with timed(sc, stage_sec, "minhash_pairs"):
             if bootstrap:
                 pairs = dedup.minhash_lsh_pairs(
                     survivors, threshold=cfg["jaccard_threshold"], **mh_kw
@@ -422,6 +443,8 @@ def run_day2_ingest(
                     register_minhash_tables(
                         spark, minhash_dir, mh_prefix, mh_buckets
                     )
+                # checkpointed: the probe here and the index append
+                # later read both, in separate actions
                 sh_batch = dedup.hashed_shingles(
                     survivors, cfg["shingle_n"]
                 ).localCheckpoint()
@@ -441,16 +464,21 @@ def run_day2_ingest(
                     bands_df=bt_batch,
                     **mh_kw,
                 )
+            # checkpointed: the probe runs here, on this branch, rather
+            # than inside cluster maintenance's action
             pairs = pairs.select("doc_a", "doc_b").localCheckpoint()
         if not cfg.get("containment"):
             return pairs, sh_batch, bt_batch, None
-        with timed(stage_sec, "containment_pairs"):
+        with timed(sc, stage_sec, "containment_pairs"):
             ct_drops = containment_arm(sh_batch)
         return pairs, sh_batch, bt_batch, ct_drops
 
-    def semantic_arm() -> DataFrame:
-        """3b: the semantic dup edges (dup_of, vec_id)."""
-        with timed(stage_sec, "semantic_verdicts"):
+    def semantic_arm() -> tuple[DataFrame, dict | None]:
+        """3b: the semantic dup edges (dup_of, vec_id), and the IVF-PQ
+        index state read for the probe (None at bootstrap), which the
+        IVF append reuses."""
+        ann_state = None
+        with timed(sc, stage_sec, "semantic_verdicts"):
             if bootstrap:
                 build_ivf_pq_index(
                     batch_vecs,
@@ -468,8 +496,11 @@ def run_day2_ingest(
                     sort=False,  # verdicts feed joins; order is cosmetic
                 )
             else:
+                ann_state = _read_index(spark, ann_dir)
+                # every batch=N file holds the vectors frame's columns
                 standing = (
-                    spark.read.option("basePath", vec_dir)
+                    spark.read.schema(vectors.schema)
+                    .option("basePath", vec_dir)
                     .parquet(vec_dir)
                     .filter(F.col("batch") < batch_id)
                     .drop("batch")
@@ -480,8 +511,11 @@ def run_day2_ingest(
                     ann_dir,
                     threshold=cfg["cosine_threshold"],
                     sort=False,
+                    index=ann_state,
                 )
-            return (
+            # checkpointed: the probe runs here, on this branch, rather
+            # than inside cluster maintenance's action
+            edges = (
                 verdicts.filter(~F.col("kept"))
                 .select(
                     F.col("dup_of").alias("doc_a"),
@@ -489,17 +523,23 @@ def run_day2_ingest(
                 )
                 .localCheckpoint()
             )
+        return edges, ann_state
 
-    (pairs, sh_batch, bt_batch, ct_drops), sem_edges = run_branches(
-        spark, minhash_arm, semantic_arm
+    (pairs, sh_batch, bt_batch, ct_drops), (sem_edges, ann_state) = (
+        run_branches(spark, minhash_arm, semantic_arm)
     )
 
     def verdicts_and_shards() -> tuple[int, int, int]:
         """4 → 5 → 7: returns (n_edges, n_ct_dropped, n_kept)."""
         # --- 4. cluster maintenance (O(affected)) ----------------------
-        with timed(stage_sec, "cluster_maintenance"):
-            edges = pairs.unionByName(sem_edges).distinct()
-            n_edges = edges.count()
+        with timed(sc, stage_sec, "cluster_maintenance"):
+            # checkpointed: update_clusters reads the edges in two
+            # actions (components, then the version write)
+            edges, edge_count = counted(
+                pairs.unionByName(sem_edges).distinct()
+            )
+            edges = edges.localCheckpoint()
+            n_edges = edge_count()
             clusters_dir = os.path.join(state_dir, "clusters")
             if n_edges:
                 mapping = update_clusters(edges, clusters_dir)
@@ -510,7 +550,7 @@ def run_day2_ingest(
         # The mapping is corpus-dup-sized; restrict it to THIS batch's
         # docs first (semi-join on the batch — O(batch) rows survive)
         # so the anti-join side is batch-bounded and broadcastable.
-        with timed(stage_sec, "keep_verdicts"):
+        with timed(sc, stage_sec, "keep_verdicts"):
             dropped = None
             if mapping is not None:
                 dropped = (
@@ -540,11 +580,12 @@ def run_day2_ingest(
                 )
             else:
                 kept = survivors
-            kept = kept.localCheckpoint()
-            n_kept = kept.count()
+            # no checkpoint: the shard write runs the verdicts, and
+            # their count rides on it
+            kept, kept_count = counted(kept)
 
         # --- 7. training-shard append (kept docs only) ------------------
-        with timed(stage_sec, "shard_append"):
+        with timed(sc, stage_sec, "shard_append"):
             append_training_batch(
                 kept,
                 os.path.join(state_dir, "shards"),
@@ -552,55 +593,63 @@ def run_day2_ingest(
                 n_shards=cfg["n_shards"],
                 budget=cfg["pack_budget"],
             )
-        return n_edges, n_ct_dropped, n_kept
+        return n_edges, n_ct_dropped, kept_count()
 
     # --- 6. index + raw-vector appends (ALL survivors) -----------------
-    # Order: vectors/packed state LAST only matters within each
-    # operator (they document their own crash ordering); across
-    # operators each append is independently idempotent.
-    def index_appends() -> None:
-        with timed(stage_sec, "index_appends"):
-            if bootstrap:
-                build_minhash_index(
-                    survivors, minhash_dir,
-                    buckets=mh_buckets, table_prefix=mh_prefix, **mh_kw,
-                )
-                if cfg.get("containment"):
-                    from ..operators.containment_index import (
-                        build_containment_index,
-                    )
-
-                    build_containment_index(
-                        survivors, ct_dir,
-                        n=cfg["shingle_n"], k=cfg["containment_k"],
-                        max_df=cfg["containment_max_df"],
-                        buckets=mh_buckets, table_prefix=mh_prefix,
-                    )
-            else:
-                # both appends consume the probe stage's
-                # sh_batch/bt_batch — zero re-shingling, zero re-signing
-                # (r12 task #3)
-                append_to_index(
-                    survivors, minhash_dir,
-                    buckets=mh_buckets, table_prefix=mh_prefix,
-                    shingles=sh_batch, bands_df=bt_batch, **mh_kw,
-                )
-                if cfg.get("containment"):
-                    from ..operators.containment_index import (
-                        append_to_containment_index,
-                    )
-
-                    append_to_containment_index(
-                        survivors, ct_dir, batch_id=batch_id,
-                        n=cfg["shingle_n"], k=cfg["containment_k"],
-                        max_df=cfg["containment_max_df"],
-                        buckets=mh_buckets, table_prefix=mh_prefix,
-                        shingles=sh_batch,
-                    )
-                append_to_ivf_index(batch_vecs, ann_dir, batch_id=batch_id)
-            batch_vecs.write.mode("overwrite").parquet(
-                os.path.join(vec_dir, f"batch={batch_id}")
+    # Two branches, one per state family, each independently idempotent:
+    # the MinHash (and containment) index, and the IVF-PQ index plus the
+    # raw vectors. Within a branch the operators keep their own
+    # documented crash ordering.
+    def minhash_appends() -> None:
+        if bootstrap:
+            build_minhash_index(
+                survivors, minhash_dir,
+                buckets=mh_buckets, table_prefix=mh_prefix, **mh_kw,
             )
+            if cfg.get("containment"):
+                from ..operators.containment_index import (
+                    build_containment_index,
+                )
+
+                build_containment_index(
+                    survivors, ct_dir,
+                    n=cfg["shingle_n"], k=cfg["containment_k"],
+                    max_df=cfg["containment_max_df"],
+                    buckets=mh_buckets, table_prefix=mh_prefix,
+                )
+            return
+        # both appends consume the probe stage's sh_batch/bt_batch —
+        # zero re-shingling, zero re-signing
+        append_to_index(
+            survivors, minhash_dir,
+            buckets=mh_buckets, table_prefix=mh_prefix,
+            shingles=sh_batch, bands_df=bt_batch, **mh_kw,
+        )
+        if cfg.get("containment"):
+            from ..operators.containment_index import (
+                append_to_containment_index,
+            )
+
+            append_to_containment_index(
+                survivors, ct_dir, batch_id=batch_id,
+                n=cfg["shingle_n"], k=cfg["containment_k"],
+                max_df=cfg["containment_max_df"],
+                buckets=mh_buckets, table_prefix=mh_prefix,
+                shingles=sh_batch,
+            )
+
+    def vector_appends() -> None:
+        if not bootstrap:
+            append_to_ivf_index(
+                batch_vecs, ann_dir, batch_id=batch_id, index=ann_state
+            )
+        batch_vecs.write.mode("overwrite").parquet(
+            os.path.join(vec_dir, f"batch={batch_id}")
+        )
+
+    def index_appends() -> None:
+        with timed(sc, stage_sec, "index_appends"):
+            run_branches(spark, minhash_appends, vector_appends)
 
     (n_edges, n_ct_dropped, n_kept), _ = run_branches(
         spark, verdicts_and_shards, index_appends

@@ -88,20 +88,21 @@ def run_pipeline(
     """
     os.makedirs(warehouse_dir, exist_ok=True)
     started = datetime.datetime.now()
+    sc = spark.sparkContext
     stage_sec: dict[str, float] = {}
 
     def table(name: str) -> str:
         return os.path.join(warehouse_dir, name)
 
     def extracted() -> int:
-        with timed(stage_sec, "extract"):
+        with timed(sc, stage_sec, "extract"):
             orders = load_table(spark, "orders", sf_dir)
             lineitem = load_table(spark, "lineitem", sf_dir)
             return orders.select().union(lineitem.select()).count()
 
     def dim_date() -> dict:
         # the key is semantic (yyyymmdd): stable by construction
-        with timed(stage_sec, "dim_date"):
+        with timed(sc, stage_sec, "dim_date"):
             return merge_upsert(
                 spark, build_dim_date(spark, sf_dir), table("dim_date"),
                 ["date_key"],
@@ -111,32 +112,32 @@ def run_pipeline(
     # never renumbers keys already stored (reference semantics:
     # warehouse_loader.py:56-69 excludes the SERIAL key from SET).
     def customers_orders_quality() -> tuple[dict, dict, dict]:
-        with timed(stage_sec, "dim_customers"):
+        with timed(sc, stage_sec, "dim_customers"):
             dim_c, dim_c_keyed = merge_upsert_stable(
                 spark, build_dim_customers(spark, sf_dir),
                 table("dim_customers"), ["customer_id"], "customer_key",
             )
         # the fact resolves FKs against the stable-keyed dim actually
         # stored, and the gate reads only these two tables
-        with timed(stage_sec, "fact_orders"):
+        with timed(sc, stage_sec, "fact_orders"):
             fact_o = merge_upsert(
                 spark,
                 build_fact_orders(spark, sf_dir, dim_customers=dim_c_keyed),
                 table("fact_orders"), ["order_key"],
             )
-        with timed(stage_sec, "quality"):
+        with timed(sc, stage_sec, "quality"):
             checks = _quality_checks(spark, warehouse_dir)
         return dim_c, fact_o, checks
 
     def dim_products() -> dict:
-        with timed(stage_sec, "dim_products"):
+        with timed(sc, stage_sec, "dim_products"):
             return merge_upsert_stable(
                 spark, build_dim_products(spark, sf_dir),
                 table("dim_products"), ["product_id"], "product_key",
             )[0]
 
     def fact_daily_sales() -> dict:
-        with timed(stage_sec, "fact_daily_sales"):
+        with timed(sc, stage_sec, "fact_daily_sales"):
             return merge_upsert(
                 spark, build_fact_daily_sales(spark, sf_dir),
                 table("fact_daily_sales"), ["date_key", "product_id"],
@@ -168,7 +169,7 @@ def run_pipeline(
         "started_at": started,
         "finished_at": datetime.datetime.now(),
     }
-    with timed(stage_sec, "audit"):
+    with timed(sc, stage_sec, "audit"):
         quality.audit_log_row(spark, summary).write.mode("append").parquet(
             table("etl_run_log")
         )

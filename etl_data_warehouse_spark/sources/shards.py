@@ -183,8 +183,8 @@ def append_training_batch(
     - the batch dir is written with mode=overwrite — a replay of a
       partial write re-packs the identical full batch (append-mode
       would duplicate rows when a replay races a partial write);
-    - an all-re-crawl (empty) batch commits a marker-only dir, so
-      "batch N ran" is recorded without parquet files.
+    - an all-re-crawl (empty) batch commits a dir without parquet
+      files, so "batch N ran" is recorded without data.
 
     Batches must be appended in increasing batch_id order (a missing
     smaller id is treated as empty). Per-batch marginal cost is
@@ -213,18 +213,29 @@ def append_training_batch(
         for b, d in dirs.items()
         if b < batch_id and _is_committed(d) and _has_parquet(d)
     ]
+    base = None
     if other_committed:
-        seen = spark.read.option("basePath", path).parquet(*other_committed)
+        # One read of the other committed batches serves both the
+        # re-crawl guard and (older batches only) the base offsets.
+        # Every batch=N holds packed rows, so the read takes their
+        # schema instead of inferring one.
+        packed_schema = pack_training_shards(
+            docs, n_shards=n_shards, budget=budget, salt=salt, key=key
+        ).schema
+        seen = (
+            spark.read.schema(packed_schema)
+            .option("basePath", path)
+            .parquet(*other_committed)
+        )
         docs = docs.join(
             seen.select(F.col(key)).distinct(), key, "left_anti"
         )
-    if older_committed:
-        prior = spark.read.option("basePath", path).parquet(*older_committed)
-        base = prior.groupBy("shard").agg(
-            F.sum("n_tokens").alias("base_off")
-        )
-    else:
-        base = None
+        if older_committed:
+            base = (
+                seen.filter(F.col("batch") < batch_id)
+                .groupBy("shard")
+                .agg(F.sum("n_tokens").alias("base_off"))
+            )
     packed = pack_training_shards(
         docs, n_shards=n_shards, budget=budget, salt=salt, key=key
     )
@@ -246,14 +257,9 @@ def append_training_batch(
             )
         )
     batch_dir = f"{path}/batch={batch_id}"
-    packed = packed.localCheckpoint()
-    if packed.take(1):
-        packed.write.mode("overwrite").partitionBy("shard").parquet(
-            batch_dir
-        )
-    else:
-        # all-re-crawl batch: record it ran (marker-only dir, no data)
-        os.makedirs(batch_dir, exist_ok=True)
+    # A partitioned write creates files only for the rows it gets, so
+    # an all-re-crawl batch leaves a dir with no data files.
+    packed.write.mode("overwrite").partitionBy("shard").parquet(batch_dir)
     with open(os.path.join(batch_dir, _COMMIT_MARKER), "w") as fh:
         fh.write("committed\n")
 

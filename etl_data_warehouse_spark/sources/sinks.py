@@ -45,9 +45,12 @@ import glob
 import os
 import shutil
 import uuid
+from typing import Callable
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 _TAG = "__sink_tag"
 
@@ -63,10 +66,16 @@ def _recover(path: str) -> None:
         shutil.rmtree(stale)
 
 
-def _open_table(spark: SparkSession, path: str) -> DataFrame | None:
-    """The Parquet table at ``path`` after crash recovery, or None."""
+def _open_table(
+    spark: SparkSession, path: str, schema: StructType | None = None
+) -> DataFrame | None:
+    """The Parquet table at ``path`` after crash recovery, or None. With
+    ``schema`` the read takes it instead of inferring one (a job)."""
     _recover(path)
-    return spark.read.parquet(path) if os.path.exists(path) else None
+    if not os.path.exists(path):
+        return None
+    reader = spark.read.schema(schema) if schema else spark.read
+    return reader.parquet(path)
 
 
 def _atomic_swap_write(
@@ -96,6 +105,25 @@ def _observe(df: DataFrame, *tags: str) -> tuple[DataFrame, Observation]:
     return df.observe(obs, *counts), obs
 
 
+def counted(df: DataFrame) -> tuple[DataFrame, Callable[[], int]]:
+    """``df`` with its row count observed, and a function that returns
+    the count once an action on the returned frame has run: the count
+    rides on a write or checkpoint that runs anyway, with no job of its
+    own. When a shuffle above the observer comes out empty, AQE swaps
+    that part of the plan for an empty relation and the observed
+    metrics never arrive (PySpark 4.1 fails to convert the empty row);
+    the function then counts ``df`` itself."""
+    obs = Observation()
+
+    def count() -> int:
+        try:
+            return obs.get["n"]
+        except Py4JJavaError:
+            return df.count()
+
+    return df.observe(obs, F.count(F.lit(1)).alias("n")), count
+
+
 def _untag(df: DataFrame, *drop: str) -> DataFrame:
     """``df`` without the rows tagged in ``drop`` and without the tag."""
     keep = F.col(_TAG).isNull() | ~F.col(_TAG).isin(*drop)
@@ -110,9 +138,18 @@ def merge_upsert(
     Returns counts {'inserted': n, 'updated': n} like the reference's
     load_dimension result dict (warehouse_loader.py:24-83).
     """
+    return _merge(incoming, path, keys, _open_table(spark, path))
+
+
+def _merge(
+    incoming: DataFrame,
+    path: str,
+    keys: list[str],
+    existing: DataFrame | None,
+) -> dict:
+    """``merge_upsert`` into the table ``existing`` was opened from."""
     incoming = incoming.dropDuplicates(keys)
     merged = incoming.withColumn(_TAG, F.lit("incoming"))
-    existing = _open_table(spark, path)
     if existing is not None:
         # existing rows whose key the batch hits are tagged, counted as
         # updates, then dropped; the rest stay untagged (incoming's keys
@@ -131,11 +168,13 @@ def append_dedup(
     """INSERT ... DO NOTHING twin: append only new keys; returns count
     (reference: warehouse_loader.py:90-143)."""
     incoming = incoming.dropDuplicates(keys)
-    existing = _open_table(spark, path)
+    # only the stored keys are read, typed as the incoming ones
+    key_schema = StructType([incoming.schema[k] for k in keys])
+    existing = _open_table(spark, path, key_schema)
     if existing is None:
-        rows, obs = _observe(incoming.withColumn(_TAG, F.lit("new")), "new")
-        _atomic_swap_write(_untag(rows), path)
-        return obs.get["new"]
+        incoming, n_new = counted(incoming)
+        _atomic_swap_write(incoming, path)
+        return n_new()
     existing_keys = existing.select(*keys).distinct()
     # the anti-join reorders columns key-first; restore the incoming
     # order so every file in the sink carries ONE column order (parquet
@@ -144,9 +183,20 @@ def append_dedup(
     new_rows = incoming.join(existing_keys, keys, "left_anti").select(
         *incoming.columns
     )
-    n = new_rows.count()
+    # The count rides on the write: the new rows land in a temp sibling
+    # and their files move into the table only when there are any, so an
+    # append of nothing leaves the table's files untouched (Spark writes
+    # an empty file for an empty result). A crash between moves leaves
+    # some rows appended; the replay's anti-join appends the rest.
+    new_rows, n_new = counted(new_rows)
+    tmp = f"{os.path.normpath(path)}.__tmp_{uuid.uuid4().hex[:8]}"
+    new_rows.write.parquet(tmp)
+    n = n_new()
     if n:
-        new_rows.write.mode("append").parquet(path)
+        for name in os.listdir(tmp):
+            if name.startswith(("part-", ".part-")):
+                os.rename(os.path.join(tmp, name), os.path.join(path, name))
+    shutil.rmtree(tmp)
     return n
 
 
@@ -227,7 +277,9 @@ def merge_upsert_stable(
     # Materialize: callers read keyed after the merge below has swapped
     # out the table it was keyed against.
     keyed = keyed.localCheckpoint()
-    counts = merge_upsert(spark, keyed, path, business_keys)
+    # the table is not swapped yet, so the merge reuses the frame opened
+    # above instead of listing and inferring its schema again
+    counts = _merge(keyed, path, business_keys, existing)
     return counts, keyed
 
 

@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.sampling import hash_bucket
+from ..sources.sinks import counted
 from ..plans.web_curation import hosted_unblocked
 
 
@@ -83,7 +84,9 @@ def _capped_batch(
     out_dir: str,
     batch_id: int,
     domain_cap: int,
-) -> None:
+) -> int:
+    """Write the batch's capped docs as ``curated/batch=N``; returns the
+    number of docs written, counted by the write itself."""
     data_dir = os.path.join(out_dir, "curated")
     # per-host budget already spent by OTHER batches (own partition
     # excluded so a replay re-decides the whole batch and the
@@ -97,8 +100,11 @@ def _capped_batch(
     # must raise — a zeroed budget would permanently overshoot the cap
     # (the CLAUDE.md persisted-mutable-state rule).
     if _has_committed_batches(data_dir):
+        # every batch=N file holds the batch frame's columns, so the
+        # read takes its schema instead of inferring one
         existing = (
-            spark.read.option("basePath", data_dir)
+            spark.read.schema(batch.schema)
+            .option("basePath", data_dir)
             .parquet(data_dir)
             .filter(F.col("batch") != batch_id)
             .groupBy("host")
@@ -128,9 +134,11 @@ def _capped_batch(
         # orders make directory schema inference nondeterministic)
         .select(*batch.columns)
     )
+    kept, n_kept = counted(kept)
     kept.write.mode("overwrite").parquet(
         os.path.join(data_dir, f"batch={batch_id}")
     )
+    return n_kept()
 
 
 # Public name for pipeline composition: plans/day2_pipeline.py runs the

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_data_warehouse_spark.operators.cluster_index import (
@@ -76,6 +77,52 @@ class TestClusterIndex:
         os.makedirs(os.path.join(path, ".tmp-v000099"))
         assert _state(read_clusters(spark, path)) == before
         assert list_versions(path) == ["v000001"]
+
+    def test_state_keeps_at_most_two_versions(self, spark, tmp_path):
+        """Each commit deletes every version older than the one it
+        replaces; names keep counting up from the highest version."""
+        path = str(tmp_path / "clusters_bounded")
+        days = [BATCH1, BATCH2, BATCH3, [(50, 51)], [(41, 50)], [(60, 61)]]
+        seen = []
+        for day, batch in enumerate(days, start=1):
+            seen += batch
+            update_clusters(_pairs(spark, batch), path)
+            assert len(list_versions(path)) <= 2
+            assert list_versions(path)[-1] == f"v{day:06d}"
+            assert _state(read_clusters(spark, path)) == _cc(spark, seen)
+
+    def test_crash_between_swap_and_delete(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A crash after the pointer swap, before the old versions are
+        deleted, leaves the new mapping readable; the next commit
+        deletes what the crash left."""
+        from etl_data_warehouse_spark.operators import cluster_index
+
+        path = str(tmp_path / "clusters_swap_crash")
+        update_clusters(_pairs(spark, BATCH1), path)
+        update_clusters(_pairs(spark, BATCH2), path)
+
+        real = cluster_index.shutil.rmtree
+
+        def crash(p, *a, **kw):
+            if p.startswith(path):
+                raise OSError("crash before delete")
+            return real(p, *a, **kw)
+
+        with monkeypatch.context() as m:
+            m.setattr(cluster_index.shutil, "rmtree", crash)
+            with pytest.raises(OSError, match="crash before delete"):
+                update_clusters(_pairs(spark, BATCH3), path)
+        assert list_versions(path) == ["v000001", "v000002", "v000003"]
+        cumulative = BATCH1 + BATCH2 + BATCH3
+        assert _state(read_clusters(spark, path)) == _cc(spark, cumulative)
+
+        update_clusters(_pairs(spark, [(70, 71)]), path)
+        assert list_versions(path) == ["v000003", "v000004"]
+        assert _state(read_clusters(spark, path)) == _cc(
+            spark, cumulative + [(70, 71)]
+        )
 
     def test_verdicts_keep_min_id(self, spark, tmp_path):
         path = str(tmp_path / "clusters_verdict")

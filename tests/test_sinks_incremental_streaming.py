@@ -78,6 +78,29 @@ class TestMergeUpsert:
         out = {x["order_id"]: x for x in spark.read.parquet(path).collect()}
         assert out[1]["amount"] == 1.0
 
+    def test_append_of_nothing_leaves_files_unchanged(self, spark, tmp_path):
+        """The count rides on the write; Spark writes an empty file for
+        an empty result, so the sink must not let one into the table."""
+        path = str(tmp_path / "fact_noop")
+        rows = _orders(spark, [(1, 1, 1.0, "X"), (2, 2, 2.0, "Y")])
+        assert append_dedup(spark, rows, path, ["order_id"]) == 2
+
+        def files():
+            return {
+                f: os.stat(os.path.join(path, f)).st_mtime_ns
+                for f in os.listdir(path)
+            }
+
+        before = files()
+        assert append_dedup(spark, rows, path, ["order_id"]) == 0
+        assert files() == before
+        assert os.listdir(tmp_path) == ["fact_noop"]
+        more = _orders(spark, [(2, 2, 9.0, "Z"), (3, 3, 3.0, "W")])
+        assert append_dedup(spark, more, path, ["order_id"]) == 1
+        assert sorted(
+            r["order_id"] for r in spark.read.parquet(path).collect()
+        ) == [1, 2, 3]
+
     def test_partitioned_merge_touches_only_partitions(self, spark, tmp_path):
         path = str(tmp_path / "part_fact")
         df1 = spark.createDataFrame(
@@ -165,6 +188,28 @@ class TestSinkCounts:
         overlap = max(0, min(hi, 1000) - lo)
         assert counts == {"inserted": hi - lo - overlap, "updated": overlap}
         assert n <= 3
+
+
+def test_stable_merge_opens_its_table_once(spark, tmp_path, monkeypatch):
+    """merge_upsert_stable keys and merges against one read of the
+    table: a second open would list it and infer its schema again."""
+    from etl_data_warehouse_spark.sources import sinks
+
+    path = str(tmp_path / "dim")
+    merge_upsert_stable(spark, _kv(spark, _BASE), path, ["v"], "k")
+    opened = []
+
+    def counting(spark, path, schema=None):
+        opened.append(path)
+        return real(spark, path, schema)
+
+    real = sinks._open_table
+    monkeypatch.setattr(sinks, "_open_table", counting)
+    counts, _ = merge_upsert_stable(
+        spark, _kv(spark, [(9, "b"), (9, "z")]), path, ["v"], "k"
+    )
+    assert counts == {"inserted": 1, "updated": 1}
+    assert opened == [path]
 
 
 class TestSwapCrashRecovery:
