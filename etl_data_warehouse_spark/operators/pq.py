@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.sinks import counted
 from .similarity import kmeans_centroids
 
 
@@ -99,7 +100,11 @@ def train_pq_codebooks(
         )
         .localCheckpoint()
     )
-    prev_assign = None
+    # Each round carries the previous code through the map-only
+    # assignment (so the layout, hence the means, is the same as a fresh
+    # assignment of ``sub``) and counts the changed codes on the round's
+    # checkpoint; the first round's previous code is null.
+    assigned = sub.withColumn("code_id", F.lit(None).cast("int"))
     for _ in range(max_iterations):
         cent_row = centroids.groupBy().agg(
             F.collect_list(F.struct("subspace", "code_id", "cv")).alias("cells")
@@ -128,20 +133,16 @@ def train_pq_codebooks(
                 c,
             ).otherwise(acc),
         )
-        assigned = (
-            sub.crossJoin(F.broadcast(cent_row))
-            .select("vec_id", "subspace", "sv", best["code_id"].alias("code_id"))
-            .localCheckpoint()
+        prev = assigned.withColumnRenamed("code_id", "prev")
+        assigned, changed = counted(
+            prev.crossJoin(F.broadcast(cent_row)).select(
+                *prev.columns, best["code_id"].alias("code_id")
+            ),
+            ~F.col("code_id").eqNullSafe(F.col("prev")),
         )
-        if prev_assign is not None:
-            changed = (
-                assigned.select("vec_id", "subspace", "code_id")
-                .exceptAll(prev_assign)
-                .count()
-            )
-            if changed == 0:
-                break
-        prev_assign = assigned.select("vec_id", "subspace", "code_id")
+        assigned = assigned.drop("prev").localCheckpoint()
+        if changed() == 0:
+            break
         means = (
             assigned.select(
                 "subspace", "code_id", F.posexplode("sv").alias("pos", "x")

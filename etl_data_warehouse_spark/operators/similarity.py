@@ -19,6 +19,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from ..sources.sinks import counted
+
 
 def _as_double(col) -> Column:
     c = F.col(col) if isinstance(col, str) else col
@@ -565,9 +567,10 @@ def kmeans_centroids(
     while the Exchange hands each partition its rows in a stable order,
     which Spark does not strictly guarantee; across environments only
     the ulp-level reproducibility above is promised.
-    Stops early when assignments stop changing (one driver-side count
-    per round — inherent to any fixed-point loop; lineage truncated per
-    round via localCheckpoint).
+    Stops early when assignments stop changing: each vector's previous
+    cell rides through the map-only assignment, and an ``Observation``
+    counts the changed ones as the round's localCheckpoint (which
+    truncates lineage) runs, so the convergence test costs no job.
 
     100 TB posture: per round, one broadcast of k·dim doubles and ONE
     shuffle whose key space is k — linear in the corpus, constant in
@@ -601,7 +604,7 @@ def kmeans_centroids(
         )
         .localCheckpoint()
     )
-    def _assign(cents: DataFrame) -> DataFrame:
+    def _assign(rows: DataFrame, cents: DataFrame) -> DataFrame:
         # Map-side argmin via higher-order fold over ONE collected-array
         # centroid row (same no-shuffle trick as rank_cells): strictly
         # equal to orderBy(dist, cell_id) pick-first — argmin distance,
@@ -632,23 +635,23 @@ def kmeans_centroids(
                 c,
             ).otherwise(acc),
         )
-        return v.crossJoin(F.broadcast(cent_row)).select(
-            "vec_id", "vv", best["cell_id"].alias("cell_id")
+        return rows.crossJoin(F.broadcast(cent_row)).select(
+            *rows.columns, best["cell_id"].alias("cell_id")
         )
 
-
-    prev_assign = None
+    # Each round carries the previous cell through the map-only
+    # assignment (so the layout, hence the means, is the same as a fresh
+    # assignment of ``v``) and counts the changed cells on the round's
+    # checkpoint; the first round's previous cell is null.
+    assigned = v.withColumn("cell_id", F.lit(None).cast("int"))
     for _ in range(max_iterations):
-        assigned = _assign(centroids).localCheckpoint()
-        if prev_assign is not None:
-            changed = (
-                assigned.select("vec_id", "cell_id")
-                .exceptAll(prev_assign)
-                .count()
-            )
-            if changed == 0:
-                break
-        prev_assign = assigned.select("vec_id", "cell_id")
+        assigned, changed = counted(
+            _assign(assigned.withColumnRenamed("cell_id", "prev"), centroids),
+            ~F.col("cell_id").eqNullSafe(F.col("prev")),
+        )
+        assigned = assigned.drop("prev").localCheckpoint()
+        if changed() == 0:
+            break
         means = (
             assigned.select(
                 "cell_id", F.posexplode("vv").alias("pos", "x")

@@ -48,7 +48,7 @@ import uuid
 from typing import Callable
 
 from py4j.protocol import Py4JJavaError
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -105,23 +105,27 @@ def _observe(df: DataFrame, *tags: str) -> tuple[DataFrame, Observation]:
     return df.observe(obs, *counts), obs
 
 
-def counted(df: DataFrame) -> tuple[DataFrame, Callable[[], int]]:
-    """``df`` with its row count observed, and a function that returns
-    the count once an action on the returned frame has run: the count
-    rides on a write or checkpoint that runs anyway, with no job of its
-    own. When a shuffle above the observer comes out empty, AQE swaps
-    that part of the plan for an empty relation and the observed
-    metrics never arrive (PySpark 4.1 fails to convert the empty row);
-    the function then counts ``df`` itself."""
+def counted(
+    df: DataFrame, where: Column | None = None
+) -> tuple[DataFrame, Callable[[], int]]:
+    """``df`` with its row count observed (only the rows where ``where``
+    holds, when given), and a function that returns the count once an
+    action on the returned frame has run: the count rides on a write or
+    checkpoint that runs anyway, with no job of its own. When a shuffle
+    above the observer comes out empty, AQE swaps that part of the plan
+    for an empty relation and the observed metrics never arrive (PySpark
+    4.1 fails to convert the empty row); the function then counts ``df``
+    itself."""
     obs = Observation()
+    n = F.count(F.lit(1)) if where is None else F.count_if(where)
 
     def count() -> int:
         try:
             return obs.get["n"]
         except Py4JJavaError:
-            return df.count()
+            return (df if where is None else df.filter(where)).count()
 
-    return df.observe(obs, F.count(F.lit(1)).alias("n")), count
+    return df.observe(obs, n.alias("n")), count
 
 
 def _untag(df: DataFrame, *drop: str) -> DataFrame:

@@ -75,13 +75,13 @@ _FILE_WEIGHTS = {
     "test_pq.py": 81,
     "test_bpe_trainer.py": 50,
     "test_cluster_index.py": 40,
-    "test_web_curation.py": 40,
     "test_containment.py": 30,
     "test_graph.py": 26,
+    "test_web_curation.py": 25,
+    "test_training_shards.py": 16,
     "test_decontamination.py": 14,
     "test_manifest_shards.py": 13,
-    "test_training_shards.py": 12,
-    "test_curation_stream.py": 12,
+    "test_curation_stream.py": 13,
     "test_sketches.py": 11,
 }
 

@@ -701,11 +701,26 @@ DAY2_JOBS = {
     "shard_append": 8,
 }
 
+# Jobs per stage of the fixture's bootstrap day, as measured when the
+# Lloyd loops' convergence counts moved onto their round checkpoints: 94
+# to 95 in all (103 before, 68 of them in semantic_verdicts), with
+# cluster_maintenance at 11 or 12. The same slack as DAY2_JOBS applies.
+BOOT_JOBS = {
+    "curation": 2,
+    "clean_funnel": 6,
+    "minhash_pairs": 6,
+    "semantic_verdicts": 59,
+    "cluster_maintenance": 12,
+    "index_appends": 6,
+    "shard_append": 4,
+}
+
 
 def test_incremental_day_job_budget(spark, tmp_path):
-    """Every job of a day carries its stage's tag, and an incremental
-    day stays within its job budget, in total and per stage: a count()
-    or take(1) that only feeds the audit costs a job per query stage."""
+    """Every job of a day carries its stage's tag, and the bootstrap and
+    an incremental day stay within their job budgets, in total and per
+    stage: a count() or take(1) that only feeds the audit costs a job
+    per query stage."""
     docs, vecs = _corpus(spark)
     d1, d2, v1, v2 = _split_days(docs, vecs)
     state = str(tmp_path / "state")
@@ -717,13 +732,14 @@ def test_incremental_day_job_budget(spark, tmp_path):
     )
     assert None not in boot and None not in day
     assert set(day) <= set(audit["stage_sec"])
-    over = {
-        st: (n, DAY2_JOBS.get(st, 0))
-        for st, n in day.items()
-        if n > DAY2_JOBS.get(st, 0) + 1
-    }
-    assert not over, f"stages over budget (jobs, measured): {over}"
-    assert sum(day.values()) <= sum(DAY2_JOBS.values()) + 3
+    for jobs, budget in ((boot, BOOT_JOBS), (day, DAY2_JOBS)):
+        over = {
+            st: (n, budget.get(st, 0))
+            for st, n in jobs.items()
+            if n > budget.get(st, 0) + 1
+        }
+        assert not over, f"stages over budget (jobs, measured): {over}"
+        assert sum(jobs.values()) <= sum(budget.values()) + 3
 
 
 class TestShardCompaction:
